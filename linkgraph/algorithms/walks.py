@@ -56,12 +56,7 @@ from ..graph import choose_partitions, vertices_from_edges
 from ..metrics import SuperstepMetrics
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
 from ..phash import md5_int_sql as _md5_int_sql
-from ..superstep import (
-    LoopResult,
-    iteration_conf,
-    local_checkpoint_fresh_stats,
-    release_local_checkpoint,
-)
+from ..superstep import LoopResult, iteration_conf, local_checkpoint_fresh_stats
 
 
 def _walk_arg(walk_id_sql: str, k: int, seed: int) -> str:
@@ -297,15 +292,14 @@ def random_walks(
             stats = SuperstepMetrics(superstep=k)
             stats.rows = int(row["rows"])
             stats.changed = int(row["changed"] or 0)
+            stats.wall_sec = time.monotonic() - t0
             if ckpt is not None and ckpt.should_checkpoint(k):
-                committed_df = ckpt.save(k, new_state, stats)
-                release_local_checkpoint(new_state)
-                new_state = committed_df
+                # write-only: the frame stays the corpus frame
+                ckpt.save(k, new_state, stats)
             # the superseded state is a RETAINED corpus frame — do NOT
             # release it; the final union reads it back
             frames.append((k, new_state))
             state = new_state
-            stats.wall_sec = time.monotonic() - t0
             history.append(stats)
             if stats.changed == 0:
                 converged = True
@@ -501,13 +495,11 @@ def node2vec_walks(
             stats = SuperstepMetrics(superstep=k)
             stats.rows = int(row["rows"])
             stats.changed = int(row["changed"] or 0)
+            stats.wall_sec = time.monotonic() - t0
             if ckpt is not None and ckpt.should_checkpoint(k):
-                committed_df = ckpt.save(k, new_state, stats)
-                release_local_checkpoint(new_state)
-                new_state = committed_df
+                ckpt.save(k, new_state, stats)
             frames.append((k, new_state))
             state = new_state
-            stats.wall_sec = time.monotonic() - t0
             history.append(stats)
             if stats.changed == 0:
                 converged = True

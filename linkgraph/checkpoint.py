@@ -17,6 +17,16 @@ once its meta record exists, so a crash mid-write never yields a
 half-readable snapshot (rename-free, same idea as Iceberg's
 metadata-pointer commit).
 
+Saving is write-only and, like the reference's, a side output of the
+iteration: the loop hands over its already-``localCheckpoint``ed state
+frame and keeps iterating on that same frame, so a checkpointed
+superstep runs the uncheckpointed plan. ``superstep.iterate`` runs
+each save on one background thread (:class:`SnapshotWriter`) while the
+next superstep computes, with at most one save in flight. Durability
+contract: every committed superstep is complete, and a crash loses at
+most the supersteps since the last commit plus the one snapshot still
+being written.
+
 Iceberg mode (north_rule names Iceberg as the checkpoint format): pass
 ``table="catalog.db.name"`` and, when the session has that catalog
 configured AND its implementation class on the classpath
@@ -32,9 +42,11 @@ skips; the parquet layout is the default either way.
 
 from __future__ import annotations
 
-import json
+import copy
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from .metrics import SuperstepMetrics, partition_histogram, skew_from_histogram
@@ -94,15 +106,19 @@ class CheckpointManager:
     def should_checkpoint(self, superstep: int) -> bool:
         return superstep % self.every == 0
 
-    def save(self, superstep: int, state: DataFrame, metrics: SuperstepMetrics) -> DataFrame:
-        """Write the vertex-state snapshot + commit its meta record.
+    def save(self, superstep: int, state: DataFrame, metrics: SuperstepMetrics) -> None:
+        """Write the vertex-state snapshot, then commit its meta record.
 
-        Returns the reloaded DataFrame (reading back from the snapshot
-        truncates the logical-plan lineage, which otherwise grows one
-        join+agg per superstep).
+        Write-only: ``state`` is the loop's already-``localCheckpoint``ed
+        frame, which stays the loop state (nothing is read back), and
+        ``rows_per_partition`` is that in-memory frame's histogram —
+        one write job plus one histogram job. Fills
+        ``metrics.rows_per_partition`` (and a missing skew ratio) before
+        serializing it. The superstep is committed, and resumable, once
+        this returns; see the module docstring for what a crash loses.
         """
-        reloaded = self._write_snapshot(superstep, state)
-        metrics.rows_per_partition = partition_histogram(reloaded)
+        self._write_snapshot(superstep, state)
+        metrics.rows_per_partition = partition_histogram(state)
         # backfill skew from the snapshot's own histogram when the loop
         # didn't sample it this superstep — checkpoint lineage always
         # carries a skew ratio even though the in-loop metric is sampled
@@ -114,7 +130,6 @@ class CheckpointManager:
         os.replace(tmp, self._meta_path(superstep))  # atomic commit
         if self.keep:
             self._gc(superstep)
-        return reloaded
 
     # -- read / resume --------------------------------------------------
     def committed_supersteps(self) -> list[int]:
@@ -145,7 +160,7 @@ class CheckpointManager:
         return out
 
     # -- internals -------------------------------------------------------
-    def _write_snapshot(self, superstep: int, state: DataFrame) -> DataFrame:
+    def _write_snapshot(self, superstep: int, state: DataFrame) -> None:
         from pyspark.sql import functions as F
 
         if self.table is not None:
@@ -157,10 +172,8 @@ class CheckpointManager:
                 writer.append()
             else:
                 writer.partitionedBy(F.col("_superstep")).create()
-            return self._read_snapshot(superstep)
-        data_dir = self._data_dir(superstep)
-        state.write.mode("overwrite").parquet(data_dir)
-        return self.spark.read.parquet(data_dir)
+            return
+        state.write.mode("overwrite").parquet(self._data_dir(superstep))
 
     def _read_snapshot(self, superstep: int) -> DataFrame:
         from pyspark.sql import functions as F
@@ -194,3 +207,54 @@ class CheckpointManager:
                     os.remove(self._meta_path(k))
                 except OSError:
                     pass
+
+
+class SnapshotWriter:
+    """Runs :meth:`CheckpointManager.save` on one background thread so a
+    snapshot's write overlaps the next superstep.
+
+    At most one save is in flight: :meth:`submit` first joins the
+    previous one, and the loop calls :meth:`join` before it releases a
+    frame a save may still be reading. Leaving the ``with`` block joins
+    the last save and stops the thread; a failed save re-raises there
+    (or at the next join), unless the block is already unwinding from
+    its own error, which then carries the save's as a note. The thread
+    inherits the caller's job group, description and tags, so the write
+    jobs are attributed to the call that made them.
+    """
+
+    def __init__(self, ckpt: CheckpointManager | None, spark: SparkSession):
+        self._ckpt = ckpt
+        self._spark = spark
+        self._pool: ThreadPoolExecutor | None = None
+        self._pending = None
+
+    def submit(self, superstep: int, state: DataFrame, metrics: SuperstepMetrics) -> None:
+        self.join()
+        if self._pool is None:
+            self._pool = ThreadPoolExecutor(1, thread_name_prefix="linkgraph-checkpoint")
+        # wrapped per submit: the local properties are captured here, on
+        # the caller's thread. The metrics are copied so the record
+        # written is the one handed over, not the loop's live object.
+        save = inheritable_thread_target(self._spark)(self._ckpt.save)
+        self._pending = self._pool.submit(save, superstep, state, copy.deepcopy(metrics))
+
+    def join(self) -> None:
+        pending, self._pending = self._pending, None
+        if pending is not None:
+            pending.result()
+
+    def __enter__(self) -> "SnapshotWriter":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        try:
+            self.join()
+        except Exception as err:
+            if exc is None:
+                raise
+            exc.add_note(f"checkpoint save in flight also failed: {err!r}")
+        finally:
+            if self._pool is not None:
+                self._pool.shutdown(wait=True)
+                self._pool = None

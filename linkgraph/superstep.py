@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .checkpoint import CheckpointManager
+from .checkpoint import CheckpointManager, SnapshotWriter
 from .metrics import SuperstepMetrics, partition_histogram, skew_from_histogram
 
 
@@ -76,10 +76,6 @@ def iteration_conf(spark, num_partitions: int | None = None):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", before_aqe)
         spark.conf.set("spark.sql.shuffle.partitions", before_sp)
-
-
-# Backwards-compatible alias (adjacency builds predating iteration_conf).
-aqe_disabled = iteration_conf
 
 
 @dataclass
@@ -130,6 +126,12 @@ def release_local_checkpoint(df: DataFrame) -> None:
         # defensive: reaches through py4j internals; worst case the
         # snapshot lingers until driver GC, as before
         pass
+
+
+def _release(df: DataFrame) -> None:
+    """Drop a loop state frame from storage, whichever way it is held."""
+    df.unpersist()
+    release_local_checkpoint(df)
 
 
 def local_checkpoint_fresh_stats(
@@ -201,10 +203,23 @@ def iterate(
 ) -> LoopResult:
     """Run supersteps until ``converged(stats)`` or ``max_supersteps``.
 
-    With a CheckpointManager, each committed superstep snapshot both
-    truncates lineage and enables resume: if the checkpoint directory
-    already holds committed supersteps (and ``resume``), iteration
-    restarts from the latest snapshot instead of superstep 1.
+    With a CheckpointManager, each ``ckpt.every``-th superstep's state is
+    written as a durable snapshot while the loop goes on: the save runs
+    on one background thread (:class:`~.checkpoint.SnapshotWriter`) and
+    overlaps the next superstep, and the loop keeps the in-memory
+    ``localCheckpoint``ed frame as its state, so a checkpointed
+    superstep runs the uncheckpointed plan. At most one save is in
+    flight; it is joined before the next save, before the frame it
+    writes is released, and before this function returns or raises
+    (a failed save raises here). A crash loses at most that one
+    uncommitted snapshot beyond the usual supersteps since the last
+    commit. The committed ``_meta`` records (``ckpt.history()``) carry
+    the per-partition histogram; ``LoopResult.history`` does not.
+
+    If the checkpoint directory already holds committed supersteps (and
+    ``resume``), iteration restarts from the latest snapshot instead of
+    superstep 1: the snapshot is read once and hash-partitioned on
+    ``id`` once, so resumed supersteps run the same plan as well.
 
     Message metrics: when the new state carries a transient ``_msgs``
     column (per-vertex received-message count), its sum rides the same
@@ -229,113 +244,126 @@ def iterate(
         if ckpt is not None and resume:
             latest = ckpt.latest()
             if latest is not None:
-                state, last = ckpt.load(latest)
+                loaded, last = ckpt.load(latest)
                 history = ckpt.history()
                 if converged(last):
-                    return LoopResult(state, latest, history, True)
+                    return LoopResult(loaded, latest, history, True)
                 start_k = latest + 1
+                # parquet carries no partitioning: shuffle it back onto
+                # hashpartitioning(id, p) once (iteration_conf pinned
+                # the shuffle partitions to p) instead of every superstep
+                state = local_checkpoint_fresh_stats(loaded.repartition("id"))
+        if start_k == 1:
+            state = state.persist(storage_level)
 
-        state = state.persist(storage_level)
+        new_state = None
         done = False
         k = start_k - 1
-        for k in range(start_k, max_supersteps + 1):
-            t0 = time.monotonic()
-            res = superstep_fn(state, k)
-            # Convergence stats ride the materialization job as observed
-            # metrics (no separate pass over the state) — the Spark
-            # rendition of the reference's always-on global aggregators
-            # computed inside the superstep dataflow
-            # (FinalAggregateOperatorDescriptor, SURVEY.md §3.4).
-            cols = set(res.state.columns)
-            obs = Observation(f"superstep-{k}")
-            agg_exprs = [F.count(F.lit(1)).alias("rows")]
-            if "_delta" in cols:
-                agg_exprs.append(F.sum("_delta").alias("delta"))
-            if "_changed" in cols:
-                agg_exprs.append(F.sum(F.col("_changed").cast("long")).alias("changed"))
-            if "_msgs" in cols:
-                agg_exprs.append(F.sum(F.col("_msgs").cast("long")).alias("messages"))
-            # user global aggregates over the new vertex state — the
-            # reference's per-superstep GlobalAggregator, computed inside
-            # the same job (GlobalAggregator.java:42-78,
-            # FinalAggregateOperatorDescriptor.java:47-139)
-            if global_aggs:
-                for name, expr in global_aggs.items():
-                    agg_exprs.append(expr.alias(f"_ga_{name}"))
-            # localCheckpoint (eager) both caches the new state AND
-            # truncates its logical plan — without this, every
-            # superstep's plan embeds all previous supersteps and the
-            # driver OOMs after ~10 iterations. Durable fault tolerance
-            # comes from the CheckpointManager below; this is the
-            # in-memory lineage cut. (AQE must stay off here or the
-            # checkpointed frame loses its partitioning — see above.)
-            # transient stat columns are dropped BEFORE materialization —
-            # the observe node sits below the projection so the metrics
-            # still fire, and the cached state carries only real columns.
-            # Stats are RESET as well: a superstep whose message frame
-            # self-joins state-derived frames (Luby MIS, coloring)
-            # multiplies the carried sizeInBytes each superstep, so its
-            # bit length grows geometrically with loop depth — harmless
-            # for tens of supersteps, unbounded BigInteger arithmetic in
-            # every later plan at O(log n)-round scale. The estimate is
-            # a useless overestimate after ~2 supersteps anyway (2^544
-            # "bytes" measured at superstep 40), so nothing downstream
-            # loses a broadcast it would actually have gotten.
-            new_state = local_checkpoint_fresh_stats(
-                res.state.observe(obs, *agg_exprs).drop(
-                    "_delta", "_changed", "_msgs"
-                )
-            )
+        try:
+            with SnapshotWriter(ckpt, spark) as writer:
+                for k in range(start_k, max_supersteps + 1):
+                    t0 = time.monotonic()
+                    res = superstep_fn(state, k)
+                    # Convergence stats ride the materialization job as observed
+                    # metrics (no separate pass over the state) — the Spark
+                    # rendition of the reference's always-on global aggregators
+                    # computed inside the superstep dataflow
+                    # (FinalAggregateOperatorDescriptor, SURVEY.md §3.4).
+                    cols = set(res.state.columns)
+                    obs = Observation(f"superstep-{k}")
+                    agg_exprs = [F.count(F.lit(1)).alias("rows")]
+                    if "_delta" in cols:
+                        agg_exprs.append(F.sum("_delta").alias("delta"))
+                    if "_changed" in cols:
+                        agg_exprs.append(
+                            F.sum(F.col("_changed").cast("long")).alias("changed")
+                        )
+                    if "_msgs" in cols:
+                        agg_exprs.append(
+                            F.sum(F.col("_msgs").cast("long")).alias("messages")
+                        )
+                    # user global aggregates over the new vertex state — the
+                    # reference's per-superstep GlobalAggregator, computed inside
+                    # the same job (GlobalAggregator.java:42-78,
+                    # FinalAggregateOperatorDescriptor.java:47-139)
+                    if global_aggs:
+                        for name, expr in global_aggs.items():
+                            agg_exprs.append(expr.alias(f"_ga_{name}"))
+                    # localCheckpoint (eager) both caches the new state AND
+                    # truncates its logical plan — without this, every
+                    # superstep's plan embeds all previous supersteps and the
+                    # driver OOMs after ~10 iterations. Durable fault tolerance
+                    # comes from the CheckpointManager below; this is the
+                    # in-memory lineage cut. (AQE must stay off here or the
+                    # checkpointed frame loses its partitioning — see above.)
+                    # transient stat columns are dropped BEFORE materialization —
+                    # the observe node sits below the projection so the metrics
+                    # still fire, and the cached state carries only real columns.
+                    # Stats are RESET as well: a superstep whose message frame
+                    # self-joins state-derived frames (Luby MIS, coloring)
+                    # multiplies the carried sizeInBytes each superstep, so its
+                    # bit length grows geometrically with loop depth — harmless
+                    # for tens of supersteps, unbounded BigInteger arithmetic in
+                    # every later plan at O(log n)-round scale. The estimate is
+                    # a useless overestimate after ~2 supersteps anyway (2^544
+                    # "bytes" measured at superstep 40), so nothing downstream
+                    # loses a broadcast it would actually have gotten.
+                    new_state = local_checkpoint_fresh_stats(
+                        res.state.observe(obs, *agg_exprs).drop(
+                            "_delta", "_changed", "_msgs"
+                        )
+                    )
 
-            stats = SuperstepMetrics(superstep=k)
-            row = obs.get
-            stats.rows = int(row["rows"])
-            if "_delta" in cols:
-                stats.delta = float(row["delta"] or 0.0)
-            if "_changed" in cols:
-                stats.changed = int(row["changed"] or 0)
-            if global_aggs:
-                stats.extras = {
-                    name: row[f"_ga_{name}"] for name in global_aggs
-                }
+                    stats = SuperstepMetrics(superstep=k)
+                    row = obs.get
+                    stats.rows = int(row["rows"])
+                    if "_delta" in cols:
+                        stats.delta = float(row["delta"] or 0.0)
+                    if "_changed" in cols:
+                        stats.changed = int(row["changed"] or 0)
+                    if global_aggs:
+                        stats.extras = {
+                            name: row[f"_ga_{name}"] for name in global_aggs
+                        }
 
-            if track_messages:
-                sample_skew = (
-                    skew_sample_every > 0
-                    and res.messages is not None
-                    and k % skew_sample_every == 0
-                )
-                if "_msgs" in cols:
-                    # free: the count rode the materialization job above
-                    stats.messages = int(row["messages"] or 0)
-                    if sample_skew:
-                        hist = partition_histogram(res.messages)
-                        stats.skew_ratio = skew_from_histogram(hist)
-                elif res.messages is not None:
-                    # legacy path (superstep_fn without a _msgs column):
-                    # one extra job for the count, skew still sampled
-                    msgs = res.messages.persist(storage_level)
-                    stats.messages = msgs.count()
-                    if sample_skew:
-                        hist = partition_histogram(msgs)
-                        stats.skew_ratio = skew_from_histogram(hist)
-                    msgs.unpersist()
+                    if track_messages:
+                        sample_skew = (
+                            skew_sample_every > 0
+                            and res.messages is not None
+                            and k % skew_sample_every == 0
+                        )
+                        if "_msgs" in cols:
+                            # free: the count rode the materialization job above
+                            stats.messages = int(row["messages"] or 0)
+                            if sample_skew:
+                                hist = partition_histogram(res.messages)
+                                stats.skew_ratio = skew_from_histogram(hist)
+                        elif res.messages is not None:
+                            # legacy path (superstep_fn without a _msgs column):
+                            # one extra job for the count, skew still sampled
+                            msgs = res.messages.persist(storage_level)
+                            stats.messages = msgs.count()
+                            if sample_skew:
+                                hist = partition_histogram(msgs)
+                                stats.skew_ratio = skew_from_histogram(hist)
+                            msgs.unpersist()
 
-            if ckpt is not None and ckpt.should_checkpoint(k):
-                committed = ckpt.save(k, new_state, stats)
-                # the committed parquet replaces the in-memory snapshot
-                release_local_checkpoint(new_state)
-                next_state = committed.persist(storage_level)
-            else:
-                next_state = new_state
-
-            state.unpersist()
-            release_local_checkpoint(state)
-            state = next_state
-            stats.wall_sec = time.monotonic() - t0
-            history.append(stats)
-            if converged(stats):
-                done = True
-                break
+                    # the snapshot in flight reads `state`: finish it first
+                    writer.join()
+                    _release(state)
+                    state, new_state = new_state, None
+                    stats.wall_sec = time.monotonic() - t0
+                    if ckpt is not None and ckpt.should_checkpoint(k):
+                        writer.submit(k, state, stats)
+                    history.append(stats)
+                    if converged(stats):
+                        done = True
+                        break
+        except BaseException:
+            # the writer has joined on the way out; free what the loop holds
+            _release(state)
+            if new_state is not None:
+                _release(new_state)
+            raise
 
         return LoopResult(state, k, history, done)

@@ -3,11 +3,14 @@
 resume, identical result)."""
 
 import hashlib
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
 from linkgraph import CheckpointManager, derive_files, derive_graph, pagerank
+from linkgraph.graph import vertices_from_edges
+from linkgraph.superstep import StepResult, iterate
 from linkgraph.synth import synth_code_files, synth_code_files_rows
 
 
@@ -93,6 +96,7 @@ class TestCheckpointResume:
             assert m.delta is not None
             assert m.rows_per_partition and sum(m.rows_per_partition.values()) == m.rows
             assert m.skew_ratio >= 1.0
+            assert m.wall_sec > 0
 
     def test_checkpoint_every_k(self, spark, graph, tmp_path):
         _, edges = graph
@@ -114,3 +118,88 @@ class TestCheckpointResume:
         n_committed = len(ck.committed_supersteps())
         _, res2 = pagerank(edges, tol=1e-4, ckpt=CheckpointManager(spark, str(tmp_path / "c")))
         assert res2.converged and len(ck.committed_supersteps()) == n_committed
+
+
+def _in_degree_loop(edges, ck, max_supersteps):
+    """A minimal checkpointed loop: each superstep marks the vertices
+    that received a message."""
+
+    def step(state, k):
+        msgs = (
+            edges.join(state, edges["src"] == state["id"])
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.count(F.lit(1)).alias("m"))
+        )
+        new = state.join(msgs, "id", "left_outer").select(
+            "id", F.col("m").isNotNull().cast("long").alias("_msgs")
+        )
+        return StepResult(state=new, messages=msgs)
+
+    return iterate(
+        vertices_from_edges(edges).select("id"),
+        step,
+        converged=lambda s: False,
+        max_supersteps=max_supersteps,
+        ckpt=ck,
+        num_partitions=2,
+    )
+
+
+class TestBackgroundSave:
+    """iterate writes each snapshot on a background thread while the next
+    superstep runs; a failed write must still surface, commit nothing
+    and leave no thread or cached state behind."""
+
+    # 4: the failure surfaces at superstep 3's join; 2: at the loop's exit
+    @pytest.mark.parametrize("max_supersteps", [2, 4])
+    def test_failed_write_raises_and_cleans_up(
+        self, spark, webmap_edges, tmp_path, max_supersteps
+    ):
+        webmap_edges.count()  # cached before the persistent-RDD baseline
+        ck = CheckpointManager(spark, str(tmp_path / "ck"), every=1)
+        write = ck._write_snapshot
+
+        def failing_write(superstep, state):
+            if superstep == 2:
+                raise RuntimeError("injected snapshot write failure")
+            write(superstep, state)
+
+        ck._write_snapshot = failing_write
+        jsc = spark.sparkContext._jsc
+        cached_before = set(jsc.getPersistentRDDs().keys())
+
+        with pytest.raises(RuntimeError, match="injected snapshot write failure"):
+            _in_degree_loop(webmap_edges, ck, max_supersteps)
+
+        assert ck.committed_supersteps() == [1]
+        assert not (tmp_path / "ck" / "_meta" / "2.json").exists()
+        assert not [
+            t for t in threading.enumerate() if t.name.startswith("linkgraph-checkpoint")
+        ]
+        assert set(jsc.getPersistentRDDs().keys()) <= cached_before
+
+    def test_write_job_runs_under_callers_job_group(self, spark, webmap_edges, tmp_path):
+        ckdir = tmp_path / "grp"
+        group = "background-save-job-group"
+        ck = CheckpointManager(spark, str(ckdir), every=1)
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            _in_degree_loop(webmap_edges, ck, 2)
+        finally:
+            spark.sparkContext.setJobGroup("", "")
+        assert ck.committed_supersteps() == [1, 2]
+
+        store = spark._jsparkSession.sharedState().statusStore()
+        execs = store.executionsList()
+        write_jobs = set()
+        for i in range(execs.size()):
+            ex = execs.apply(i)
+            plan = ex.physicalPlanDescription()
+            if "InsertIntoHadoopFsRelationCommand" in plan and str(ckdir) in plan:
+                assert ex.description() == group
+                it = ex.jobs().keysIterator()
+                while it.hasNext():
+                    write_jobs.add(it.next())
+        assert write_jobs
+        group_jobs = set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+        assert write_jobs <= group_jobs

@@ -15,6 +15,9 @@ each execution is one scan of the data. Executions are attributed via
 the job description that setJobGroup installs.
 """
 
+import importlib
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -28,15 +31,25 @@ def _sql_executions(spark, group):
     )
 
 
-def _execs_in(spark, group, fn):
-    """Run fn under a job group; return (result, n_sql_executions)."""
+def _in_group(spark, group, fn):
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        out = fn()
+        return fn()
     finally:
         sc.setJobGroup("", "")
+
+
+def _execs_in(spark, group, fn):
+    """Run fn under a job group; return (result, n_sql_executions)."""
+    out = _in_group(spark, group, fn)
     return out, _sql_executions(spark, group)
+
+
+def _jobs_in(spark, group, fn):
+    """Run fn under a job group; return (result, n_spark_jobs)."""
+    out = _in_group(spark, group, fn)
+    return out, len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
 
 def test_pagerank_superstep_is_one_pass(spark, webmap_edges):
@@ -125,3 +138,60 @@ def test_skew_sampled_when_configured(spark, webmap_edges):
     assert ratios[0] is None and ratios[2] is None
     assert ratios[1] is not None and ratios[3] is not None
     assert all(m.messages is not None for m in res.history)
+
+
+def _record_plan_shapes(monkeypatch, module_name):
+    """Patch ``iterate`` as seen by an algorithm module so every superstep
+    records its state plan's (Exchange, BroadcastExchange) counts."""
+    module = importlib.import_module(module_name)
+    iterate = module.iterate
+    shapes = []
+
+    def recording_iterate(init, superstep_fn, *args, **kwargs):
+        def step(state, k):
+            res = superstep_fn(state, k)
+            plan = res.state._jdf.queryExecution().executedPlan().toString()
+            shapes.append(
+                (len(re.findall(r"\bExchange\b", plan)), plan.count("BroadcastExchange"))
+            )
+            return res
+
+        return iterate(init, step, *args, **kwargs)
+
+    monkeypatch.setattr(module, "iterate", recording_iterate)
+    return shapes
+
+
+@pytest.mark.parametrize("algo", ["pagerank", "cc"])
+def test_checkpoint_keeps_superstep_plan(spark, webmap_edges, tmp_path, monkeypatch, algo):
+    """A durable checkpoint is a side output of the loop: under
+    CheckpointManager(every=1) every superstep plans the same exchanges
+    as without one (no re-shuffle or broadcast of a re-read state), and
+    each save costs exactly its own two jobs — the parquet write and the
+    partition histogram, both under the caller's job group."""
+    from linkgraph import CheckpointManager, connected_components, pagerank
+
+    if algo == "pagerank":
+        module = "linkgraph.algorithms.pagerank"
+
+        def run(ck):
+            return pagerank(webmap_edges, fixed_updates=4, num_partitions=2, ckpt=ck)
+    else:
+        module = "linkgraph.algorithms.cc"
+
+        def run(ck):
+            return connected_components(webmap_edges, num_partitions=2, ckpt=ck)
+
+    webmap_edges.count()  # warm the edge cache outside the measured groups
+    shapes = _record_plan_shapes(monkeypatch, module)
+    (_, plain), plain_jobs = _jobs_in(spark, f"{algo}-no-ckpt", lambda: run(None))
+    plain_shapes = list(shapes)
+    shapes.clear()
+    ck = CheckpointManager(spark, str(tmp_path / algo), every=1)
+    (_, res), ckpt_jobs = _jobs_in(spark, f"{algo}-ckpt-every-1", lambda: run(ck))
+
+    assert res.supersteps == plain.supersteps >= 3
+    assert shapes == plain_shapes
+    saves = len(ck.committed_supersteps())
+    assert saves == res.supersteps
+    assert ckpt_jobs - plain_jobs == 2 * saves, (plain_jobs, ckpt_jobs)
