@@ -382,31 +382,35 @@ def _q_sssp(spark, sf):
 
 def _q_sssp_vp(spark, sf):
     """SSSP via the declarative VertexProgram public API (the user
-    compute() surface) — same contract as _q_sssp, so it shares the
+    compute() surface): ``sssp_program`` run directly by
+    ``run_vertex_program`` — same contract as _q_sssp, so it shares the
     hop-bounded recursive-CTE oracle."""
-    from linkgraph import shortest_paths_vp
+    from linkgraph import run_vertex_program, sssp_program
 
-    edges = document_edges(spark, sf)
-    dist, _ = shortest_paths_vp(
+    edges = document_edges(spark, sf).withColumn("_w1", F.lit(1.0))
+    state, _ = run_vertex_program(
         edges,
-        source=0,
+        sssp_program(0),
         vertices=document_vertices(spark, sf),
         max_supersteps=SSSP_HOPS,
     )
-    return dist
+    return state.select(
+        "id",
+        F.when(F.col("value") == float("inf"), F.lit(None))
+        .otherwise(F.col("value"))
+        .alias("distance"),
+    )
 
 
 def _q_sssp_weighted(spark, sf):
-    """Weighted SSSP through the public VertexProgram weight_col path
+    """Weighted SSSP through the VertexProgram weight_col path
     (row-per-edge scatter): weight = 1 + (src+dst) % 5, derivable in
     SQL, so the full weighted delta-plan relaxation is oracle-gated by
     an unrolled Bellman-Ford CTE."""
-    from linkgraph import shortest_paths_vp
-
     edges = document_edges(spark, sf).withColumn(
         "w", (F.lit(1) + (F.col("src") + F.col("dst")) % 5).cast("double")
     )
-    dist, res = shortest_paths_vp(
+    dist, res = shortest_paths(
         edges,
         source=0,
         weight_col="w",

@@ -18,7 +18,7 @@ from .anf import (
 from .ktruss import ktruss
 from .triangles import clustering_coefficients, transitivity, triangle_counts, triangle_total
 from .scc import strongly_connected_components  # noqa: F401
-from .sssp import shortest_paths
+from .sssp import shortest_paths, sssp_program
 from .reachability import reachability
 from .mis import maximal_independent_set
 from .matching import maximal_matching
@@ -103,6 +103,7 @@ __all__ = [
     "triangle_counts",
     "triangle_total",
     "shortest_paths",
+    "sssp_program",
     "strongly_connected_components",
     "reachability",
 ]

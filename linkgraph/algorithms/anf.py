@@ -39,7 +39,6 @@ import time
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..graph import choose_partitions, vertices_from_edges
 from ..metrics import SuperstepMetrics
 from ..partitioning import build_adjacency, symmetrize
 from ..phash import md5_digits_spark_sql
@@ -47,6 +46,7 @@ from ..superstep import (
     LoopResult,
     local_checkpoint_fresh_stats,
     iteration_conf,
+    loop_scope,
     release_local_checkpoint,
 )
 
@@ -117,15 +117,11 @@ def neighborhood_function(
     K = num_maps
     spark = edges.sparkSession
     scale = 2 if symmetrize_edges else 1
-    p = choose_partitions(edges, lambda: scale * edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
-
     e = symmetrize(edges) if symmetrize_edges else edges.select("src", "dst")
-    with iteration_conf(spark, p):
-        adj = build_adjacency(e, num_partitions=p).persist()
-        adj.count()
+    with loop_scope(edges, num_partitions, scale) as scope, iteration_conf(spark, scope.p):
+        p = scope.p
+        verts = scope.vertices(vertices)
+        adj = scope.cache(build_adjacency(e, num_partitions=p))
 
         s_cols = [f"s{i}" for i in range(K)]
         init = verts.selectExpr(
@@ -210,7 +206,6 @@ def neighborhood_function(
         else:
             converged = history[-1].changed == 0 if history else True
 
-    adj.unpersist()
     out = spark.createDataFrame(
         rows_out, "h BIGINT, sum_rank BIGINT, n_reachable_est DOUBLE"
     )
@@ -323,16 +318,12 @@ def _ball_delta_loop(
     K = num_maps
     spark = edges.sparkSession
     scale = 2 if symmetrize_edges else 1
-    p = choose_partitions(edges, lambda: scale * edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
     accs = list(acc_weights)
-
     e = symmetrize(edges) if symmetrize_edges else edges.select("src", "dst")
-    with iteration_conf(spark, p):
-        adj = build_adjacency(e, num_partitions=p).persist()
-        adj.count()
+    with loop_scope(edges, num_partitions, scale) as scope, iteration_conf(spark, scope.p):
+        p = scope.p
+        verts = scope.vertices(vertices)
+        adj = scope.cache(build_adjacency(e, num_partitions=p))
 
         s_cols = [f"s{i}" for i in range(K)]
         rank_sum = " + ".join(f"({_rank_sql(c)})" for c in s_cols)
@@ -427,7 +418,6 @@ def _ball_delta_loop(
         else:
             converged = True
 
-    adj.unpersist()
     return state, LoopResult(state, supersteps, history, converged)
 
 

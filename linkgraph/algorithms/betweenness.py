@@ -52,13 +52,13 @@ import time
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..graph import choose_partitions
 from ..metrics import SuperstepMetrics
 from ..partitioning import symmetrize
 from ..superstep import (
     LoopResult,
     local_checkpoint_fresh_stats,
     iteration_conf,
+    loop_scope,
     release_local_checkpoint,
 )
 
@@ -93,7 +93,6 @@ def betweenness_centrality(
         raise ValueError("sources must be non-empty")
     spark = edges.sparkSession
     scale = 2 if symmetrize_edges else 1
-    p = choose_partitions(edges, lambda: scale * edges.count(), num_partitions)
     e = (
         symmetrize(edges)
         if symmetrize_edges
@@ -101,9 +100,9 @@ def betweenness_centrality(
     )
 
     history: list[SuperstepMetrics] = []
-    with iteration_conf(spark, p):
-        adj = e.repartition(p, "src").persist()
-        adj.count()
+    with loop_scope(edges, num_partitions, scale) as scope, iteration_conf(spark, scope.p):
+        p = scope.p
+        adj = scope.cache(e.repartition(p, "src"))
 
         src_df = spark.createDataFrame([(int(s),) for s in sources], "s long")
         dag = (
@@ -230,6 +229,5 @@ def betweenness_centrality(
             f"CAST(bc AS DOUBLE) / {UNIT}.0 AS betweenness_est",
         )
 
-    adj.unpersist()
     supersteps = len(history)
     return out, LoopResult(out, supersteps, history, converged)

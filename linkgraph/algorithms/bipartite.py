@@ -39,9 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..graph import choose_partitions, vertices_from_edges
 from ..partitioning import build_adjacency, symmetrize
-from ..superstep import LoopResult, StepResult, iterate, iteration_conf
+from ..superstep import LoopResult, StepResult, iterate, loop_scope
 from .cc import connected_components
 
 
@@ -61,68 +60,63 @@ def bipartite_check(
     ``LoopResult`` covers the parity loop; its ``supersteps`` adds the
     CC phase's count so the total reflects both fixpoints.
     """
-    p = choose_partitions(edges, lambda: 2 * edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
+    with loop_scope(edges, num_partitions, scale=2) as scope:
+        p = scope.p
+        comp, res_cc = connected_components(
+            edges, vertices=vertices, num_partitions=p, chunk_size=chunk_size,
+            max_supersteps=max_supersteps,
+        )
 
-    comp, res_cc = connected_components(
-        edges, vertices=vertices, num_partitions=p, chunk_size=chunk_size,
-        max_supersteps=max_supersteps,
-    )
+        adj = scope.cache(
+            build_adjacency(symmetrize(edges), num_partitions=p, chunk_size=chunk_size)
+        )
 
-    with iteration_conf(edges.sparkSession, p):
-        adj = build_adjacency(
-            symmetrize(edges), num_partitions=p, chunk_size=chunk_size
-        ).persist()
-        adj.count()
+        init = comp.select(
+            "id",
+            "component",
+            F.when(F.col("id") == F.col("component"), F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("mask"),
+            (F.col("id") == F.col("component")).alias("changed"),
+        ).repartition(p, "id")
 
-    init = comp.select(
-        "id",
-        "component",
-        F.when(F.col("id") == F.col("component"), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("mask"),
-        (F.col("id") == F.col("component")).alias("changed"),
-    ).repartition(p, "id")
+        # a sender's even bit makes the receiver odd-reachable and vice
+        # versa: message = swap the two bits, combine = bit_or
+        step_exprs = [
+            "id",
+            "component",
+            "(mask | COALESCE(cand, 0)) AS mask",
+            "((mask | COALESCE(cand, 0)) != mask) AS changed",
+            "((mask | COALESCE(cand, 0)) != mask) AS _changed",
+            "CAST(cand IS NOT NULL AS BIGINT) AS _msgs",
+        ]
 
-    # a sender's even bit makes the receiver odd-reachable and vice
-    # versa: message = swap the two bits, combine = bit_or
-    step_exprs = [
-        "id",
-        "component",
-        "(mask | COALESCE(cand, 0)) AS mask",
-        "((mask | COALESCE(cand, 0)) != mask) AS changed",
-        "((mask | COALESCE(cand, 0)) != mask) AS _changed",
-        "CAST(cand IS NOT NULL AS BIGINT) AS _msgs",
-    ]
-
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        msgs = (
-            adj.join(state.filter("changed"), F.expr("src = id"))
-            .selectExpr(
-                "explode(dsts) AS id",
-                "((mask & 1) << 1) | ((mask >> 1) & 1) AS m",
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            msgs = (
+                adj.join(state.filter("changed"), F.expr("src = id"))
+                .selectExpr(
+                    "explode(dsts) AS id",
+                    "((mask & 1) << 1) | ((mask >> 1) & 1) AS m",
+                )
+                .groupBy("id")
+                .agg(F.expr("bit_or(m) AS cand"))
             )
-            .groupBy("id")
-            .agg(F.expr("bit_or(m) AS cand"))
-        )
-        new = (
-            state.select("id", "component", "mask")
-            .join(msgs, "id", "left_outer")
-            .selectExpr(*step_exprs)
-        )
-        return StepResult(state=new, messages=msgs)
+            new = (
+                state.select("id", "component", "mask")
+                .join(msgs, "id", "left_outer")
+                .selectExpr(*step_exprs)
+            )
+            return StepResult(state=new, messages=msgs)
 
-    res = iterate(
-        init.withColumn("_changed", F.col("changed")).withColumn(
-            "_msgs", F.lit(0).cast("bigint")
-        ),
-        superstep,
-        converged=lambda s: s.changed == 0,
-        max_supersteps=max_supersteps,
-        num_partitions=p,
-    )
-    adj.unpersist()
+        res = iterate(
+            init.withColumn("_changed", F.col("changed")).withColumn(
+                "_msgs", F.lit(0).cast("bigint")
+            ),
+            superstep,
+            converged=lambda s: s.changed == 0,
+            max_supersteps=max_supersteps,
+            num_partitions=p,
+        )
 
     st = res.state
     grp = st.groupBy("component").agg(F.max("mask").alias("_mx"))

@@ -40,6 +40,7 @@ from ..superstep import (
     iterate,
     iteration_conf,
     local_checkpoint_fresh_stats,
+    loop_scope,
     release_local_checkpoint,
 )
 
@@ -75,89 +76,84 @@ def connected_components(
     re-sends once (one full scatter, still correct).
     """
     scale = 2 if symmetrize_edges else 1
-    p = choose_partitions(edges, lambda: scale * edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
-
     e = symmetrize(edges) if symmetrize_edges else edges.select("src", "dst")
-    with iteration_conf(edges.sparkSession, p):
-        adj = build_adjacency(e, num_partitions=p, chunk_size=chunk_size).persist()
-        adj.count()
+    with loop_scope(edges, num_partitions, scale) as scope:
+        p = scope.p
+        verts = scope.vertices(vertices)
+        adj = scope.cache(build_adjacency(e, num_partitions=p, chunk_size=chunk_size))
 
-    if init_labels is not None:
-        prev = init_labels.select("id", F.col("component").alias("_prev"))
-        init = verts.join(prev, "id", "left_outer").select(
-            "id", F.coalesce(F.col("_prev"), F.col("id")).alias("component")
-        )
-        if initial_active is not None:
-            act = initial_active.select("id").distinct().withColumn(
-                "_act", F.lit(True)
+        if init_labels is not None:
+            prev = init_labels.select("id", F.col("component").alias("_prev"))
+            init = verts.join(prev, "id", "left_outer").select(
+                "id", F.coalesce(F.col("_prev"), F.col("id")).alias("component")
             )
-            init = init.join(act, "id", "left_outer").select(
-                "id",
-                "component",
-                F.coalesce(F.col("_act"), F.lit(False)).alias("changed"),
-            )
+            if initial_active is not None:
+                act = initial_active.select("id").distinct().withColumn(
+                    "_act", F.lit(True)
+                )
+                init = init.join(act, "id", "left_outer").select(
+                    "id",
+                    "component",
+                    F.coalesce(F.col("_act"), F.lit(False)).alias("changed"),
+                )
+            else:
+                init = init.withColumn("changed", F.lit(True))
         else:
-            init = init.withColumn("changed", F.lit(True))
-    else:
-        # Superstep 1 (reference): label = min(id, out-neighbors); a
-        # vertex is "changed" (and will broadcast) only if that lowered
-        # its label.
-        nbr_min = e.groupBy("src").agg(F.min("dst").alias("nmin")).withColumnRenamed("src", "id")
-        init = (
-            verts.join(nbr_min, "id", "left_outer")
-            .select(
-                "id",
-                F.least(F.col("id"), F.coalesce(F.col("nmin"), F.col("id"))).alias("component"),
+            # Superstep 1 (reference): label = min(id, out-neighbors); a
+            # vertex is "changed" (and will broadcast) only if that lowered
+            # its label.
+            nbr_min = e.groupBy("src").agg(F.min("dst").alias("nmin")).withColumnRenamed("src", "id")
+            init = (
+                verts.join(nbr_min, "id", "left_outer")
+                .select(
+                    "id",
+                    F.least(F.col("id"), F.coalesce(F.col("nmin"), F.col("id"))).alias("component"),
+                )
+                .withColumn("changed", F.col("component") < F.col("id"))
             )
-            .withColumn("changed", F.col("component") < F.col("id"))
+
+        # Whole-SQL-snippet plan construction (selectExpr / F.expr) — the
+        # identical logical plan the fine-grained Column calls produced, but
+        # ~8 py4j round trips per superstep instead of ~40 (see pagerank.py;
+        # measured ~25% off the per-superstep floor at small scale, where
+        # fixed overhead dominates). Still exactly one SQL execution per
+        # superstep (tests/test_superstep_jobs.py).
+        comp_expr = "LEAST(component, COALESCE(cand, component))"
+        step_exprs = [
+            "id",
+            f"{comp_expr} AS component",
+            f"({comp_expr} < component) AS changed",
+            f"({comp_expr} < component) AS _changed",
+            "CAST(cand IS NOT NULL AS BIGINT) AS _msgs",
+        ]
+
+        def _messages(state: DataFrame) -> DataFrame:
+            return (
+                adj.join(state.filter("changed"), F.expr("src = id"))
+                .selectExpr("explode(dsts) AS id", "component AS cand")
+                .groupBy("id")
+                .agg(F.expr("MIN(cand) AS cand"))
+            )
+
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            msgs = _messages(state)
+            new = (
+                state.drop("changed")
+                .join(msgs, "id", "left_outer")
+                .selectExpr(*step_exprs)
+            )
+            return StepResult(state=new, messages=msgs)
+
+        result = iterate(
+            init.withColumn("_changed", F.col("changed")),
+            superstep,
+            converged=lambda s: s.changed == 0,
+            max_supersteps=max_supersteps,
+            ckpt=ckpt,
+            resume=resume,
+            track_messages=track_messages,
+            num_partitions=p,
         )
-
-    # Whole-SQL-snippet plan construction (selectExpr / F.expr) — the
-    # identical logical plan the fine-grained Column calls produced, but
-    # ~8 py4j round trips per superstep instead of ~40 (see pagerank.py;
-    # measured ~25% off the per-superstep floor at small scale, where
-    # fixed overhead dominates). Still exactly one SQL execution per
-    # superstep (tests/test_superstep_jobs.py).
-    comp_expr = "LEAST(component, COALESCE(cand, component))"
-    step_exprs = [
-        "id",
-        f"{comp_expr} AS component",
-        f"({comp_expr} < component) AS changed",
-        f"({comp_expr} < component) AS _changed",
-        "CAST(cand IS NOT NULL AS BIGINT) AS _msgs",
-    ]
-
-    def _messages(state: DataFrame) -> DataFrame:
-        return (
-            adj.join(state.filter("changed"), F.expr("src = id"))
-            .selectExpr("explode(dsts) AS id", "component AS cand")
-            .groupBy("id")
-            .agg(F.expr("MIN(cand) AS cand"))
-        )
-
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        msgs = _messages(state)
-        new = (
-            state.drop("changed")
-            .join(msgs, "id", "left_outer")
-            .selectExpr(*step_exprs)
-        )
-        return StepResult(state=new, messages=msgs)
-
-    result = iterate(
-        init.withColumn("_changed", F.col("changed")),
-        superstep,
-        converged=lambda s: s.changed == 0,
-        max_supersteps=max_supersteps,
-        ckpt=ckpt,
-        resume=resume,
-        track_messages=track_messages,
-        num_partitions=p,
-    )
-    adj.unpersist()
     return result.state.select("id", "component"), result
 
 

@@ -50,11 +50,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
 from ..partitioning import symmetrize
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
 from ..phash import md5_int_sql as _md5_int_sql
-from ..superstep import LoopResult, StepResult, iterate, iteration_conf
+from ..superstep import LoopResult, StepResult, iterate, loop_scope
 
 UNCOLORED = -1
 
@@ -115,71 +114,64 @@ def greedy_coloring(
     Deterministic in (graph, seed); both coin modes yield a valid
     coloring but generally DIFFERENT ones. Isolated vertices color 0.
     """
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
+    with loop_scope(edges, num_partitions) as scope:
+        p = scope.p
+        sym = scope.cache(symmetrize(edges).repartition(p, "src"))
 
-    with iteration_conf(edges.sparkSession, p):
-        sym = symmetrize(edges).repartition(p, "src").persist()
-        sym.count()
+        init = scope.vertices(vertices).withColumn("color", F.lit(UNCOLORED).cast("int"))
 
-    init = vertices.select("id").withColumn(
-        "color", F.lit(UNCOLORED).cast("int")
-    ).repartition(p, "id")
-
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        # ONE gather join + ONE combine per superstep (the engine's
-        # audited PR/CC shape): every neighbor contributes EITHER its
-        # coin (still uncolored) or its color (already colored), and a
-        # single groupBy folds both into (min live coin, used colors).
-        # Coins are drawn only for uncolored rows; the md5 is
-        # materialized once per row (phash hoist rule), digits follow.
-        snd = _with_coin(state, k, seed, portable)
-        msgs = (
-            sym.alias("s")
-            .join(snd.alias("t"), F.col("s.dst") == F.col("t.id"))
-            .groupBy(F.col("s.src").alias("id"))
-            .agg(
-                F.min(F.col("t.ck")).alias("mn"),
-                F.collect_set(
-                    F.when(F.col("t.color") != UNCOLORED, F.col("t.color"))
-                ).alias("used"),
-                F.count(F.lit(1)).alias("_m"),
-            )
-        )
-        win = (F.col("color") == UNCOLORED) & (
-            F.col("mn").isNull() | (F.col("ck") < F.col("mn"))
-        )
-        new = (
-            snd.join(msgs, "id", "left_outer")
-            .withColumn("used", F.coalesce(F.col("used"), F.expr("array()")))
-            .select(
-                "id",
-                F.when(win, F.expr(_MEX).cast("int"))
-                .otherwise(F.col("color"))
-                .alias("color"),
-                F.when(
-                    F.col("color") == UNCOLORED, F.coalesce(F.col("_m"), F.lit(0))
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            # ONE gather join + ONE combine per superstep (the engine's
+            # audited PageRank/CC shape): every neighbor contributes EITHER its
+            # coin (still uncolored) or its color (already colored), and a
+            # single groupBy folds both into (min live coin, used colors).
+            # Coins are drawn only for uncolored rows; the md5 is
+            # materialized once per row (phash hoist rule), digits follow.
+            snd = _with_coin(state, k, seed, portable)
+            msgs = (
+                sym.alias("s")
+                .join(snd.alias("t"), F.col("s.dst") == F.col("t.id"))
+                .groupBy(F.col("s.src").alias("id"))
+                .agg(
+                    F.min(F.col("t.ck")).alias("mn"),
+                    F.collect_set(
+                        F.when(F.col("t.color") != UNCOLORED, F.col("t.color"))
+                    ).alias("used"),
+                    F.count(F.lit(1)).alias("_m"),
                 )
-                .otherwise(F.lit(0))
-                .alias("_msgs"),
-                win.alias("_changed"),
             )
-            # _delta carries the still-uncolored count for the stop check
-            .withColumn("_delta", (F.col("color") == UNCOLORED).cast("double"))
-        )
-        return StepResult(state=new)
+            win = (F.col("color") == UNCOLORED) & (
+                F.col("mn").isNull() | (F.col("ck") < F.col("mn"))
+            )
+            new = (
+                snd.join(msgs, "id", "left_outer")
+                .withColumn("used", F.coalesce(F.col("used"), F.expr("array()")))
+                .select(
+                    "id",
+                    F.when(win, F.expr(_MEX).cast("int"))
+                    .otherwise(F.col("color"))
+                    .alias("color"),
+                    F.when(
+                        F.col("color") == UNCOLORED, F.coalesce(F.col("_m"), F.lit(0))
+                    )
+                    .otherwise(F.lit(0))
+                    .alias("_msgs"),
+                    win.alias("_changed"),
+                )
+                # _delta carries the still-uncolored count for the stop check
+                .withColumn("_delta", (F.col("color") == UNCOLORED).cast("double"))
+            )
+            return StepResult(state=new)
 
-    result = iterate(
-        init.withColumn("_changed", F.lit(False)).withColumn("_delta", F.lit(1.0)),
-        superstep,
-        converged=lambda s: (s.delta or 0.0) == 0.0,
-        max_supersteps=max_supersteps,
-        ckpt=ckpt,
-        resume=resume,
-        track_messages=True,
-        num_partitions=p,
-    )
-    sym.unpersist()
+        result = iterate(
+            init.withColumn("_changed", F.lit(False)).withColumn("_delta", F.lit(1.0)),
+            superstep,
+            converged=lambda s: (s.delta or 0.0) == 0.0,
+            max_supersteps=max_supersteps,
+            ckpt=ckpt,
+            resume=resume,
+            track_messages=True,
+            num_partitions=p,
+        )
     out = result.state.select("id", F.col("color").cast("int").alias("color"))
     return out, result

@@ -45,13 +45,14 @@ import time
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from ..graph import choose_partitions, vertices_from_edges
+from ..graph import vertices_from_edges
 from ..metrics import SuperstepMetrics
 from ..partitioning import symmetrize
 from ..superstep import (
     LoopResult,
     local_checkpoint_fresh_stats,
     iteration_conf,
+    loop_scope,
     release_local_checkpoint,
 )
 
@@ -68,7 +69,6 @@ def core_decomposition(
     True iff the fixpoint was reached within ``max_iters``."""
     spark = edges.sparkSession
     scale = 2 if symmetrize_edges else 1
-    p = choose_partitions(edges, lambda: scale * edges.count(), num_partitions)
     if vertices is None:
         vertices = vertices_from_edges(edges)
     # coreness is defined on the simple graph: self-loops would inflate
@@ -82,7 +82,8 @@ def core_decomposition(
     history: list[SuperstepMetrics] = []
     converged = False
     supersteps = 0
-    with iteration_conf(spark, p):
+    with loop_scope(edges, num_partitions, scale) as scope, iteration_conf(spark, scope.p):
+        p = scope.p
         # DELTA PLAN: a vertex's h-index can only change if a
         # neighbor's value dropped, so each round recomputes H only for
         # the AFFECTED set (dsts of edges out of last round's changed
@@ -93,10 +94,8 @@ def core_decomposition(
         # are frontier-neighborhood-sized. The frontier collapses
         # geometrically (degree-init overshoots only around dense
         # cores), which is what makes late rounds cheap.
-        adj = e.repartition(p, "src").persist()
-        radj = e.repartition(p, "dst").persist()
-        adj.count()
-        radj.count()
+        adj = scope.cache(e.repartition(p, "src"))
+        radj = scope.cache(e.repartition(p, "dst"))
 
         deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
         state = (
@@ -171,7 +170,5 @@ def core_decomposition(
                 converged = True
                 break
 
-    adj.unpersist()
-    radj.unpersist()
     out = state.selectExpr("id", "c AS coreness")
     return out, LoopResult(out, supersteps, history, converged)

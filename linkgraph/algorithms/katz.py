@@ -12,10 +12,14 @@ which after K updates equals the truncated Katz series
 1/lambda_max(A) for the infinite series to converge; the truncated
 fixed-update mode used by the driver gate is exact for any alpha.
 
-Execution shape is identical to pagerank.py (and audited there): the
-salted CSR adjacency is cached once, each superstep is ONE SQL
-execution — co-partitioned join on src, explode scatter, partial+final
-hash-agg combine on dst, left-outer update join. Cost per superstep is
+Both centralities here are ``plan="outer"``
+:class:`~linkgraph.vertex_program.VertexProgram` specs (message =
+value, SUM combiner) run by ``run_vertex_program``; this module keeps
+only the specs, the stop rule and eigenvector's final max-normalisation.
+Execution shape is the pagerank.py plan (audited there): the salted CSR
+adjacency is cached once, each superstep is ONE SQL execution —
+co-partitioned join on src, explode scatter, partial+final hash-agg
+combine on dst, left-outer update join. Cost per superstep is
 O(E) scatter + one exchange on dst; at 100 TB the adjacency build is
 the one-time cost and the loop reuses its partitioning, exactly the
 PageRank plan, so the scaling-ladder evidence for PageRank covers this
@@ -28,9 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
-from ..partitioning import build_adjacency
-from ..superstep import LoopResult, StepResult, iterate, iteration_conf
+from ..superstep import LoopResult
+from ..vertex_program import VertexProgram, run_vertex_program
 
 
 def eigenvector_centrality(
@@ -58,51 +61,33 @@ def eigenvector_centrality(
     (~18 updates at lambda ~ 10) — raise to DOUBLE beyond that, where
     the estimate no longer needs exactness.
 
-    Execution shape: identical to :func:`katz_centrality` (and audited
-    with pagerank.py) — cached salted CSR adjacency, one SQL execution
-    per superstep: scatter join + explode, partial/final SUM combine
-    on dst, left-outer update join.
+    Execution shape: identical to :func:`katz_centrality`.
 
     Returns (DF(id, walks BIGINT, eig DOUBLE), LoopResult); ``eig`` is
     NULL when the graph has no walks of the final length (max = 0).
     """
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
-
-    with iteration_conf(edges.sparkSession, p):
-        adj = build_adjacency(edges, num_partitions=p, chunk_size=chunk_size).persist()
-        adj.count()
-
-    init = verts.withColumn("walks", F.lit(1).cast("long"))
-
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        msgs = (
-            adj.join(state, F.expr("src = id"))
-            .selectExpr("explode(dsts) AS id", "walks AS w")
-            .groupBy("id")
-            .agg(F.expr("CAST(SUM(w) AS BIGINT) AS msum"))
-        )
-        new = state.join(msgs, "id", "left_outer").selectExpr(
-            "id",
-            "COALESCE(msum, CAST(0 AS BIGINT)) AS walks",
-            "CAST(msum IS NOT NULL AS BIGINT) AS _msgs",
-        )
-        return StepResult(state=new, messages=msgs)
-
-    result = iterate(
-        init,
-        superstep,
-        converged=lambda stats: False,
+    program = VertexProgram(
+        init_expr=F.lit(1).cast("long"),
+        message_expr=F.col("value"),
+        combine_agg=F.sum("msg").cast("long"),
+        update_expr=F.coalesce(F.col("msg"), F.lit(0).cast("long")),
+        plan="outer",
+    )
+    walks, result = run_vertex_program(
+        edges,
+        program,
+        vertices=vertices,
+        num_partitions=num_partitions,
         max_supersteps=updates,
+        stop_when=lambda s: False,
+        chunk_size=chunk_size,
         ckpt=ckpt,
         resume=resume,
         track_messages=False,
-        num_partitions=p,
     )
-    mx = result.state.agg(F.max("walks").alias("_mx"))
-    out = result.state.select("id", "walks").crossJoin(F.broadcast(mx)).select(
+    walks = walks.select("id", F.col("value").alias("walks"))
+    mx = walks.agg(F.max("walks").alias("_mx"))
+    out = walks.crossJoin(F.broadcast(mx)).select(
         "id",
         "walks",
         F.when(F.col("_mx") == 0, F.lit(None).cast("double"))
@@ -111,7 +96,6 @@ def eigenvector_centrality(
         )
         .alias("eig"),
     )
-    adj.unpersist()
     return out, result
 
 
@@ -139,37 +123,15 @@ def katz_centrality(
     distributions; at alpha >= 1/lambda_max the loop stops on
     max_supersteps with diverging values, as the series itself does).
     """
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
-
-    with iteration_conf(edges.sparkSession, p):
-        adj = build_adjacency(edges, num_partitions=p, chunk_size=chunk_size).persist()
-        adj.count()
-
-    init = verts.withColumn("katz", F.lit(float(beta)))
-
-    # repr() round-trips the exact double bits into the SQL snippet —
-    # same single-SQL-execution plan-building pattern as pagerank.py.
-    katz_expr = f"{float(beta)!r}D + {float(alpha)!r}D * COALESCE(msum, 0.0D)"
-    step_exprs = [
-        "id",
-        f"{katz_expr} AS katz",
-        f"ABS(({katz_expr}) - katz) AS _delta",
-        "CAST(msum IS NOT NULL AS BIGINT) AS _msgs",
-    ]
-
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        msgs = (
-            adj.join(state, F.expr("src = id"))
-            .selectExpr("explode(dsts) AS id", "katz AS w")
-            .groupBy("id")
-            .agg(F.expr("SUM(w) AS msum"))
-        )
-        new = state.join(msgs, "id", "left_outer").selectExpr(*step_exprs)
-        return StepResult(state=new, messages=msgs)
-
+    program = VertexProgram(
+        init_expr=F.lit(float(beta)),
+        message_expr=F.col("value"),
+        combine_agg=F.sum("msg"),
+        update_expr=F.lit(float(beta))
+        + F.lit(float(alpha)) * F.coalesce(F.col("msg"), F.lit(0.0)),
+        delta_expr=F.abs(F.col("_new") - F.col("value")),
+        plan="outer",
+    )
     if fixed_updates is not None:
         max_iter = fixed_updates
         def done(stats):
@@ -179,15 +141,16 @@ def katz_centrality(
         def done(stats):
             return stats.delta is not None and stats.delta <= tol
 
-    result = iterate(
-        init,
-        superstep,
-        converged=done,
+    katz, result = run_vertex_program(
+        edges,
+        program,
+        vertices=vertices,
+        num_partitions=num_partitions,
         max_supersteps=max_iter,
+        stop_when=done,
+        chunk_size=chunk_size,
         ckpt=ckpt,
         resume=resume,
         track_messages=track_messages,
-        num_partitions=p,
     )
-    adj.unpersist()
-    return result.state.select("id", "katz"), result
+    return katz.select("id", F.col("value").alias("katz")), result

@@ -64,7 +64,7 @@ def khop_features(
             "(DIV floor semantics differ between engines for negatives)"
         )
     p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    e = edges.select("src", "dst").distinct().repartition(p, "src").persist()
+    e = edges.select("src", "dst").distinct().repartition(p, "src")
     verts = (
         vertices.select("id")
         if vertices is not None
@@ -103,6 +103,4 @@ def khop_features(
             .drop("_sum", "_deg", "_mean")
         )
         cur = nxt
-    out = state
-    e.unpersist()
-    return out
+    return state

@@ -34,9 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..graph import choose_partitions
 from ..partitioning import symmetrize
-from ..superstep import iteration_conf, local_checkpoint_fresh_stats
+from ..superstep import iteration_conf, local_checkpoint_fresh_stats, loop_scope
 
 
 def select_landmarks(
@@ -68,17 +67,15 @@ def landmark_distances(
     only, hop-bounded at ``max_depth``. ``landmarks=None`` selects the
     top-``num_landmarks`` by degree (id tiebreak)."""
     spark = edges.sparkSession
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
     if landmarks is None:
         landmarks = select_landmarks(edges, num_landmarks, symmetrize_edges)
 
-    with iteration_conf(spark, p):
-        adj = (
+    with loop_scope(edges, num_partitions) as scope, iteration_conf(spark, scope.p):
+        p = scope.p
+        adj = scope.cache(
             (symmetrize(edges) if symmetrize_edges else edges.select("src", "dst"))
             .repartition(p, "src")
-            .persist()
         )
-        adj.count()
 
         # retained FRONTIER-sized level frames (the walks.py lesson):
         # each level checkpoints only its NEW (landmark, id) rows; the
@@ -115,7 +112,6 @@ def landmark_distances(
                 break
             level_frames.append(frontier)
 
-        adj.unpersist()
         lab = level_frames[0]
         for fr in level_frames[1:]:
             lab = lab.unionAll(fr)

@@ -71,7 +71,7 @@ from pyspark.sql import functions as F
 
 from ..graph import choose_partitions, vertices_from_edges
 from ..partitioning import symmetrize
-from ..superstep import iteration_conf, local_checkpoint_fresh_stats
+from ..superstep import iteration_conf, local_checkpoint_fresh_stats, loop_scope
 
 DEC = "decimal(38,0)"
 
@@ -234,11 +234,8 @@ def greedy_modularity_communities(
     2m = total symmetric weight. Default (None) is the simple-graph
     contract (each present direction contributes 1)."""
     spark = edges.sparkSession
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-
-    with iteration_conf(spark, p):
+    with loop_scope(edges, num_partitions) as scope, iteration_conf(spark, scope.p):
+        p = scope.p
         base = (
             _weighted_sym(edges, weight_col)
             if weight_col is not None
@@ -248,15 +245,12 @@ def greedy_modularity_communities(
             else symmetrize(edges.filter(F.col("src") != F.col("dst")))
             .withColumn("w", F.lit(1).cast("long"))
         )
-        wsym = base.repartition(p, "src").persist()
+        wsym = scope.cache(base.repartition(p, "src"))
         two_m = wsym.agg(F.sum("w")).collect()[0][0] or 0
         lab = local_checkpoint_fresh_stats(
-            vertices.select("id", F.col("id").alias("community")).repartition(
-                p, "id"
-            )
+            scope.vertices(vertices).select("id", F.col("id").alias("community"))
         )
         lab = _move_rounds(wsym, lab, two_m, rounds, p)
-        wsym.unpersist()
     return lab.select("id", "community")
 
 

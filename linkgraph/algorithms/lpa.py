@@ -24,9 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
 from ..partitioning import build_adjacency, symmetrize
-from ..superstep import LoopResult, StepResult, iterate, iteration_conf
+from ..superstep import LoopResult, StepResult, iterate, loop_scope
 
 
 def label_propagation(
@@ -42,56 +41,51 @@ def label_propagation(
 ) -> tuple[DataFrame, LoopResult]:
     """Returns (DF(id, label), LoopResult)."""
     scale = 2 if symmetrize_edges else 1
-    p = choose_partitions(edges, lambda: scale * edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
-
     e = symmetrize(edges) if symmetrize_edges else edges.select("src", "dst")
-    with iteration_conf(edges.sparkSession, p):
-        adj = build_adjacency(e, num_partitions=p, chunk_size=chunk_size).persist()
-        adj.count()
+    with loop_scope(edges, num_partitions, scale) as scope:
+        p = scope.p
+        verts = scope.vertices(vertices)
+        adj = scope.cache(build_adjacency(e, num_partitions=p, chunk_size=chunk_size))
 
-    init = verts.withColumn("label", F.col("id"))
+        init = verts.withColumn("label", F.col("id"))
 
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        labels = state.select("id", "label")
-        # scatter current labels to all neighbors (synchronous LPA)
-        msgs = (
-            adj.join(labels, adj["src"] == labels["id"])
-            .select(F.explode("dsts").alias("id"), F.col("label").alias("nlbl"))
-            .groupBy("id", "nlbl")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        # deterministic mode: max by (count, -label) == count DESC, label ASC
-        mode = (
-            msgs.groupBy("id")
-            .agg(F.max(F.struct(F.col("cnt"), (-F.col("nlbl")).alias("neg"))).alias("m"))
-            .select("id", (-F.col("m.neg")).alias("mode_lbl"))
-        )
-        new = (
-            labels.withColumnRenamed("label", "_old")
-            .join(mode, "id", "left_outer")
-            .select(
-                "id",
-                F.coalesce(F.col("mode_lbl"), F.col("_old")).alias("label"),
-                F.col("_old"),
-                F.col("mode_lbl").isNotNull().cast("long").alias("_msgs"),
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            labels = state.select("id", "label")
+            # scatter current labels to all neighbors (synchronous LPA)
+            msgs = (
+                adj.join(labels, adj["src"] == labels["id"])
+                .select(F.explode("dsts").alias("id"), F.col("label").alias("nlbl"))
+                .groupBy("id", "nlbl")
+                .agg(F.count(F.lit(1)).alias("cnt"))
             )
-            .withColumn("_changed", F.col("label") != F.col("_old"))
-            .drop("_old")
-        )
-        return StepResult(state=new, messages=msgs)
+            # deterministic mode: max by (count, -label) == count DESC, label ASC
+            mode = (
+                msgs.groupBy("id")
+                .agg(F.max(F.struct(F.col("cnt"), (-F.col("nlbl")).alias("neg"))).alias("m"))
+                .select("id", (-F.col("m.neg")).alias("mode_lbl"))
+            )
+            new = (
+                labels.withColumnRenamed("label", "_old")
+                .join(mode, "id", "left_outer")
+                .select(
+                    "id",
+                    F.coalesce(F.col("mode_lbl"), F.col("_old")).alias("label"),
+                    F.col("_old"),
+                    F.col("mode_lbl").isNotNull().cast("long").alias("_msgs"),
+                )
+                .withColumn("_changed", F.col("label") != F.col("_old"))
+                .drop("_old")
+            )
+            return StepResult(state=new, messages=msgs)
 
-    result = iterate(
-        init,
-        superstep,
-        converged=lambda s: s.changed == 0,
-        max_supersteps=max_supersteps,
-        ckpt=ckpt,
-        resume=resume,
-        track_messages=track_messages,
-        num_partitions=p,
-    )
-    adj.unpersist()
+        result = iterate(
+            init,
+            superstep,
+            converged=lambda s: s.changed == 0,
+            max_supersteps=max_supersteps,
+            ckpt=ckpt,
+            resume=resume,
+            track_messages=track_messages,
+            num_partitions=p,
+        )
     return result.state.select("id", "label"), result

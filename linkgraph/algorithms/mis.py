@@ -37,11 +37,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
 from ..partitioning import symmetrize
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
 from ..phash import md5_int_sql as _md5_int_sql
-from ..superstep import LoopResult, StepResult, iterate, iteration_conf
+from ..superstep import LoopResult, StepResult, iterate, loop_scope
 
 # status codes carried in the vertex state
 LIVE, IN_MIS, REMOVED = 0, 1, 2
@@ -84,85 +83,78 @@ def maximal_independent_set(
     Deterministic in (graph, seed); both coin modes yield a valid MIS
     but generally DIFFERENT sets. Isolated vertices always enter.
     """
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
+    with loop_scope(edges, num_partitions) as scope:
+        p = scope.p
+        sym = scope.cache(symmetrize(edges).repartition(p, "src"))
 
-    with iteration_conf(edges.sparkSession, p):
-        sym = symmetrize(edges).repartition(p, "src").persist()
-        sym.count()
+        init = scope.vertices(vertices).withColumn("status", F.lit(LIVE).cast("int"))
 
-    init = vertices.select("id").withColumn(
-        "status", F.lit(LIVE).cast("int")
-    ).repartition(p, "id")
-
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        live = state.filter(F.col("status") == LIVE).select("id")
-        coins = live.select(
-            "id", F.expr(_spark_coin("id", k, seed, portable)).alias("ck")
-        )
-        # per live vertex: the minimum priority among LIVE neighbors
-        # (edges with a dead endpoint drop out of both joins)
-        mn = (
-            sym.alias("s")
-            .join(coins.alias("c1"), F.col("s.src") == F.col("c1.id"))
-            .join(coins.alias("c2"), F.col("s.dst") == F.col("c2.id"))
-            .groupBy(F.col("s.src").alias("id"))
-            .agg(F.min(F.col("c2.ck")).alias("mn"), F.count(F.lit(1)).alias("_m"))
-        )
-        verdict = coins.join(mn, "id", "left_outer").select(
-            "id",
-            (F.col("mn").isNull() | (F.col("ck") < F.col("mn"))).alias("won"),
-            F.coalesce(F.col("_m"), F.lit(0)).alias("_msgs"),
-        )
-        # neighbors of this round's winners leave the live set
-        rem = (
-            sym.alias("s")
-            .join(
-                verdict.filter(F.col("won")).alias("w"),
-                F.col("s.src") == F.col("w.id"),
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            live = state.filter(F.col("status") == LIVE).select("id")
+            coins = live.select(
+                "id", F.expr(_spark_coin("id", k, seed, portable)).alias("ck")
             )
-            .select(F.col("s.dst").alias("id"))
-            .distinct()
-            .withColumn("_rm", F.lit(True))
-        )
-        new = (
-            state.join(verdict.select("id", "won", "_msgs"), "id", "left_outer")
-            .join(rem, "id", "left_outer")
-            .select(
+            # per live vertex: the minimum priority among LIVE neighbors
+            # (edges with a dead endpoint drop out of both joins)
+            mn = (
+                sym.alias("s")
+                .join(coins.alias("c1"), F.col("s.src") == F.col("c1.id"))
+                .join(coins.alias("c2"), F.col("s.dst") == F.col("c2.id"))
+                .groupBy(F.col("s.src").alias("id"))
+                .agg(F.min(F.col("c2.ck")).alias("mn"), F.count(F.lit(1)).alias("_m"))
+            )
+            verdict = coins.join(mn, "id", "left_outer").select(
                 "id",
-                F.when(F.col("won"), F.lit(IN_MIS))
-                .when(
-                    (F.col("status") == LIVE) & F.col("_rm").isNotNull(),
-                    F.lit(REMOVED),
+                (F.col("mn").isNull() | (F.col("ck") < F.col("mn"))).alias("won"),
+                F.coalesce(F.col("_m"), F.lit(0)).alias("_msgs"),
+            )
+            # neighbors of this round's winners leave the live set
+            rem = (
+                sym.alias("s")
+                .join(
+                    verdict.filter(F.col("won")).alias("w"),
+                    F.col("s.src") == F.col("w.id"),
                 )
-                .otherwise(F.col("status"))
-                .cast("int")
-                .alias("status"),
-                F.coalesce(F.col("_msgs"), F.lit(0)).alias("_msgs"),
-                (
-                    F.coalesce(F.col("won"), F.lit(False))
-                    | ((F.col("status") == LIVE) & F.col("_rm").isNotNull())
-                ).alias("_changed"),
+                .select(F.col("s.dst").alias("id"))
+                .distinct()
+                .withColumn("_rm", F.lit(True))
             )
-            # _delta carries the still-live count for the stop check
-            .withColumn(
-                "_delta", (F.col("status") == LIVE).cast("double")
+            new = (
+                state.join(verdict.select("id", "won", "_msgs"), "id", "left_outer")
+                .join(rem, "id", "left_outer")
+                .select(
+                    "id",
+                    F.when(F.col("won"), F.lit(IN_MIS))
+                    .when(
+                        (F.col("status") == LIVE) & F.col("_rm").isNotNull(),
+                        F.lit(REMOVED),
+                    )
+                    .otherwise(F.col("status"))
+                    .cast("int")
+                    .alias("status"),
+                    F.coalesce(F.col("_msgs"), F.lit(0)).alias("_msgs"),
+                    (
+                        F.coalesce(F.col("won"), F.lit(False))
+                        | ((F.col("status") == LIVE) & F.col("_rm").isNotNull())
+                    ).alias("_changed"),
+                )
+                # _delta carries the still-live count for the stop check
+                .withColumn(
+                    "_delta", (F.col("status") == LIVE).cast("double")
+                )
             )
-        )
-        return StepResult(state=new)
+            return StepResult(state=new)
 
-    result = iterate(
-        init.withColumn("_changed", F.lit(False)).withColumn("_delta", F.lit(1.0)),
-        superstep,
-        converged=lambda s: (s.delta or 0.0) == 0.0,
-        max_supersteps=max_supersteps,
-        ckpt=ckpt,
-        resume=resume,
-        track_messages=True,
-        num_partitions=p,
-    )
-    sym.unpersist()
+        result = iterate(
+            init.withColumn("_changed", F.lit(False)).withColumn("_delta", F.lit(1.0)),
+            superstep,
+            converged=lambda s: (s.delta or 0.0) == 0.0,
+            max_supersteps=max_supersteps,
+            ckpt=ckpt,
+            resume=resume,
+            track_messages=True,
+            num_partitions=p,
+        )
     out = result.state.select(
         "id", (F.col("status") == IN_MIS).cast("int").alias("in_mis")
     )

@@ -30,9 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
 from ..partitioning import build_adjacency
-from ..superstep import LoopResult, StepResult, iterate, iteration_conf
+from ..superstep import LoopResult, StepResult, iterate, loop_scope
 
 
 def pagerank(
@@ -71,87 +70,82 @@ def pagerank(
     supersteps (tests/test_resume_more.py asserts fewer supersteps with
     matching ranks).
     """
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
-    # num_vertices overrides the teleport/init denominator — the
-    # reference takes N from job conf (PregelixJob.NUM_VERTICE), which
-    # counts only input vertices even when message targets materialize
-    # extra ones (PageRankRealComplex: N=23, 29 output vertices). Also
-    # skips the count job at scale when N is known.
-    n = num_vertices if num_vertices is not None else verts.count()
-    if n == 0:
-        empty = verts.withColumn("rank", F.lit(0.0))
-        return empty, LoopResult(empty, 0, [], True)
+    with loop_scope(edges, num_partitions) as scope:
+        p = scope.p
+        verts = scope.vertices(vertices)
+        # num_vertices overrides the teleport/init denominator — the
+        # reference takes N from job conf (PregelixJob.NUM_VERTICE), which
+        # counts only input vertices even when message targets materialize
+        # extra ones (PageRankRealComplex: N=23, 29 output vertices). Also
+        # skips the count job at scale when N is known.
+        n = num_vertices if num_vertices is not None else verts.count()
+        if n == 0:
+            empty = verts.withColumn("rank", F.lit(0.0))
+            return empty, LoopResult(empty, 0, [], True)
 
-    # materialize once under the loop conf (AQE off) so the cached plan
-    # keeps hashpartitioning(src, p) — see superstep.iteration_conf
-    with iteration_conf(edges.sparkSession, p):
-        adj = build_adjacency(edges, num_partitions=p, chunk_size=chunk_size).persist()
-        adj.count()  # reused every superstep
+        # reused every superstep
+        adj = scope.cache(build_adjacency(edges, num_partitions=p, chunk_size=chunk_size))
 
-    teleport = (1.0 - damping) / n
-    if init_ranks is not None:
-        prev = init_ranks.select("id", F.col("rank").alias("_prev"))
-        init = verts.join(prev, "id", "left_outer").select(
-            "id", F.coalesce(F.col("_prev"), F.lit(1.0 / n)).alias("rank")
+        teleport = (1.0 - damping) / n
+        if init_ranks is not None:
+            prev = init_ranks.select("id", F.col("rank").alias("_prev"))
+            init = verts.join(prev, "id", "left_outer").select(
+                "id", F.coalesce(F.col("_prev"), F.lit(1.0 / n)).alias("rank")
+            )
+        else:
+            init = verts.withColumn("rank", F.lit(1.0 / n))
+
+        # Superstep plan construction uses whole-SQL-snippet expressions
+        # (selectExpr / F.expr) instead of ~50 fine-grained Column calls:
+        # the logical plan — and therefore the physical plan, float
+        # summation order, and results — is identical, but the py4j
+        # round-trip cost of BUILDING it drops ~0.17s -> ~0.07s per
+        # superstep, which is 25% of the per-superstep floor on small
+        # graphs where fixed overhead (not data volume) dominates. Plain
+        # plan construction only, so the superstep stays exactly ONE SQL
+        # execution (temp-view or spark.sql({df}) parameter binding would
+        # each add view-command executions per superstep — asserted in
+        # tests/test_superstep_jobs.py). repr() keeps the constants exact
+        # (shortest round-trip decimal -> same double bits).
+        rank_expr = f"{teleport!r}D + {damping!r}D * COALESCE(msum, 0.0D)"
+        step_exprs = [
+            "id",
+            f"{rank_expr} AS rank",
+            f"ABS(({rank_expr}) - rank) AS _delta",
+            "CAST(msum IS NOT NULL AS BIGINT) AS _msgs",
+        ]
+
+        def _messages(state: DataFrame) -> DataFrame:
+            return (
+                adj.join(state, F.expr("src = id"))
+                .selectExpr("explode(dsts) AS id", "rank / outdeg AS w")
+                .groupBy("id")
+                .agg(F.expr("SUM(w) AS msum"))
+            )
+
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            msgs = _messages(state)
+            new = state.join(msgs, "id", "left_outer").selectExpr(*step_exprs)
+            return StepResult(state=new, messages=msgs)
+
+        if fixed_updates is not None:
+            max_iter = fixed_updates
+            def done(stats):
+                return False
+        else:
+            max_iter = max_supersteps
+            def done(stats):
+                return stats.delta is not None and stats.delta <= tol
+
+        result = iterate(
+            init,
+            superstep,
+            converged=done,
+            max_supersteps=max_iter,
+            ckpt=ckpt,
+            resume=resume,
+            track_messages=track_messages,
+            num_partitions=p,
+            global_aggs=global_aggs,
         )
-    else:
-        init = verts.withColumn("rank", F.lit(1.0 / n))
-
-    # Superstep plan construction uses whole-SQL-snippet expressions
-    # (selectExpr / F.expr) instead of ~50 fine-grained Column calls:
-    # the logical plan — and therefore the physical plan, float
-    # summation order, and results — is identical, but the py4j
-    # round-trip cost of BUILDING it drops ~0.17s -> ~0.07s per
-    # superstep, which is 25% of the per-superstep floor on small
-    # graphs where fixed overhead (not data volume) dominates. Plain
-    # plan construction only, so the superstep stays exactly ONE SQL
-    # execution (temp-view or spark.sql({df}) parameter binding would
-    # each add view-command executions per superstep — asserted in
-    # tests/test_superstep_jobs.py). repr() keeps the constants exact
-    # (shortest round-trip decimal -> same double bits).
-    rank_expr = f"{teleport!r}D + {damping!r}D * COALESCE(msum, 0.0D)"
-    step_exprs = [
-        "id",
-        f"{rank_expr} AS rank",
-        f"ABS(({rank_expr}) - rank) AS _delta",
-        "CAST(msum IS NOT NULL AS BIGINT) AS _msgs",
-    ]
-
-    def _messages(state: DataFrame) -> DataFrame:
-        return (
-            adj.join(state, F.expr("src = id"))
-            .selectExpr("explode(dsts) AS id", "rank / outdeg AS w")
-            .groupBy("id")
-            .agg(F.expr("SUM(w) AS msum"))
-        )
-
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        msgs = _messages(state)
-        new = state.join(msgs, "id", "left_outer").selectExpr(*step_exprs)
-        return StepResult(state=new, messages=msgs)
-
-    if fixed_updates is not None:
-        max_iter = fixed_updates
-        def done(stats):
-            return False
-    else:
-        max_iter = max_supersteps
-        def done(stats):
-            return stats.delta is not None and stats.delta <= tol
-
-    result = iterate(
-        init,
-        superstep,
-        converged=done,
-        max_supersteps=max_iter,
-        ckpt=ckpt,
-        resume=resume,
-        track_messages=track_messages,
-        num_partitions=p,
-        global_aggs=global_aggs,
-    )
-    adj.unpersist()
     return result.state.select("id", "rank"), result

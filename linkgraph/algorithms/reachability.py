@@ -19,6 +19,10 @@ Reference contract (ReachabilityVertex.java:135-191, SURVEY.md §4.5):
   out-edges — the SQL-expressible closure the oracle gate checks
   (and what the reference itself produces when the searches never meet,
   golden ReachibilityRealComplexNoConnectivity).
+
+Written as a ``plan="delta"`` :class:`~linkgraph.vertex_program.
+VertexProgram` (value = the mask, ``bit_or`` combiner) run by
+``run_vertex_program``; the meet signal is its ``delta_expr``.
 """
 
 from __future__ import annotations
@@ -27,9 +31,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
-from ..partitioning import symmetrize
-from ..superstep import LoopResult, StepResult, iterate, iteration_conf
+from ..graph import vertices_from_edges
+from ..superstep import LoopResult
+from ..vertex_program import VertexProgram, run_vertex_program
 
 
 def reachability(
@@ -50,85 +54,46 @@ def reachability(
     ``state``: 0 unmarked, 1 reached-from-source, 2 reached-from-dest,
     3 both (the searches met through this vertex).
     """
-    scale = 2 if symmetrize_edges else 1
-    p = choose_partitions(edges, lambda: scale * edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
-
-    e = symmetrize(edges) if symmetrize_edges else edges.select("src", "dst")
-    with iteration_conf(edges.sparkSession, p):
-        adj = (
-            e.groupBy("src").agg(F.collect_list("dst").alias("dsts"))
-            .repartition(p, "src")
-            .persist()
-        )
-        adj.count()
-
     if source == dest:
         # reference: the vertex is set to 1 then overwritten to 2, and
         # the job terminates immediately (ReachabilityVertex.java:141-153)
-        states = verts.select(
+        if vertices is None:
+            vertices = vertices_from_edges(edges)
+        states = vertices.select(
             "id",
             F.when(F.col("id") == source, F.lit(2)).otherwise(F.lit(0)).alias("state"),
         )
-        adj.unpersist()
         return states, True, LoopResult(states, 0, [], True)
 
-    init = verts.select(
-        "id",
-        (
-            F.when(F.col("id") == source, F.lit(1)).otherwise(F.lit(0))
-            + F.when(F.col("id") == dest, F.lit(2)).otherwise(F.lit(0))
-        ).alias("state"),
-    ).withColumn("changed", F.col("state") > 0)
-
-    def superstep(state_df: DataFrame, k: int) -> StepResult:
-        cur = state_df.select("id", "state", "changed")
-        senders = cur.filter(F.col("changed"))
-        msgs = (
-            adj.join(senders, adj["src"] == senders["id"])
-            .select(F.explode("dsts").alias("id"), F.col("state").alias("m"))
-            .groupBy("id")
-            .agg(F.expr("bit_or(m)").alias("m"))
-        )
-        new = (
-            cur.drop("changed")
-            .join(msgs, "id", "left_outer")
-            .select(
-                "id",
-                F.col("state").alias("_old"),
-                F.col("state").bitwiseOR(F.coalesce(F.col("m"), F.lit(0))).alias("state"),
-                F.col("m").isNotNull().cast("long").alias("_msgs"),
-            )
-            .select(
-                "id",
-                "state",
-                (F.col("state") != F.col("_old")).alias("changed"),
-                # _delta carries the meet signal: >0 iff some vertex is
-                # now marked from both sides.
-                F.when(F.col("state") == 3, F.lit(1.0)).otherwise(F.lit(0.0)).alias("_delta"),
-                "_msgs",
-            )
-            .withColumn("_changed", F.col("changed"))
-        )
-        return StepResult(state=new, messages=msgs)
+    program = VertexProgram(
+        init_expr=F.when(F.col("id") == source, F.lit(1)).otherwise(F.lit(0))
+        + F.when(F.col("id") == dest, F.lit(2)).otherwise(F.lit(0)),
+        message_expr=F.col("value"),
+        combine_agg=F.expr("bit_or(msg)"),
+        update_expr=F.col("value").bitwiseOR(F.coalesce(F.col("msg"), F.lit(0))),
+        plan="delta",
+        initial_active_expr=(F.col("id") == source) | (F.col("id") == dest),
+        # _delta carries the meet signal: >0 iff some vertex is now
+        # marked from both sides
+        delta_expr=F.when(F.col("_new") == 3, F.lit(1.0)).otherwise(F.lit(0.0)),
+        symmetrize_edges=symmetrize_edges,
+    )
 
     def done(s) -> bool:
         met = (s.delta or 0.0) > 0
         return s.changed == 0 or (early_terminate and met)
 
-    result = iterate(
-        init.withColumn("_changed", F.col("changed")).withColumn("_delta", F.lit(0.0)),
-        superstep,
-        converged=done,
+    state, result = run_vertex_program(
+        edges.select("src", "dst"),
+        program,
+        vertices=vertices,
+        num_partitions=num_partitions,
         max_supersteps=max_supersteps,
+        stop_when=done,
         ckpt=ckpt,
         resume=resume,
         track_messages=track_messages,
-        num_partitions=p,
     )
-    adj.unpersist()
-    states = result.state.select("id", "state")
+    states = state.select("id", F.col("value").alias("state"))
     met = bool(result.history and (result.history[-1].delta or 0.0) > 0)
     return states, met, result

@@ -36,11 +36,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
 from ..partitioning import build_adjacency
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
 from ..phash import md5_int_sql as _md5_int_sql
-from ..superstep import LoopResult, StepResult, iterate, iteration_conf
+from ..superstep import LoopResult, StepResult, iterate, loop_scope
 
 
 def _seed_arg(id_sql: str, seed: int, k: int) -> str:
@@ -100,78 +99,73 @@ def graph_sample(
     ``portable`` selects the coin family (see module docstring): both
     are deterministic in (graph, seed), but they draw DIFFERENT
     samples; portable=True is the oracle-checkable one."""
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
+    with loop_scope(edges, num_partitions) as scope:
+        p = scope.p
+        verts = scope.vertices(vertices)
+        adj = scope.cache(build_adjacency(edges, num_partitions=p))
 
-    with iteration_conf(edges.sparkSession, p):
-        adj = build_adjacency(edges, num_partitions=p).persist()
-        adj.count()
+        init = verts.withColumn("selected", F.lit(False)).withColumn(
+            "newly", F.lit(False)
+        )
 
-    init = verts.withColumn("selected", F.lit(False)).withColumn(
-        "newly", F.lit(False)
-    )
-
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        cur = state.select("id", "selected", "newly")
-        # expansion: vertices selected last superstep mark a subset of
-        # their out-neighbors (deterministic per-edge coin)
-        senders = cur.filter(F.col("newly"))
-        marked = (
-            adj.join(senders, adj["src"] == senders["id"])
-            .select(F.col("src"), F.explode("dsts").alias("id"))
-            .filter(
-                F.expr(
-                    _spark_coin(
-                        _edge_arg("src", "id", seed, k), sampling_interval, portable
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            cur = state.select("id", "selected", "newly")
+            # expansion: vertices selected last superstep mark a subset of
+            # their out-neighbors (deterministic per-edge coin)
+            senders = cur.filter(F.col("newly"))
+            marked = (
+                adj.join(senders, adj["src"] == senders["id"])
+                .select(F.col("src"), F.explode("dsts").alias("id"))
+                .filter(
+                    F.expr(
+                        _spark_coin(
+                            _edge_arg("src", "id", seed, k), sampling_interval, portable
+                        )
                     )
                 )
+                .select("id")
+                .distinct()
             )
-            .select("id")
-            .distinct()
-        )
-        # seeding: unselected vertices self-select with the seed coin
-        new = (
-            cur.drop("newly")
-            .join(marked.withColumn("_m", F.lit(True)), "id", "left_outer")
-            .select(
-                "id",
-                F.col("selected").alias("_old"),
-                (
-                    F.col("selected")
-                    | F.coalesce(F.col("_m"), F.lit(False))
-                    | F.expr(
-                        _spark_coin(_seed_arg("id", seed, k), seed_interval, portable)
-                    )
-                ).alias("selected"),
-                F.col("_m").isNotNull().cast("long").alias("_msgs"),
+            # seeding: unselected vertices self-select with the seed coin
+            new = (
+                cur.drop("newly")
+                .join(marked.withColumn("_m", F.lit(True)), "id", "left_outer")
+                .select(
+                    "id",
+                    F.col("selected").alias("_old"),
+                    (
+                        F.col("selected")
+                        | F.coalesce(F.col("_m"), F.lit(False))
+                        | F.expr(
+                            _spark_coin(_seed_arg("id", seed, k), seed_interval, portable)
+                        )
+                    ).alias("selected"),
+                    F.col("_m").isNotNull().cast("long").alias("_msgs"),
+                )
+                .select(
+                    "id",
+                    "selected",
+                    (F.col("selected") & ~F.col("_old")).alias("newly"),
+                    "_msgs",
+                )
+                .withColumn("_changed", F.col("newly"))
+                # _delta carries the global fill count for the stop check
+                .withColumn("_delta", F.col("selected").cast("double"))
             )
-            .select(
-                "id",
-                "selected",
-                (F.col("selected") & ~F.col("_old")).alias("newly"),
-                "_msgs",
-            )
-            .withColumn("_changed", F.col("newly"))
-            # _delta carries the global fill count for the stop check
-            .withColumn("_delta", F.col("selected").cast("double"))
-        )
-        return StepResult(state=new, messages=marked)
+            return StepResult(state=new, messages=marked)
 
-    def done(s) -> bool:
-        filled = (s.delta or 0.0) / max(s.rows, 1)
-        return filled >= target_rate
+        def done(s) -> bool:
+            filled = (s.delta or 0.0) / max(s.rows, 1)
+            return filled >= target_rate
 
-    result = iterate(
-        init.withColumn("_changed", F.lit(False)).withColumn("_delta", F.lit(0.0)),
-        superstep,
-        converged=done,
-        max_supersteps=max_supersteps,
-        ckpt=ckpt,
-        resume=resume,
-        track_messages=track_messages,
-        num_partitions=p,
-    )
-    adj.unpersist()
+        result = iterate(
+            init.withColumn("_changed", F.lit(False)).withColumn("_delta", F.lit(0.0)),
+            superstep,
+            converged=done,
+            max_supersteps=max_supersteps,
+            ckpt=ckpt,
+            resume=resume,
+            track_messages=track_messages,
+            num_partitions=p,
+        )
     return result.state.select("id", "selected"), result

@@ -34,9 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
 from ..partitioning import build_adjacency, symmetrize
-from ..superstep import LoopResult, StepResult, iterate, iteration_conf
+from ..superstep import LoopResult, StepResult, iterate, loop_scope
 
 
 def seeded_label_propagation(
@@ -54,64 +53,59 @@ def seeded_label_propagation(
     """Returns (DF(id, label), LoopResult) — ``seeds`` is DF(id, label
     BIGINT); label is -1 for vertices unreachable from every seed."""
     scale = 2 if symmetrize_edges else 1
-    p = choose_partitions(edges, lambda: scale * edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
-
     e = symmetrize(edges) if symmetrize_edges else edges.select("src", "dst")
-    with iteration_conf(edges.sparkSession, p):
-        adj = build_adjacency(e, num_partitions=p, chunk_size=chunk_size).persist()
-        adj.count()
+    with loop_scope(edges, num_partitions, scale) as scope:
+        p = scope.p
+        verts = scope.vertices(vertices)
+        adj = scope.cache(build_adjacency(e, num_partitions=p, chunk_size=chunk_size))
 
-    init = verts.join(
-        seeds.select("id", F.col("label").cast("long").alias("label")),
-        "id",
-        "left_outer",
-    ).withColumn("changed", F.col("label").isNotNull())
+        init = verts.join(
+            seeds.select("id", F.col("label").cast("long").alias("label")),
+            "id",
+            "left_outer",
+        ).withColumn("changed", F.col("label").isNotNull())
 
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        cur = state.select("id", "label", "changed")
-        senders = cur.filter(F.col("changed"))
-        msgs = (
-            adj.join(senders, adj["src"] == senders["id"])
-            .select(F.explode("dsts").alias("id"), F.col("label").alias("nlbl"))
-            .groupBy("id", "nlbl")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        # deterministic mode: max by (count, -label) == count DESC, label ASC
-        mode = (
-            msgs.groupBy("id")
-            .agg(F.max(F.struct(F.col("cnt"), (-F.col("nlbl")).alias("neg"))).alias("m"))
-            .select("id", (-F.col("m.neg")).alias("mode_lbl"))
-        )
-        new = (
-            cur.drop("changed")
-            .join(mode, "id", "left_outer")
-            .select(
-                "id",
-                F.coalesce(F.col("label"), F.col("mode_lbl")).alias("nlabel"),
-                (F.col("label").isNull() & F.col("mode_lbl").isNotNull()).alias(
-                    "changed"
-                ),
-                F.col("mode_lbl").isNotNull().cast("long").alias("_msgs"),
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            cur = state.select("id", "label", "changed")
+            senders = cur.filter(F.col("changed"))
+            msgs = (
+                adj.join(senders, adj["src"] == senders["id"])
+                .select(F.explode("dsts").alias("id"), F.col("label").alias("nlbl"))
+                .groupBy("id", "nlbl")
+                .agg(F.count(F.lit(1)).alias("cnt"))
             )
-            .select("id", F.col("nlabel").alias("label"), "changed", "_msgs")
-            .withColumn("_changed", F.col("changed").cast("long"))
-        )
-        return StepResult(state=new, messages=msgs)
+            # deterministic mode: max by (count, -label) == count DESC, label ASC
+            mode = (
+                msgs.groupBy("id")
+                .agg(F.max(F.struct(F.col("cnt"), (-F.col("nlbl")).alias("neg"))).alias("m"))
+                .select("id", (-F.col("m.neg")).alias("mode_lbl"))
+            )
+            new = (
+                cur.drop("changed")
+                .join(mode, "id", "left_outer")
+                .select(
+                    "id",
+                    F.coalesce(F.col("label"), F.col("mode_lbl")).alias("nlabel"),
+                    (F.col("label").isNull() & F.col("mode_lbl").isNotNull()).alias(
+                        "changed"
+                    ),
+                    F.col("mode_lbl").isNotNull().cast("long").alias("_msgs"),
+                )
+                .select("id", F.col("nlabel").alias("label"), "changed", "_msgs")
+                .withColumn("_changed", F.col("changed").cast("long"))
+            )
+            return StepResult(state=new, messages=msgs)
 
-    result = iterate(
-        init,
-        superstep,
-        converged=lambda s: s.changed == 0,
-        max_supersteps=max_supersteps,
-        ckpt=ckpt,
-        resume=resume,
-        track_messages=track_messages,
-        num_partitions=p,
-    )
-    adj.unpersist()
+        result = iterate(
+            init,
+            superstep,
+            converged=lambda s: s.changed == 0,
+            max_supersteps=max_supersteps,
+            ckpt=ckpt,
+            resume=resume,
+            track_messages=track_messages,
+            num_partitions=p,
+        )
     out = result.state.select(
         "id", F.coalesce(F.col("label"), F.lit(-1).cast("long")).alias("label")
     )

@@ -6,9 +6,11 @@ min-distance relaxation with SimpleMinCombiner; edge weight defaults to
 message-driven fixpoint (only vertices whose distance improved
 re-broadcast), every vertex votes to halt each superstep.
 
-Same delta-messaging superstep core as connected components, with the
-message value ``dist + weight`` instead of a label. Unreached vertices
-report distance NULL (the reference leaves them at +inf / untouched).
+Written as a :class:`~linkgraph.vertex_program.VertexProgram`
+(:func:`sssp_program`) and run by ``run_vertex_program`` on the delta
+plan over a row-per-edge adjacency (the scatter needs per-edge weights,
+so array packing buys nothing). Unreached vertices report distance NULL
+(the reference leaves them at +inf / untouched).
 """
 
 from __future__ import annotations
@@ -17,10 +19,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
-from ..superstep import LoopResult, StepResult, iterate, iteration_conf
+from ..superstep import LoopResult
+from ..vertex_program import VertexProgram, run_vertex_program
 
 _INF = float("inf")
+
+
+def sssp_program(source: int, weight_col: str | None = None) -> VertexProgram:
+    """Single-source shortest paths as a declarative vertex program:
+    min-distance relaxation with a min combiner, delta messaging (only
+    improved vertices re-send), default edge weight 1.0 (the program
+    then reads the constant column ``_w1``, which
+    :func:`shortest_paths` adds)."""
+    w = F.col(weight_col) if weight_col else F.lit(1.0)
+    return VertexProgram(
+        init_expr=F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(_INF)),
+        message_expr=F.col("value") + w,
+        combine_agg=F.min("msg"),
+        update_expr=F.least(F.col("value"), F.coalesce(F.col("msg"), F.col("value"))),
+        changed_expr=F.col("_new") < F.col("value"),
+        plan="delta",
+        initial_active_expr=F.col("id") == source,
+        weight_col=weight_col or "_w1",
+    )
 
 
 def shortest_paths(
@@ -35,63 +56,21 @@ def shortest_paths(
     track_messages: bool = True,
 ) -> tuple[DataFrame, LoopResult]:
     """Returns (DF(id, distance), LoopResult); distance NULL if unreachable."""
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
-
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    # weighted adjacency rows (src, dst, w); kept row-per-edge (the
-    # scatter needs per-edge weights, so array packing buys nothing)
-    with iteration_conf(edges.sparkSession, p):
-        wedges = edges.select("src", "dst", w.alias("w")).repartition(p, "src").persist()
-        wedges.count()
-
-    init = verts.select(
-        "id",
-        F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(_INF)).alias("dist"),
-    ).withColumn("changed", F.col("id") == source)
-
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        cur = state.select("id", "dist", "changed")
-        senders = cur.filter(F.col("changed"))
-        msgs = (
-            wedges.join(senders, wedges["src"] == senders["id"])
-            .select(F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("cand"))
-            .groupBy("id")
-            .agg(F.min("cand").alias("cand"))
-        )
-        new = (
-            cur.drop("changed")
-            .join(msgs, "id", "left_outer")
-            .select(
-                "id",
-                F.least(F.col("dist"), F.coalesce(F.col("cand"), F.col("dist"))).alias("ndist"),
-                F.col("dist").alias("_oldd"),
-                F.col("cand").isNotNull().cast("long").alias("_msgs"),
-            )
-            .select(
-                "id",
-                F.col("ndist").alias("dist"),
-                (F.col("ndist") < F.col("_oldd")).alias("changed"),
-                "_msgs",
-            )
-            .withColumn("_changed", F.col("changed"))
-        )
-        return StepResult(state=new, messages=msgs)
-
-    result = iterate(
-        init,
-        superstep,
-        converged=lambda s: s.changed == 0,
+    e = edges if weight_col else edges.withColumn("_w1", F.lit(1.0))
+    state, res = run_vertex_program(
+        e,
+        sssp_program(source, weight_col),
+        vertices=vertices,
+        num_partitions=num_partitions,
         max_supersteps=max_supersteps,
         ckpt=ckpt,
         resume=resume,
         track_messages=track_messages,
-        num_partitions=p,
     )
-    wedges.unpersist()
-    out = result.state.select(
-        "id", F.when(F.col("dist") == _INF, F.lit(None)).otherwise(F.col("dist")).alias("distance")
+    out = state.select(
+        "id",
+        F.when(F.col("value") == _INF, F.lit(None))
+        .otherwise(F.col("value"))
+        .alias("distance"),
     )
-    return out, result
+    return out, res

@@ -32,8 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
-from ..superstep import LoopResult, StepResult, iterate, iteration_conf
+from ..superstep import LoopResult, StepResult, iterate, loop_scope
 
 _INF = (1 << 62) - 1  # integer +inf sentinel; timestamps must be < this
 _NEG_INF = -(1 << 62)  # integer -inf sentinel; timestamps must be > this
@@ -74,69 +73,63 @@ def temporal_earliest_arrival(
     (DF(id, arrival BIGINT), LoopResult); arrival NULL if no
     time-respecting path exists. The source reports ``start_time``.
     """
-    p = choose_partitions(tedges, lambda: tedges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(tedges)
-    verts = vertices.select("id").repartition(p, "id")
-
-    with iteration_conf(tedges.sparkSession, p):
-        te = (
+    with loop_scope(tedges, num_partitions) as scope:
+        p = scope.p
+        verts = scope.vertices(vertices)
+        te = scope.cache(
             tedges.select("src", "dst", F.col(time_col).cast("long").alias("t"))
             .repartition(p, "src")
-            .persist()
         )
-        te.count()
-    _check_time_range(te)
+        _check_time_range(te)
 
-    init = verts.select(
-        "id",
-        F.when(F.col("id") == source, F.lit(start_time))
-        .otherwise(F.lit(_INF))
-        .cast("long")
-        .alias("arr"),
-    ).withColumn("changed", F.col("id") == source)
+        init = verts.select(
+            "id",
+            F.when(F.col("id") == source, F.lit(start_time))
+            .otherwise(F.lit(_INF))
+            .cast("long")
+            .alias("arr"),
+        ).withColumn("changed", F.col("id") == source)
 
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        cur = state.select("id", "arr", "changed")
-        senders = cur.filter(F.col("changed"))
-        msgs = (
-            te.join(senders, te["src"] == senders["id"])
-            # the time-respecting guard, applied before the exchange
-            .filter(F.col("t") >= F.col("arr"))
-            .select(F.col("dst").alias("id"), F.col("t").alias("cand"))
-            .groupBy("id")
-            .agg(F.min("cand").alias("cand"))
-        )
-        new = (
-            cur.drop("changed")
-            .join(msgs, "id", "left_outer")
-            .select(
-                "id",
-                F.least(F.col("arr"), F.coalesce(F.col("cand"), F.col("arr"))).alias("narr"),
-                F.col("arr").alias("_olda"),
-                F.col("cand").isNotNull().cast("long").alias("_msgs"),
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            cur = state.select("id", "arr", "changed")
+            senders = cur.filter(F.col("changed"))
+            msgs = (
+                te.join(senders, te["src"] == senders["id"])
+                # the time-respecting guard, applied before the exchange
+                .filter(F.col("t") >= F.col("arr"))
+                .select(F.col("dst").alias("id"), F.col("t").alias("cand"))
+                .groupBy("id")
+                .agg(F.min("cand").alias("cand"))
             )
-            .select(
-                "id",
-                F.col("narr").alias("arr"),
-                (F.col("narr") < F.col("_olda")).alias("changed"),
-                "_msgs",
+            new = (
+                cur.drop("changed")
+                .join(msgs, "id", "left_outer")
+                .select(
+                    "id",
+                    F.least(F.col("arr"), F.coalesce(F.col("cand"), F.col("arr"))).alias("narr"),
+                    F.col("arr").alias("_olda"),
+                    F.col("cand").isNotNull().cast("long").alias("_msgs"),
+                )
+                .select(
+                    "id",
+                    F.col("narr").alias("arr"),
+                    (F.col("narr") < F.col("_olda")).alias("changed"),
+                    "_msgs",
+                )
+                .withColumn("_changed", F.col("changed"))
             )
-            .withColumn("_changed", F.col("changed"))
-        )
-        return StepResult(state=new, messages=msgs)
+            return StepResult(state=new, messages=msgs)
 
-    result = iterate(
-        init,
-        superstep,
-        converged=lambda s: s.changed == 0,
-        max_supersteps=max_supersteps,
-        ckpt=ckpt,
-        resume=resume,
-        track_messages=track_messages,
-        num_partitions=p,
-    )
-    te.unpersist()
+        result = iterate(
+            init,
+            superstep,
+            converged=lambda s: s.changed == 0,
+            max_supersteps=max_supersteps,
+            ckpt=ckpt,
+            resume=resume,
+            track_messages=track_messages,
+            num_partitions=p,
+        )
     out = result.state.select(
         "id",
         F.when(F.col("arr") == _INF, F.lit(None)).otherwise(F.col("arr")).alias("arrival"),
@@ -172,77 +165,71 @@ def temporal_latest_departure(
     no time-respecting path exists, and NULL for ``target`` itself
     when ``deadline`` is None (it does not depart).
     """
-    p = choose_partitions(tedges, lambda: tedges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(tedges)
-    verts = vertices.select("id").repartition(p, "id")
     cap = _INF if deadline is None else int(deadline)
-
-    with iteration_conf(tedges.sparkSession, p):
+    with loop_scope(tedges, num_partitions) as scope:
+        p = scope.p
+        verts = scope.vertices(vertices)
         # reverse orientation: scatter src <- dst, partitioned by dst
-        te = (
+        te = scope.cache(
             tedges.select("src", "dst", F.col(time_col).cast("long").alias("t"))
             .filter(F.col("t") <= cap)
             .repartition(p, "dst")
-            .persist()
         )
-        te.count()
-    _check_time_range(te)
+        _check_time_range(te)
 
-    # "cannot reach" sentinel strictly below every representable
-    # timestamp (negative epochs are legal BIGINT input; a -1 sentinel
-    # would shadow real departures <= -1 — _check_time_range guards the
-    # boundary)
-    _NONE = _NEG_INF
+        # "cannot reach" sentinel strictly below every representable
+        # timestamp (negative epochs are legal BIGINT input; a -1 sentinel
+        # would shadow real departures <= -1 — _check_time_range guards the
+        # boundary)
+        _NONE = _NEG_INF
 
-    init = verts.select(
-        "id",
-        F.when(F.col("id") == target, F.lit(cap))
-        .otherwise(F.lit(_NONE))
-        .cast("long")
-        .alias("dep"),
-    ).withColumn("changed", F.col("id") == target)
+        init = verts.select(
+            "id",
+            F.when(F.col("id") == target, F.lit(cap))
+            .otherwise(F.lit(_NONE))
+            .cast("long")
+            .alias("dep"),
+        ).withColumn("changed", F.col("id") == target)
 
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        cur = state.select("id", "dep", "changed")
-        senders = cur.filter(F.col("changed"))
-        msgs = (
-            te.join(senders, te["dst"] == senders["id"])
-            .filter(F.col("t") <= F.col("dep"))
-            .select(F.col("src").alias("id"), F.col("t").alias("cand"))
-            .groupBy("id")
-            .agg(F.max("cand").alias("cand"))
-        )
-        new = (
-            cur.drop("changed")
-            .join(msgs, "id", "left_outer")
-            .select(
-                "id",
-                F.greatest(F.col("dep"), F.coalesce(F.col("cand"), F.col("dep"))).alias("ndep"),
-                F.col("dep").alias("_oldd"),
-                F.col("cand").isNotNull().cast("long").alias("_msgs"),
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            cur = state.select("id", "dep", "changed")
+            senders = cur.filter(F.col("changed"))
+            msgs = (
+                te.join(senders, te["dst"] == senders["id"])
+                .filter(F.col("t") <= F.col("dep"))
+                .select(F.col("src").alias("id"), F.col("t").alias("cand"))
+                .groupBy("id")
+                .agg(F.max("cand").alias("cand"))
             )
-            .select(
-                "id",
-                F.col("ndep").alias("dep"),
-                (F.col("ndep") > F.col("_oldd")).alias("changed"),
-                "_msgs",
+            new = (
+                cur.drop("changed")
+                .join(msgs, "id", "left_outer")
+                .select(
+                    "id",
+                    F.greatest(F.col("dep"), F.coalesce(F.col("cand"), F.col("dep"))).alias("ndep"),
+                    F.col("dep").alias("_oldd"),
+                    F.col("cand").isNotNull().cast("long").alias("_msgs"),
+                )
+                .select(
+                    "id",
+                    F.col("ndep").alias("dep"),
+                    (F.col("ndep") > F.col("_oldd")).alias("changed"),
+                    "_msgs",
+                )
+                .withColumn("_changed", F.col("changed"))
             )
-            .withColumn("_changed", F.col("changed"))
-        )
-        return StepResult(state=new, messages=msgs)
+            return StepResult(state=new, messages=msgs)
 
-    result = iterate(
-        init,
-        superstep,
-        converged=lambda s: s.changed == 0,
-        max_supersteps=max_supersteps,
-        ckpt=ckpt,
-        resume=resume,
-        track_messages=track_messages,
-        num_partitions=p,
-    )
-    te.unpersist()
+        result = iterate(
+            init,
+            superstep,
+            converged=lambda s: s.changed == 0,
+            max_supersteps=max_supersteps,
+            ckpt=ckpt,
+            resume=resume,
+            track_messages=track_messages,
+            num_partitions=p,
+        )
     out = result.state.select(
         "id",
         F.when(

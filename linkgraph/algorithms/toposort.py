@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
 
 UNPEELED = -1
 
@@ -50,55 +49,48 @@ def dependency_levels(
     the Kahn peel round (0-based), or -1 for vertices on or downstream
     of a directed cycle (never peelable). Self-loops make their vertex
     permanently cyclic, matching the dependency reading."""
-    from ..superstep import LoopResult, StepResult, iterate, iteration_conf
+    from ..superstep import LoopResult, StepResult, iterate, loop_scope
 
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
+    with loop_scope(edges, num_partitions) as scope:
+        p = scope.p
+        de = scope.cache(edges.select("src", "dst").distinct().repartition(p, "dst"))
 
-    with iteration_conf(edges.sparkSession, p):
-        de = edges.select("src", "dst").distinct().repartition(p, "dst").persist()
-        de.count()
+        init = scope.vertices(vertices).withColumn("level", F.lit(UNPEELED).cast("long"))
 
-    init = vertices.select("id").withColumn(
-        "level", F.lit(UNPEELED).cast("long")
-    ).repartition(p, "id")
-
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        live = state.filter(F.col("level") == UNPEELED).select("id")
-        # vertices that still have an incoming edge from a live vertex
-        hasin = (
-            de.join(live.select(F.col("id").alias("src")), "src")
-            .join(live.select(F.col("id").alias("dst")), "dst")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-        )
-        newly = live.join(hasin, "id", "left_anti").withColumn(
-            "_new", F.lit(True)
-        )
-        new = (
-            state.join(newly, "id", "left_outer")
-            .select(
-                "id",
-                F.when(F.col("_new").isNotNull(), F.lit(k - 1).cast("long"))
-                .otherwise(F.col("level"))
-                .alias("level"),
-                F.col("_new").isNotNull().alias("_changed"),
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            live = state.filter(F.col("level") == UNPEELED).select("id")
+            # vertices that still have an incoming edge from a live vertex
+            hasin = (
+                de.join(live.select(F.col("id").alias("src")), "src")
+                .join(live.select(F.col("id").alias("dst")), "dst")
+                .select(F.col("dst").alias("id"))
+                .distinct()
             )
-            .withColumn("_msgs", F.lit(0))
-        )
-        return StepResult(state=new)
+            newly = live.join(hasin, "id", "left_anti").withColumn(
+                "_new", F.lit(True)
+            )
+            new = (
+                state.join(newly, "id", "left_outer")
+                .select(
+                    "id",
+                    F.when(F.col("_new").isNotNull(), F.lit(k - 1).cast("long"))
+                    .otherwise(F.col("level"))
+                    .alias("level"),
+                    F.col("_new").isNotNull().alias("_changed"),
+                )
+                .withColumn("_msgs", F.lit(0))
+            )
+            return StepResult(state=new)
 
-    result = iterate(
-        init.withColumn("_changed", F.lit(False)),
-        superstep,
-        # fixpoint: a round that peels nothing leaves only the cyclic
-        # residue (peelability is monotone), so stop on changed == 0
-        converged=lambda s: s.changed == 0,
-        max_supersteps=max_supersteps,
-        ckpt=ckpt,
-        resume=resume,
-        num_partitions=p,
-    )
-    de.unpersist()
+        result = iterate(
+            init.withColumn("_changed", F.lit(False)),
+            superstep,
+            # fixpoint: a round that peels nothing leaves only the cyclic
+            # residue (peelability is monotone), so stop on changed == 0
+            converged=lambda s: s.changed == 0,
+            max_supersteps=max_supersteps,
+            ckpt=ckpt,
+            resume=resume,
+            num_partitions=p,
+        )
     return result.state.select("id", "level"), result

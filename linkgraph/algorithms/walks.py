@@ -52,11 +52,16 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
+from ..graph import vertices_from_edges
 from ..metrics import SuperstepMetrics
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
 from ..phash import md5_int_sql as _md5_int_sql
-from ..superstep import LoopResult, iteration_conf, local_checkpoint_fresh_stats
+from ..superstep import (
+    LoopResult,
+    iteration_conf,
+    local_checkpoint_fresh_stats,
+    loop_scope,
+)
 
 
 def _walk_arg(walk_id_sql: str, k: int, seed: int) -> str:
@@ -185,7 +190,6 @@ def random_walks(
             "snapshot; use a CheckpointManager with keep=None"
         )
     spark = edges.sparkSession
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
     if vertices is None:
         vertices = vertices_from_edges(edges)
 
@@ -201,13 +205,12 @@ def random_walks(
     frames: list[tuple[int, DataFrame]] = []
     converged = False
 
-    with iteration_conf(spark, p):
-        ie = (
+    with loop_scope(edges, num_partitions) as scope, iteration_conf(spark, scope.p):
+        p = scope.p
+        ie = scope.cache(
             indexed_edges(edges, num_partitions=p, weight_col=weight_col)
             .sortWithinPartitions("src")
-            .persist()
         )
-        ie.count()
 
         init = (
             vertices.select(F.col("id").alias("start"))
@@ -305,7 +308,6 @@ def random_walks(
                 converged = True
                 break
 
-    ie.unpersist()
     corpus = first.select(
         F.col("id").alias("walk_id"),
         F.lit(0).cast("int").alias("step"),
@@ -376,7 +378,6 @@ def node2vec_walks(
             "snapshot; use a CheckpointManager with keep=None"
         )
     spark = edges.sparkSession
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
     if vertices is None:
         vertices = vertices_from_edges(edges)
     base_w = F.col("e.w") if weight_col is not None else F.lit(1).cast("long")
@@ -385,13 +386,12 @@ def node2vec_walks(
     frames: list[tuple[int, DataFrame]] = []
     converged = False
 
-    with iteration_conf(spark, p):
-        ie = (
+    with loop_scope(edges, num_partitions) as scope, iteration_conf(spark, scope.p):
+        p = scope.p
+        ie = scope.cache(
             indexed_edges(edges, num_partitions=p, weight_col=weight_col)
             .sortWithinPartitions("src")
-            .persist()
         )
-        ie.count()
 
         W = walks_per_vertex
         init = (
@@ -505,7 +505,6 @@ def node2vec_walks(
                 converged = True
                 break
 
-    ie.unpersist()
     corpus = first.select(
         F.col("id").alias("walk_id"),
         F.lit(0).cast("int").alias("step"),

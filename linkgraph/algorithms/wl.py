@@ -47,10 +47,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..graph import choose_partitions
 from ..partitioning import symmetrize
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
-from ..superstep import iteration_conf, local_checkpoint_fresh_stats
+from ..superstep import local_checkpoint_fresh_stats, loop_scope
 
 WL_DIGITS = 14  # md5 hex digits per portable label (56 bits, BIGINT-exact)
 
@@ -76,50 +75,47 @@ def wl_refinement(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    with iteration_conf(edges.sparkSession, p):
-        sym = symmetrize(edges).repartition(p, "src").persist()
-        sym.count()
-    verts = (
-        vertices.select("id")
-        if vertices is not None
-        else sym.select(F.col("src").alias("id")).distinct()
-    )
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).cast("long").alias("_deg")
-    )
-    state = (
-        verts.join(deg, "id", "left")
-        .select("id", F.coalesce("_deg", F.lit(0)).cast("long").alias("wl0"))
-        .repartition(p, "id")
-    )
-    cur = "wl0"
-    for k in range(1, rounds + 1):
-        nbr = (
-            sym.join(
-                state.select(F.col("id").alias("src"), F.col(cur).alias("_l")), "src"
-            )
-            .groupBy(F.col("dst").alias("id"))
-            # the collected multiset collapses to its canonical string
-            # inside this projection — no array column leaves the agg
-            .agg(
-                F.array_join(F.sort_array(F.collect_list("_l")), ",").alias("_nb")
-            )
+    with loop_scope(edges, num_partitions) as scope:
+        p = scope.p
+        sym = scope.cache(symmetrize(edges).repartition(p, "src"))
+        verts = (
+            vertices.select("id")
+            if vertices is not None
+            else sym.select(F.col("src").alias("id")).distinct()
         )
-        nxt = f"wl{k}"
-        sig = f"concat(CAST({cur} AS STRING), ':', coalesce(_nb, ''))"
-        # state feeds both the gather and the label join, so without a
-        # cut the plan tree doubles per round — checkpoint each round
-        # (fresh stats, the house loop rule)
-        state = local_checkpoint_fresh_stats(
-            state.join(nbr, "id", "left")
-            .withColumn(nxt, F.expr(_wl_hash_spark(sig, portable)))
-            .drop("_nb")
+        deg = sym.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).cast("long").alias("_deg")
         )
-        cur = nxt
-    out = state
-    sym.unpersist()
-    return out
+        state = (
+            verts.join(deg, "id", "left")
+            .select("id", F.coalesce("_deg", F.lit(0)).cast("long").alias("wl0"))
+            .repartition(p, "id")
+        )
+        cur = "wl0"
+        for k in range(1, rounds + 1):
+            nbr = (
+                sym.join(
+                    state.select(F.col("id").alias("src"), F.col(cur).alias("_l")), "src"
+                )
+                .groupBy(F.col("dst").alias("id"))
+                # the collected multiset collapses to its canonical string
+                # inside this projection — no array column leaves the agg
+                .agg(
+                    F.array_join(F.sort_array(F.collect_list("_l")), ",").alias("_nb")
+                )
+            )
+            nxt = f"wl{k}"
+            sig = f"concat(CAST({cur} AS STRING), ':', coalesce(_nb, ''))"
+            # state feeds both the gather and the label join, so without a
+            # cut the plan tree doubles per round — checkpoint each round
+            # (fresh stats, the house loop rule)
+            state = local_checkpoint_fresh_stats(
+                state.join(nbr, "id", "left")
+                .withColumn(nxt, F.expr(_wl_hash_spark(sig, portable)))
+                .drop("_nb")
+            )
+            cur = nxt
+    return state
 
 
 def wl_class_sizes(labels: DataFrame, col: str) -> DataFrame:

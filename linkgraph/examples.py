@@ -9,11 +9,12 @@ superstep DataFrames: each is a :class:`~linkgraph.vertex_program.
 VertexProgram` spec (message expr + combiner agg + update expr) that
 the engine assembles into the iteration.
 
-``sssp_program`` mirrors the shipped ShortestPathsVertex contract and is
-tested for equality against the engine-internal implementation AND the
-driver's DuckDB oracle; ``degree_weighted_pagerank`` is a genuinely new
-user-defined analytic (degree-prior teleport — not in the reference)
-demonstrating that new algorithms need zero engine edits.
+The shipped algorithms that fit one message expression, one combiner
+and one update (SSSP, reachability, Katz, eigenvector centrality) are
+VertexPrograms too, but live with their siblings in
+``linkgraph.algorithms``. ``degree_weighted_pagerank`` here is a
+genuinely new user-defined analytic (degree-prior teleport — not in the
+reference) demonstrating that new algorithms need zero engine edits.
 """
 
 from __future__ import annotations
@@ -25,48 +26,6 @@ from .graph import vertices_from_edges
 from .partitioning import out_degrees
 from .superstep import LoopResult, StepResult, iterate
 from .vertex_program import VertexProgram, run_vertex_program
-
-_INF = float("inf")
-
-
-def sssp_program(source: int, weight_col: str | None = None) -> VertexProgram:
-    """Single-source shortest paths as a declarative vertex program.
-
-    Reference semantics (ShortestPathsVertex.java:125-145): min-distance
-    relaxation with SimpleMinCombiner, delta messaging (only improved
-    vertices re-send), source from conf, default edge weight 1.0.
-    """
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    return VertexProgram(
-        init_expr=F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(_INF)),
-        message_expr=F.col("value") + w,
-        combine_agg=F.min("msg"),
-        update_expr=F.least(F.col("value"), F.coalesce(F.col("msg"), F.col("value"))),
-        changed_expr=F.col("_new") < F.col("value"),
-        plan="delta",
-        initial_active_expr=F.col("id") == source,
-        weight_col=weight_col or "_w1",
-    )
-
-
-def shortest_paths_vp(
-    edges: DataFrame,
-    source: int,
-    weight_col: str | None = None,
-    **kwargs,
-) -> tuple[DataFrame, LoopResult]:
-    """Run :func:`sssp_program`; returns (DF(id, distance), LoopResult)
-    with distance NULL when unreachable (same surface as the built-in)."""
-    prog = sssp_program(source, weight_col)
-    e = edges if weight_col else edges.withColumn("_w1", F.lit(1.0))
-    state, res = run_vertex_program(e, prog, **kwargs)
-    out = state.select(
-        "id",
-        F.when(F.col("value") == _INF, F.lit(None))
-        .otherwise(F.col("value"))
-        .alias("distance"),
-    )
-    return out, res
 
 
 def pagerank_struct_program(n: int, damping: float = 0.85) -> VertexProgram:

@@ -22,6 +22,7 @@ Both are stripped before the state is checkpointed.
 from __future__ import annotations
 
 import time
+import warnings
 from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable
@@ -31,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .checkpoint import CheckpointManager, SnapshotWriter
+from .graph import choose_partitions, vertices_from_edges
 from .metrics import SuperstepMetrics, partition_histogram, skew_from_histogram
 
 
@@ -78,6 +80,50 @@ def iteration_conf(spark, num_partitions: int | None = None):
         spark.conf.set("spark.sql.shuffle.partitions", before_sp)
 
 
+class LoopScope:
+    """What :func:`loop_scope` yields: the loop partition count ``p``
+    plus the two prologue steps every iterative algorithm shares."""
+
+    def __init__(self, edges: DataFrame, p: int):
+        self.p = p
+        self._edges = edges
+        self._cached: list[DataFrame] = []
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """Persist and materialize a loop-invariant frame (adjacency,
+        edge list) under :func:`iteration_conf`, so its cached plan
+        keeps the partitioning the loop joins on. Freed when the scope
+        exits."""
+        with iteration_conf(self._edges.sparkSession, self.p):
+            df = df.persist()
+            self._cached.append(df)
+            df.count()
+        return df
+
+    def vertices(self, vertices: DataFrame | None = None) -> DataFrame:
+        """The vertex id frame (default: every src/dst id of the
+        edges), hash-partitioned on ``id`` into ``p`` partitions."""
+        if vertices is None:
+            vertices = vertices_from_edges(self._edges)
+        return vertices.select("id").repartition(self.p, "id")
+
+
+@contextmanager
+def loop_scope(edges: DataFrame, num_partitions: int | None = None, scale: int = 1):
+    """The shared loop prologue: pick the partition count from
+    ``scale * edges.count()`` (skipped when ``num_partitions`` is
+    given), and unpersist every frame passed to ``scope.cache`` on the
+    way out — also when the loop raises."""
+    scope = LoopScope(
+        edges, choose_partitions(edges, lambda: scale * edges.count(), num_partitions)
+    )
+    try:
+        yield scope
+    finally:
+        for df in scope._cached:
+            df.unpersist()
+
+
 @dataclass
 class StepResult:
     state: DataFrame                   # new vertex state (may carry _delta/_changed/_msgs)
@@ -122,10 +168,14 @@ def release_local_checkpoint(df: DataFrame) -> None:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
-    except Exception:
-        # defensive: reaches through py4j internals; worst case the
-        # snapshot lingers until driver GC, as before
-        pass
+    except Exception as exc:
+        # reaches through py4j internals; the snapshot now lingers
+        # until driver GC, so say so
+        warnings.warn(
+            f"release_local_checkpoint fell back (snapshot kept until GC): {exc!r}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
 
 
 def _release(df: DataFrame) -> None:
@@ -160,10 +210,10 @@ def local_checkpoint_fresh_stats(
     automatic broadcast — a safe direction at scale; loops that want a
     broadcast say so explicitly.
 
-    Falls back to the plain checkpointed frame if the JVM internals
-    ever move (the reconstruction reaches through py4j into
-    ``LogicalRDD``'s constructor — package-private in Scala, public in
-    bytecode).
+    Falls back to the plain checkpointed frame, with a
+    ``RuntimeWarning``, if the JVM internals ever move (the
+    reconstruction reaches through py4j into ``LogicalRDD``'s
+    constructor — package-private in Scala, public in bytecode).
     """
     if storage_level is not None:
         out = df.localCheckpoint(eager=eager, storageLevel=storage_level)
@@ -184,7 +234,12 @@ def local_checkpoint_fresh_stats(
             spark._jsparkSession, new_lr
         )
         return DataFrame(ds, spark)
-    except Exception:
+    except Exception as exc:
+        warnings.warn(
+            f"local_checkpoint_fresh_stats kept the origin stats: {exc!r}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return out
 
 
@@ -227,9 +282,9 @@ def iterate(
     runs exactly ONE SQL execution (one pass over the data; asserted in
     tests/test_superstep_jobs.py). The partition-skew histogram needs a
     grouped pass over the message frame, so it is *sampled*: computed
-    only every ``skew_sample_every``-th superstep (0 disables). A
-    superstep that returns ``messages`` without ``_msgs`` falls back to
-    the legacy extra count job.
+    only every ``skew_sample_every``-th superstep (0 disables). With
+    ``track_messages``, a superstep that returns ``messages`` without
+    ``_msgs`` raises ``ValueError``.
     """
     history: list[SuperstepMetrics] = []
     start_k = 1
@@ -270,6 +325,11 @@ def iterate(
                     # computed inside the superstep dataflow
                     # (FinalAggregateOperatorDescriptor, SURVEY.md §3.4).
                     cols = set(res.state.columns)
+                    if track_messages and res.messages is not None and "_msgs" not in cols:
+                        raise ValueError(
+                            "superstep returned messages but its state has no "
+                            "_msgs column; add one or pass track_messages=False"
+                        )
                     obs = Observation(f"superstep-{k}")
                     agg_exprs = [F.count(F.lit(1)).alias("rows")]
                     if "_delta" in cols:
@@ -326,27 +386,16 @@ def iterate(
                             name: row[f"_ga_{name}"] for name in global_aggs
                         }
 
-                    if track_messages:
-                        sample_skew = (
+                    if track_messages and "_msgs" in cols:
+                        # free: the count rode the materialization job above
+                        stats.messages = int(row["messages"] or 0)
+                        if (
                             skew_sample_every > 0
                             and res.messages is not None
                             and k % skew_sample_every == 0
-                        )
-                        if "_msgs" in cols:
-                            # free: the count rode the materialization job above
-                            stats.messages = int(row["messages"] or 0)
-                            if sample_skew:
-                                hist = partition_histogram(res.messages)
-                                stats.skew_ratio = skew_from_histogram(hist)
-                        elif res.messages is not None:
-                            # legacy path (superstep_fn without a _msgs column):
-                            # one extra job for the count, skew still sampled
-                            msgs = res.messages.persist(storage_level)
-                            stats.messages = msgs.count()
-                            if sample_skew:
-                                hist = partition_histogram(msgs)
-                                stats.skew_ratio = skew_from_histogram(hist)
-                            msgs.unpersist()
+                        ):
+                            hist = partition_histogram(res.messages)
+                            stats.skew_ratio = skew_from_histogram(hist)
 
                     # the snapshot in flight reads `state`: finish it first
                     writer.join()

@@ -34,7 +34,15 @@ new-value Series) — vectorized, never per-row Python.
 
 No algorithm in this file is hard-coded: PageRank, SSSP, CC, LPA and
 user-defined variants are all definable against this API alone (see
-linkgraph/examples.py and tests/test_vertex_program.py).
+linkgraph/examples.py and tests/test_vertex_program.py). The shipped
+SSSP (``algorithms/sssp.py``), reachability and Katz / eigenvector
+centrality are VertexPrograms run by :func:`run_vertex_program`.
+
+The loop prologue (partition count, cached adjacency freed on exit or
+error) is ``superstep.loop_scope``. Every Column of the superstep that
+does not depend on the superstep number is built once per run, not once
+per superstep: building the plan is driver time on each superstep's
+critical path.
 """
 
 from __future__ import annotations
@@ -46,15 +54,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .checkpoint import CheckpointManager
-from .graph import choose_partitions, vertices_from_edges
 from .metrics import SuperstepMetrics
 from .partitioning import build_adjacency, symmetrize
-from .superstep import (
-    LoopResult,
-    StepResult,
-    iterate,
-    iteration_conf,
-)
+from .superstep import LoopResult, StepResult, iterate, loop_scope
 
 
 @dataclass
@@ -195,207 +197,6 @@ def run_vertex_program(
     """
     if program.plan not in ("outer", "delta", "auto"):
         raise ValueError(f"unknown plan {program.plan!r}")
-    scale = 2 if program.symmetrize_edges else 1
-    p = choose_partitions(edges, lambda: scale * edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
-
-    e = symmetrize(edges) if program.symmetrize_edges else edges
-    with iteration_conf(edges.sparkSession, p):
-        if program.weight_col is not None:
-            # row-per-edge adjacency: the scatter needs per-edge weights
-            adj = (
-                e.select("src", "dst", F.col(program.weight_col).cast("double").alias(program.weight_col))
-                .repartition(p, "src")
-                .persist()
-            )
-        else:
-            adj = build_adjacency(
-                e.select("src", "dst"), num_partitions=p, chunk_size=chunk_size
-            ).persist()
-        adj.count()
-
-    attr_cols: list[str] = []
-    if vertex_attrs is not None:
-        attr_cols = [c for c in vertex_attrs.columns if c != "id"]
-        verts = verts.join(vertex_attrs, "id", "left_outer")
-
-    tracks_active = program.plan in ("delta", "auto")
-    tracks_frozen = program.terminate_partition_expr is not None
-    part_expr = (
-        program.partition_expr
-        if program.partition_expr is not None
-        else F.pmod(F.hash(F.col("id")), F.lit(p))
-    )
-    init = verts.select("id", *attr_cols, program.init_expr.alias("value"))
-    if tracks_frozen:
-        init = init.withColumn("_frozen", F.lit(False))
-    if tracks_active:
-        active0 = (
-            program.initial_active_expr
-            if program.initial_active_expr is not None
-            else F.lit(True)
-        )
-        init = init.withColumn("active", active0)
-
-    # driver-side plan state for plan="auto" (the reference's
-    # switchPlan decision lives in the driver loop too)
-    plan_state = {"changed_frac": 1.0, "switched_at": None}
-
-    changed_expr = (
-        program.changed_expr
-        if program.changed_expr is not None
-        else F.col("_new") != F.col("value")
-    )
-
-    def scatter(senders: DataFrame) -> DataFrame:
-        if program.weight_col is not None:
-            per_edge = adj.join(senders, adj["src"] == senders["id"])
-            return per_edge.select(
-                F.col("dst").alias("id"), program.message_expr.alias("msg")
-            )
-        joined = adj.join(senders, adj["src"] == senders["id"])
-        # message computed once per (sender, chunk) then fanned out —
-        # sendMsgToAllEdges semantics (Vertex.java:236-241)
-        return joined.select(
-            F.explode("dsts").alias("id"), program.message_expr.alias("msg")
-        )
-
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        if program.plan == "delta":
-            senders = state.filter(F.col("active"))
-        elif program.plan == "auto":
-            # outer until the live fraction justifies the delta filter;
-            # the switch is permanent, like the reference's one-way
-            # jobgen swap to JobGenInnerJoin
-            if plan_state["switched_at"] is None and (
-                k > 1 and plan_state["changed_frac"] < program.switch_threshold
-            ):
-                plan_state["switched_at"] = k
-            senders = (
-                state.filter(F.col("active"))
-                if plan_state["switched_at"] is not None
-                else state
-            )
-        else:
-            senders = state
-        if tracks_frozen:
-            senders = senders.filter(~F.col("_frozen"))
-        msgs = scatter(senders).groupBy("id").agg(program.combine_agg.alias("msg"))
-
-        base = state.drop("active") if tracks_active else state
-        joined = base.join(msgs, "id", "left_outer").withColumn(
-            "superstep", F.lit(k)
-        )
-        if tracks_frozen:
-            # partitions fired THIS superstep freeze before the update
-            # applies (EarlyTermination fixture semantics); the fired
-            # set is <= p rows, broadcast back onto the state
-            fired = (
-                joined.filter(
-                    (~F.col("_frozen")) & program.terminate_partition_expr
-                )
-                .select(part_expr.alias("_vp_term_part"))
-                .distinct()
-            )
-            joined = (
-                joined.join(
-                    F.broadcast(fired),
-                    part_expr == F.col("_vp_term_part"),
-                    "left_outer",
-                )
-                .withColumn(
-                    "_frozen",
-                    F.col("_frozen") | F.col("_vp_term_part").isNotNull(),
-                )
-                .drop("_vp_term_part")
-            )
-        if program.update_kernel is not None:
-            new_val = _kernel_column(joined, program.update_kernel, attr_cols)
-        else:
-            new_val = program.update_expr
-        if tracks_frozen:
-            # frozen vertices skip the update and can never report a
-            # change (voteToHalt is permanent for a terminated partition)
-            new_val = F.when(F.col("_frozen"), F.col("value")).otherwise(new_val)
-        upd = joined.select(
-            "id",
-            *attr_cols,
-            F.col("value"),
-            new_val.alias("_new"),
-            F.col("superstep"),
-            F.col("msg").isNotNull().cast("long").alias("_vp_got_msg"),
-            *([F.col("_frozen")] if tracks_frozen else []),
-        )
-        step_changed = (
-            F.when(F.col("_frozen"), F.lit(False)).otherwise(changed_expr)
-            if tracks_frozen
-            else changed_expr
-        )
-        out_cols = [
-            F.col("id"),
-            *[F.col(c) for c in attr_cols],
-            F.col("_new").alias("value"),
-            step_changed.alias("_vp_changed"),
-            *([F.col("_frozen")] if tracks_frozen else []),
-            # combined-message count rides the state observation (one
-            # job per superstep; see superstep.py on why the message
-            # frame itself must not carry a CollectMetrics node)
-            F.col("_vp_got_msg").alias("_msgs"),
-        ]
-        if program.delta_expr is not None:
-            out_cols.append(program.delta_expr.alias("_delta"))
-        new = upd.select(*out_cols).withColumn(
-            "_changed", F.col("_vp_changed")
-        )
-        if tracks_active:
-            active_next = F.col("_vp_changed")
-            if program.wake_on_message:
-                # live-set = changed ∪ messaged (the reference's set-union
-                # wake-up of halted-but-messaged vertices)
-                active_next = active_next | (F.col("_msgs") == 1)
-            if tracks_frozen:
-                # a message cannot wake a terminated partition
-                active_next = active_next & ~F.col("_frozen")
-            new = new.withColumn("active", active_next)
-        new = new.drop("_vp_changed")
-        # mutation channels (insert/delete between supersteps — see the
-        # VertexProgram field docs). Deletes first, then inserts: an id
-        # deleted and re-inserted in one superstep lands as a fresh row.
-        if program.mutate_delete_expr is not None:
-            dels = upd.select(
-                F.explode(program.mutate_delete_expr).alias("id")
-            ).distinct()
-            new = new.join(dels, "id", "left_anti")
-        if program.mutate_add_expr is not None:
-            spawned = upd.select(F.explode(program.mutate_add_expr).alias("_nv"))
-            proj = []
-            for f in new.schema.fields:
-                if f.name == "id":
-                    proj.append(F.col("_nv.id").cast(f.dataType).alias("id"))
-                elif f.name == "value":
-                    proj.append(F.col("_nv.value").cast(f.dataType).alias("value"))
-                elif f.name == "active":
-                    proj.append(F.lit(True).alias("active"))
-                elif f.name == "_changed":
-                    proj.append(F.lit(True).alias("_changed"))
-                elif f.name == "_msgs":
-                    proj.append(F.lit(0).cast(f.dataType).alias("_msgs"))
-                elif f.name == "_frozen":
-                    proj.append(F.lit(False).alias("_frozen"))
-                elif f.name == "_delta":
-                    proj.append(F.lit(0.0).cast(f.dataType).alias("_delta"))
-                else:  # static vertex attrs: NULL for spawned vertices
-                    proj.append(F.lit(None).cast(f.dataType).alias(f.name))
-            adds = (
-                spawned.select(*proj)
-                .dropDuplicates(["id"])
-                # upsert semantics: an existing id keeps its row
-                .join(new.select("id"), "id", "left_anti")
-            )
-            new = new.unionByName(adds)
-        return StepResult(state=new, messages=msgs)
 
     if stop_when is not None:
         stop = stop_when
@@ -414,22 +215,59 @@ def run_vertex_program(
     else:
         stop = lambda s: s.changed == 0  # noqa: E731
 
+    # driver-side plan state for plan="auto" (the reference's
+    # switchPlan decision lives in the driver loop too)
+    plan_state = {"changed_frac": 1.0, "switched_at": None}
+
     def stop_and_observe(stats: SuperstepMetrics) -> bool:
         if stats.changed is not None and stats.rows:
             plan_state["changed_frac"] = stats.changed / stats.rows
         return stop(stats)
 
-    result = iterate(
-        init,
-        superstep,
-        converged=stop_and_observe,
-        max_supersteps=max_supersteps,
-        ckpt=ckpt,
-        resume=resume,
-        track_messages=track_messages,
-        num_partitions=p,
-    )
-    adj.unpersist()
+    attr_cols: list[str] = []
+    if vertex_attrs is not None:
+        attr_cols = [c for c in vertex_attrs.columns if c != "id"]
+    scale = 2 if program.symmetrize_edges else 1
+    e = symmetrize(edges) if program.symmetrize_edges else edges
+    with loop_scope(edges, num_partitions, scale) as scope:
+        p = scope.p
+        if program.weight_col is not None:
+            # row-per-edge adjacency: the scatter needs per-edge weights
+            wc = program.weight_col
+            adj = scope.cache(
+                e.select("src", "dst", F.col(wc).cast("double").alias(wc))
+                .repartition(p, "src")
+            )
+        else:
+            adj = scope.cache(
+                build_adjacency(
+                    e.select("src", "dst"), num_partitions=p, chunk_size=chunk_size
+                )
+            )
+        verts = scope.vertices(vertices)
+        if vertex_attrs is not None:
+            verts = verts.join(vertex_attrs, "id", "left_outer")
+        init = verts.select("id", *attr_cols, program.init_expr.alias("value"))
+        if program.terminate_partition_expr is not None:
+            init = init.withColumn("_frozen", F.lit(False))
+        if program.plan in ("delta", "auto"):
+            active0 = (
+                program.initial_active_expr
+                if program.initial_active_expr is not None
+                else F.lit(True)
+            )
+            init = init.withColumn("active", active0)
+
+        result = iterate(
+            init,
+            _superstep_fn(program, adj, p, attr_cols, plan_state),
+            converged=stop_and_observe,
+            max_supersteps=max_supersteps,
+            ckpt=ckpt,
+            resume=resume,
+            track_messages=track_messages,
+            num_partitions=p,
+        )
     # surfaced for inspection/tests: the superstep at which plan="auto"
     # swapped outer -> delta (None = never switched / not auto)
     result.plan_switched_at = plan_state["switched_at"]
@@ -437,9 +275,178 @@ def run_vertex_program(
     return out, result
 
 
-def _kernel_column(joined: DataFrame, kernel: Callable, attr_cols: list[str]):
+def _superstep_fn(
+    program: VertexProgram,
+    adj: DataFrame,
+    p: int,
+    attr_cols: list[str],
+    plan_state: dict,
+) -> Callable[[DataFrame, int], StepResult]:
+    """The superstep of ``program`` over the cached adjacency; every
+    Column that does not depend on the superstep number is built here,
+    once."""
+    tracks_active = program.plan in ("delta", "auto")
+    tracks_frozen = program.terminate_partition_expr is not None
+
+    # -- scatter + combine ------------------------------------------------
+    is_active = F.col("active")
+    not_frozen = ~F.col("_frozen")
+    src_is_sender = F.col("src") == F.col("id")
+    if program.weight_col is not None:
+        scatter_cols = [F.col("dst").alias("id"), program.message_expr.alias("msg")]
+    else:
+        # message computed once per (sender, chunk) then fanned out —
+        # sendMsgToAllEdges semantics (Vertex.java:236-241)
+        scatter_cols = [F.explode("dsts").alias("id"), program.message_expr.alias("msg")]
+    combined = program.combine_agg.alias("msg")
+
+    # -- terminatePartition -------------------------------------------------
+    if tracks_frozen:
+        part_expr = (
+            program.partition_expr
+            if program.partition_expr is not None
+            else F.pmod(F.hash(F.col("id")), F.lit(p))
+        )
+        fires = not_frozen & program.terminate_partition_expr
+        fired_part = part_expr.alias("_vp_term_part")
+        in_fired_part = part_expr == F.col("_vp_term_part")
+        frozen_next = F.col("_frozen") | F.col("_vp_term_part").isNotNull()
+
+    # -- update + output projections ---------------------------------------
+    if program.update_kernel is not None:
+        new_val = _kernel_column(program.update_kernel, attr_cols)
+    else:
+        new_val = program.update_expr
+    changed = (
+        program.changed_expr
+        if program.changed_expr is not None
+        else F.col("_new") != F.col("value")
+    )
+    frozen_cols = [F.col("_frozen")] if tracks_frozen else []
+    if tracks_frozen:
+        # frozen vertices skip the update and can never report a
+        # change (voteToHalt is permanent for a terminated partition)
+        new_val = F.when(F.col("_frozen"), F.col("value")).otherwise(new_val)
+        changed = F.when(F.col("_frozen"), F.lit(False)).otherwise(changed)
+    upd_cols = [
+        "id",
+        *attr_cols,
+        F.col("value"),
+        new_val.alias("_new"),
+        F.col("superstep"),
+        F.col("msg").isNotNull().cast("long").alias("_vp_got_msg"),
+        *frozen_cols,
+    ]
+    out_cols = [
+        F.col("id"),
+        *[F.col(c) for c in attr_cols],
+        F.col("_new").alias("value"),
+        *frozen_cols,
+        # combined-message count rides the state observation (one
+        # job per superstep; see superstep.py on why the message
+        # frame itself must not carry a CollectMetrics node)
+        F.col("_vp_got_msg").alias("_msgs"),
+    ]
+    if program.delta_expr is not None:
+        out_cols.append(program.delta_expr.alias("_delta"))
+    out_cols.append(changed.alias("_changed"))
+    if tracks_active:
+        active_next = changed
+        if program.wake_on_message:
+            # live-set = changed ∪ messaged (the reference's set-union
+            # wake-up of halted-but-messaged vertices)
+            active_next = active_next | (F.col("_vp_got_msg") == 1)
+        if tracks_frozen:
+            # a message cannot wake a terminated partition
+            active_next = active_next & not_frozen
+        out_cols.append(active_next.alias("active"))
+    if program.mutate_delete_expr is not None:
+        deleted_id = F.explode(program.mutate_delete_expr).alias("id")
+    if program.mutate_add_expr is not None:
+        spawned = F.explode(program.mutate_add_expr).alias("_nv")
+
+    def superstep(state: DataFrame, k: int) -> StepResult:
+        if program.plan == "delta":
+            senders = state.filter(is_active)
+        elif program.plan == "auto":
+            # outer until the live fraction justifies the delta filter;
+            # the switch is permanent, like the reference's one-way
+            # jobgen swap to JobGenInnerJoin
+            if plan_state["switched_at"] is None and (
+                k > 1 and plan_state["changed_frac"] < program.switch_threshold
+            ):
+                plan_state["switched_at"] = k
+            senders = (
+                state.filter(is_active)
+                if plan_state["switched_at"] is not None
+                else state
+            )
+        else:
+            senders = state
+        if tracks_frozen:
+            senders = senders.filter(not_frozen)
+        msgs = (
+            adj.join(senders, src_is_sender)
+            .select(*scatter_cols)
+            .groupBy("id")
+            .agg(combined)
+        )
+
+        base = state.drop("active") if tracks_active else state
+        joined = base.join(msgs, "id", "left_outer").withColumn(
+            "superstep", F.lit(k)
+        )
+        if tracks_frozen:
+            # partitions fired THIS superstep freeze before the update
+            # applies (EarlyTermination fixture semantics); the fired
+            # set is <= p rows, broadcast back onto the state
+            fired = joined.filter(fires).select(fired_part).distinct()
+            joined = (
+                joined.join(F.broadcast(fired), in_fired_part, "left_outer")
+                .withColumn("_frozen", frozen_next)
+                .drop("_vp_term_part")
+            )
+        upd = joined.select(*upd_cols)
+        new = upd.select(*out_cols)
+        # mutation channels (insert/delete between supersteps — see the
+        # VertexProgram field docs). Deletes first, then inserts: an id
+        # deleted and re-inserted in one superstep lands as a fresh row.
+        if program.mutate_delete_expr is not None:
+            dels = upd.select(deleted_id).distinct()
+            new = new.join(dels, "id", "left_anti")
+        if program.mutate_add_expr is not None:
+            proj = []
+            for f in new.schema.fields:
+                if f.name == "id":
+                    proj.append(F.col("_nv.id").cast(f.dataType).alias("id"))
+                elif f.name == "value":
+                    proj.append(F.col("_nv.value").cast(f.dataType).alias("value"))
+                elif f.name in ("active", "_changed"):
+                    proj.append(F.lit(True).alias(f.name))
+                elif f.name == "_msgs":
+                    proj.append(F.lit(0).cast(f.dataType).alias("_msgs"))
+                elif f.name == "_frozen":
+                    proj.append(F.lit(False).alias("_frozen"))
+                elif f.name == "_delta":
+                    proj.append(F.lit(0.0).cast(f.dataType).alias("_delta"))
+                else:  # static vertex attrs: NULL for spawned vertices
+                    proj.append(F.lit(None).cast(f.dataType).alias(f.name))
+            adds = (
+                upd.select(spawned)
+                .select(*proj)
+                .dropDuplicates(["id"])
+                # upsert semantics: an existing id keeps its row
+                .join(new.select("id"), "id", "left_anti")
+            )
+            new = new.unionByName(adds)
+        return StepResult(state=new, messages=msgs)
+
+    return superstep
+
+
+def _kernel_column(kernel: Callable, attr_cols: list[str]) -> Column:
     """Wrap a pandas update kernel as a vectorized (Arrow-batched) UDF
-    over the joined (id, value, msg, attrs) frame."""
+    over the joined (id, value, msg, attrs) columns."""
     import pandas as pd  # noqa: F401
     from pyspark.sql.functions import pandas_udf
 

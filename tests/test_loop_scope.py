@@ -1,0 +1,169 @@
+"""The shared loop prologue (``superstep.loop_scope``) and the loop's
+loud failure modes: cached loop-invariant frames are freed when a
+superstep raises, a superstep that drops its message count is refused,
+and the py4j fast paths warn instead of falling back silently."""
+
+import importlib
+import warnings
+
+import pytest
+from pyspark.sql import functions as F
+
+from linkgraph.superstep import (
+    StepResult,
+    iterate,
+    local_checkpoint_fresh_stats,
+    loop_scope,
+    release_local_checkpoint,
+)
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_scope_partitions_and_frees_on_error(spark, webmap_edges):
+    from linkgraph.graph import choose_partitions
+
+    webmap_edges.count()
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="inside the scope"):
+        with loop_scope(webmap_edges, scale=2) as scope:
+            assert scope.p == choose_partitions(webmap_edges, 2 * webmap_edges.count())
+            adj = scope.cache(webmap_edges.repartition(scope.p, "src"))
+            assert adj.storageLevel.useMemory
+            assert _persistent_rdds(spark) - before
+            verts = scope.vertices()
+            assert sorted(r["id"] for r in verts.collect()) == list(range(20))
+            raise RuntimeError("inside the scope")
+    assert _persistent_rdds(spark) <= before
+
+
+def _run_pagerank(edges):
+    from linkgraph import pagerank
+
+    return pagerank(edges, fixed_updates=4, num_partitions=2)
+
+
+def _run_cc(edges):
+    from linkgraph import connected_components
+
+    return connected_components(edges, num_partitions=2)
+
+
+def _run_vertex_program(edges):
+    from linkgraph import katz_centrality
+
+    return katz_centrality(edges, fixed_updates=4, num_partitions=2)
+
+
+@pytest.mark.parametrize(
+    "module_name, run",
+    [
+        ("linkgraph.algorithms.pagerank", _run_pagerank),
+        ("linkgraph.algorithms.cc", _run_cc),
+        ("linkgraph.vertex_program", _run_vertex_program),
+    ],
+    ids=["pagerank", "cc", "run_vertex_program"],
+)
+def test_failed_superstep_leaves_no_cached_frame(
+    spark, webmap_edges, monkeypatch, module_name, run
+):
+    """A superstep that raises at k=2 must not leak the cached adjacency
+    (nor the loop state) into executor storage."""
+    module = importlib.import_module(module_name)
+    real_iterate = module.iterate
+
+    def failing_iterate(init, superstep_fn, *args, **kwargs):
+        def step(state, k):
+            if k == 2:
+                raise RuntimeError("injected superstep failure")
+            return superstep_fn(state, k)
+
+        return real_iterate(init, step, *args, **kwargs)
+
+    monkeypatch.setattr(module, "iterate", failing_iterate)
+    webmap_edges.count()  # cached before the persistent-RDD baseline
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="injected superstep failure"):
+        run(webmap_edges)
+    assert _persistent_rdds(spark) <= before
+
+
+def test_messages_without_count_are_refused(spark, webmap_edges):
+    from linkgraph.graph import vertices_from_edges
+
+    verts = vertices_from_edges(webmap_edges)
+
+    def step(state, k):
+        msgs = (
+            webmap_edges.join(state, webmap_edges["src"] == state["id"])
+            .groupBy(F.col("dst").alias("id"))
+            .count()
+        )
+        return StepResult(state=state.select("id"), messages=msgs)
+
+    with pytest.raises(ValueError, match="_msgs"):
+        iterate(verts, step, converged=lambda s: False, max_supersteps=2, num_partitions=2)
+    # without message tracking the same superstep runs
+    res = iterate(
+        verts,
+        step,
+        converged=lambda s: False,
+        max_supersteps=2,
+        num_partitions=2,
+        track_messages=False,
+    )
+    assert res.supersteps == 2
+    assert all(m.messages == 0 for m in res.history)
+
+
+def _analyzed(df):
+    return df._jdf.queryExecution().analyzed()
+
+
+def _has_origin_stats(df):
+    """Without origin stats a LogicalRDD estimates as the session's
+    ``spark.sql.defaultSizeInBytes``; with them, as its origin plan."""
+    spark = df.sparkSession
+    default = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    return _analyzed(df).stats().sizeInBytes() != default
+
+
+def test_fresh_stats_fast_path_runs(spark, webmap_edges):
+    """On the installed Spark the LogicalRDD is rebuilt without the
+    origin plan's statistics, and nothing warns."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        out = local_checkpoint_fresh_stats(webmap_edges.select("src", "dst"))
+        assert _analyzed(out).getClass().getSimpleName() == "LogicalRDD"
+        assert not _has_origin_stats(out)
+        release_local_checkpoint(out)
+    # the plain checkpoint carries them, so the assertion above has teeth
+    plain = webmap_edges.select("src", "dst").localCheckpoint()
+    assert _has_origin_stats(plain)
+    release_local_checkpoint(plain)
+
+
+def test_fresh_stats_failure_warns_and_keeps_frame(spark, webmap_edges, monkeypatch):
+    import linkgraph.superstep as superstep
+
+    def broken_dataframe(*args, **kwargs):
+        raise RuntimeError("injected LogicalRDD rebuild failure")
+
+    monkeypatch.setattr(superstep, "DataFrame", broken_dataframe)
+    with pytest.warns(RuntimeWarning, match="injected LogicalRDD rebuild failure"):
+        out = local_checkpoint_fresh_stats(webmap_edges.select("src", "dst"))
+    assert _analyzed(out).getClass().getSimpleName() == "LogicalRDD"
+    assert _has_origin_stats(out)
+    assert out.count() == webmap_edges.count()
+
+
+def test_release_failure_warns(spark):
+    class NotAFrame:
+        @property
+        def _jdf(self):
+            raise RuntimeError("injected release failure")
+
+    with pytest.warns(RuntimeWarning, match="injected release failure"):
+        release_local_checkpoint(NotAFrame())

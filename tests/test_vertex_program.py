@@ -19,28 +19,31 @@ def _rows(df, *cols):
 
 class TestSsspViaVertexProgram:
     def test_matches_builtin_sssp(self, spark, webmap_edges):
-        from linkgraph import shortest_paths, shortest_paths_vp
+        from oracles import sssp_oracle
 
-        got, _ = shortest_paths_vp(webmap_edges, source=0)
-        want, _ = shortest_paths(webmap_edges, source=0)
-        assert _rows(got, "id", "distance") == _rows(want, "id", "distance")
+        from linkgraph import shortest_paths
+        from linkgraph.synth import WEBMAP, adjacency_to_edges
+
+        got, _ = shortest_paths(webmap_edges, source=0)
+        want = sssp_oracle(adjacency_to_edges(WEBMAP), set(range(20)), 0)
+        assert dict(_rows(got, "id", "distance")) == want
 
     def test_weighted(self, spark):
-        from linkgraph import shortest_paths_vp
+        from linkgraph import shortest_paths
 
         edges = spark.createDataFrame(
             [(0, 1, 5.0), (0, 2, 1.0), (2, 1, 1.0), (1, 3, 1.0)],
             "src long, dst long, w double",
         )
-        got, _ = shortest_paths_vp(edges, source=0, weight_col="w")
+        got, _ = shortest_paths(edges, source=0, weight_col="w")
         d = dict(_rows(got, "id", "distance"))
         assert d == {0: 0.0, 1: 2.0, 2: 1.0, 3: 3.0}
 
     def test_unreachable_is_null(self, spark):
-        from linkgraph import shortest_paths_vp
+        from linkgraph import shortest_paths
 
         edges = spark.createDataFrame([(0, 1), (2, 3)], "src long, dst long")
-        got, _ = shortest_paths_vp(edges, source=0)
+        got, _ = shortest_paths(edges, source=0)
         d = dict(_rows(got, "id", "distance"))
         assert d[0] == 0.0 and d[1] == 1.0
         assert d[2] is None and d[3] is None
@@ -169,10 +172,10 @@ class TestUserDefinedPrograms:
         assert got_d == want_d
 
     def test_metrics_and_checkpoint(self, spark, webmap_edges, tmp_path):
-        from linkgraph import CheckpointManager, shortest_paths_vp
+        from linkgraph import CheckpointManager, shortest_paths
 
         ck = CheckpointManager(spark, str(tmp_path / "vp"), every=1)
-        _, res = shortest_paths_vp(webmap_edges, source=0, ckpt=ck)
+        _, res = shortest_paths(webmap_edges, source=0, ckpt=ck)
         assert res.supersteps >= 1
         assert all(m.messages is not None for m in res.history)
         assert ck.committed_supersteps()
