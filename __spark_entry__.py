@@ -2800,6 +2800,7 @@ def _q_maintained_stream(spark, sf):
     that two folds committed and that the incrementally maintained
     state equals the from-scratch answer."""
     import os
+    import shutil
     import tempfile
 
     from linkgraph.streaming import (
@@ -2808,23 +2809,27 @@ def _q_maintained_stream(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="mstream_gate_")
-    ingest = os.path.join(base, "ingest")
-    os.makedirs(ingest)
-    state = os.path.join(base, "state")
-    ck = os.path.join(base, "ck")
-    edges = document_edges(spark, sf)
-    key = (F.col("src") + F.col("dst")) % 3
-    edges.filter(key != 0).coalesce(1).write.parquet(os.path.join(ingest, "b1"))
-    maintained_graph_stream(spark, ingest + "/*", state, ck)
-    edges.filter(key == 0).coalesce(1).write.parquet(os.path.join(ingest, "b2"))
-    maintained_graph_stream(spark, ingest + "/*", state, ck)
-    _, labels, tri, epoch = read_maintained_state(spark, state)
-    return labels.select(
-        "id",
-        "component",
-        F.lit(int(tri)).cast("long").alias("total_triangles"),
-        F.lit(int(epoch)).cast("long").alias("epoch"),
-    )
+    try:
+        ingest = os.path.join(base, "ingest")
+        os.makedirs(ingest)
+        state = os.path.join(base, "state")
+        ck = os.path.join(base, "ck")
+        edges = document_edges(spark, sf)
+        key = (F.col("src") + F.col("dst")) % 3
+        edges.filter(key != 0).coalesce(1).write.parquet(os.path.join(ingest, "b1"))
+        maintained_graph_stream(spark, ingest + "/*", state, ck)
+        edges.filter(key == 0).coalesce(1).write.parquet(os.path.join(ingest, "b2"))
+        maintained_graph_stream(spark, ingest + "/*", state, ck)
+        _, labels, tri, epoch = read_maintained_state(spark, state)
+        # materialized before the state tree goes
+        return labels.select(
+            "id",
+            "component",
+            F.lit(int(tri)).cast("long").alias("total_triangles"),
+            F.lit(int(epoch)).cast("long").alias("epoch"),
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def _q_cut_duplicate_spans(spark, sf):

@@ -30,25 +30,22 @@ bit_or combine exchange per superstep, and max_h supersteps total
 (effective diameters of web/repo graphs are ~6-20). Early stop: when
 no sketch changes the fixpoint is reached and remaining depths repeat
 the converged row without running jobs.
+
+Both loops here (:func:`neighborhood_function` and the HyperBall
+accumulator loop behind harmonic/closeness) run on
+:func:`~linkgraph.superstep.iterate` and share one sketch-union
+superstep (:func:`_sketch_union`): one depth is one superstep, i.e. ONE
+SQL execution, with the per-depth sums riding it as global aggregates.
 """
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..metrics import SuperstepMetrics
 from ..partitioning import build_adjacency, symmetrize
 from ..phash import md5_digits_spark_sql
-from ..superstep import (
-    LoopResult,
-    local_checkpoint_fresh_stats,
-    iteration_conf,
-    loop_scope,
-    release_local_checkpoint,
-)
+from ..superstep import LoopResult, StepResult, iterate, loop_scope
 
 FM_PHI = 0.77351
 
@@ -90,6 +87,27 @@ def anf_init_bit_sql(i: int, seed: int, portable: bool) -> str:
     return f"shiftleft(CAST(1 AS BIGINT), LEAST({_tz_sql(h)}, 62))"
 
 
+def _sketch_union(adj: DataFrame, state: DataFrame, num_maps: int, *keep: str) -> DataFrame:
+    """One sketch-union superstep: scatter every vertex's bitmaps along
+    its out-edges, ``bit_or``-combine them per target, and OR the result
+    into the target's own bitmaps. Returns (id, s0..s{K-1}, *keep,
+    _changed), where ``_changed`` flags a vertex whose sketch grew."""
+    s_cols = [f"s{i}" for i in range(num_maps)]
+    msgs = (
+        adj.join(state, F.expr("src = id"))
+        .selectExpr("explode(dsts) AS id", *s_cols)
+        .groupBy("id")
+        .agg(*[F.expr(f"bit_or({c}) AS m{i}") for i, c in enumerate(s_cols)])
+    )
+    merged = [f"(s{i} | COALESCE(m{i}, CAST(0 AS BIGINT)))" for i in range(num_maps)]
+    return state.join(msgs, "id", "left_outer").selectExpr(
+        "id",
+        *[f"{m} AS {c}" for m, c in zip(merged, s_cols)],
+        *keep,
+        "(" + " OR ".join(f"{m} <> {c}" for m, c in zip(merged, s_cols)) + ") AS _changed",
+    )
+
+
 def neighborhood_function(
     edges: DataFrame,
     num_maps: int = 16,
@@ -110,26 +128,24 @@ def neighborhood_function(
     sums per-vertex micro-units exactly, so both engines agree despite
     float addition order; fast mode sums doubles).
 
+    Each depth is one :func:`~linkgraph.superstep.iterate` superstep;
+    both per-depth sums ride its materialization as global aggregates.
     ``LoopResult.state`` holds the final per-vertex sketches
     (id, s0..s{K-1}); ``history[j].extras`` carries each depth's
     (sum_rank, est).
     """
     K = num_maps
-    spark = edges.sparkSession
     scale = 2 if symmetrize_edges else 1
     e = symmetrize(edges) if symmetrize_edges else edges.select("src", "dst")
-    with loop_scope(edges, num_partitions, scale) as scope, iteration_conf(spark, scope.p):
+    with loop_scope(edges, num_partitions, scale) as scope:
         p = scope.p
-        verts = scope.vertices(vertices)
         adj = scope.cache(build_adjacency(e, num_partitions=p))
-
-        s_cols = [f"s{i}" for i in range(K)]
-        init = verts.selectExpr(
+        init = scope.vertices(vertices).selectExpr(
             "id",
             *[f"{anf_init_bit_sql(i, seed, portable)} AS s{i}" for i in range(K)],
         )
 
-        rank_sum = " + ".join(f"({_rank_sql(c)})" for c in s_cols)
+        rank_sum = " + ".join(f"({_rank_sql(f's{i}')})" for i in range(K))
         est_raw = (
             f"POW(CAST(2 AS DOUBLE), ({rank_sum}) / CAST({K} AS DOUBLE))"
             f" / {FM_PHI!r}D"
@@ -145,71 +161,29 @@ def neighborhood_function(
             est_sql = f"SUM(CAST(ROUND({est_raw} * 1000000.0, 0) AS BIGINT))"
         else:
             est_sql = f"ROUND(SUM({est_raw}), 4) * 1000000.0"
-        obs_rank = F.expr(f"SUM({rank_sum})")
-        obs_est = F.expr(est_sql)
-        obs_changed = F.expr("SUM(CAST(_anf_changed AS BIGINT))")
 
-        state = init.localCheckpoint(eager=True)
-        history: list[SuperstepMetrics] = []
-        rows_out: list[tuple[int, int, float]] = []
-        converged = False
-        supersteps = 0
-        for h in range(1, max_h + 1):
-            t0 = time.monotonic()
-            scattered = adj.join(state, F.expr("src = id")).selectExpr(
-                "explode(dsts) AS id", *s_cols
-            )
-            msgs = scattered.groupBy("id").agg(
-                *[F.expr(f"bit_or({c}) AS m{i}") for i, c in enumerate(s_cols)]
-            )
-            new = state.join(msgs, "id", "left_outer").selectExpr(
-                "id",
-                *[f"s{i} | COALESCE(m{i}, CAST(0 AS BIGINT)) AS s{i}" for i in range(K)],
-                "("
-                + " OR ".join(
-                    f"(s{i} | COALESCE(m{i}, CAST(0 AS BIGINT))) <> s{i}"
-                    for i in range(K)
-                )
-                + ") AS _anf_changed",
-            )
-            obs = Observation(f"anf-{h}")
-            nxt = local_checkpoint_fresh_stats(
-                new.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    obs_changed.alias("changed"),
-                    obs_rank.alias("sum_rank"),
-                    obs_est.alias("est"),
-                ).drop("_anf_changed")
-            )
-            row = obs.get
-            stats = SuperstepMetrics(superstep=h)
-            stats.rows = int(row["rows"])
-            stats.changed = int(row["changed"] or 0)
-            est_val = round(float(row["est"]) / 1_000_000.0, 6)
-            stats.extras = {"sum_rank": int(row["sum_rank"]), "est": est_val}
-            stats.wall_sec = time.monotonic() - t0
-            history.append(stats)
-            rows_out.append((h, int(row["sum_rank"]), est_val))
+        res = iterate(
+            init,
+            lambda state, h: StepResult(_sketch_union(adj, state, K)),
+            converged=lambda s: early_stop and s.changed == 0,
+            max_supersteps=max_h,
+            num_partitions=p,
+            global_aggs={"sum_rank": F.expr(f"SUM({rank_sum})"), "est": F.expr(est_sql)},
+        )
 
-            release_local_checkpoint(state)
-            state = nxt
-            supersteps = h
-            if early_stop and stats.changed == 0:
-                converged = True
-                # the fixpoint repeats: remaining depths are the same row
-                rows_out.extend(
-                    (hh, rows_out[-1][1], rows_out[-1][2])
-                    for hh in range(h + 1, max_h + 1)
-                )
-                break
-        else:
-            converged = history[-1].changed == 0 if history else True
-
-    out = spark.createDataFrame(
+    rows_out = []
+    for stats in res.history:
+        est = round(float(stats.extras["est"]) / 1_000_000.0, 6)
+        stats.extras = {"sum_rank": int(stats.extras["sum_rank"]), "est": est}
+        rows_out.append((stats.superstep, stats.extras["sum_rank"], est))
+    # after an early stop the fixpoint repeats: remaining depths are the same row
+    for h in range(len(rows_out) + 1, max_h + 1):
+        rows_out.append((h, *rows_out[-1][1:]))
+    out = edges.sparkSession.createDataFrame(
         rows_out, "h BIGINT, sum_rank BIGINT, n_reachable_est DOUBLE"
     )
-    return out, LoopResult(state, supersteps, history, converged)
+    converged = not res.history or res.history[-1].changed == 0
+    return out, LoopResult(res.state, res.supersteps, res.history, converged)
 
 
 def effective_diameter(
@@ -316,13 +290,11 @@ def _ball_delta_loop(
     alternative to all-pairs BFS.
     """
     K = num_maps
-    spark = edges.sparkSession
     scale = 2 if symmetrize_edges else 1
     accs = list(acc_weights)
     e = symmetrize(edges) if symmetrize_edges else edges.select("src", "dst")
-    with loop_scope(edges, num_partitions, scale) as scope, iteration_conf(spark, scope.p):
+    with loop_scope(edges, num_partitions, scale) as scope:
         p = scope.p
-        verts = scope.vertices(vertices)
         adj = scope.cache(build_adjacency(e, num_partitions=p))
 
         s_cols = [f"s{i}" for i in range(K)]
@@ -332,7 +304,7 @@ def _ball_delta_loop(
             f" / CAST({K} AS DOUBLE)) / {FM_PHI!r}) * 1000000.0, 0) AS BIGINT)"
         )
 
-        init = verts.selectExpr(
+        init = scope.vertices(vertices).selectExpr(
             "id",
             *[f"{anf_init_bit_sql(i, seed, portable)} AS s{i}" for i in range(K)],
         ).selectExpr(
@@ -342,43 +314,10 @@ def _ball_delta_loop(
             *[f"CAST(0 AS BIGINT) AS {a}" for a in accs],
         )
 
-        state = init.localCheckpoint(eager=True)
-        history: list[SuperstepMetrics] = []
-        converged = False
-        supersteps = 0
-        for h in range(1, max_h + 1):
-            t0 = time.monotonic()
-            scattered = adj.join(state, F.expr("src = id")).selectExpr(
-                "explode(dsts) AS id", *s_cols
-            )
-            msgs = scattered.groupBy("id").agg(
-                *[F.expr(f"bit_or({c}) AS m{i}") for i, c in enumerate(s_cols)]
-            )
-            merged_cols = [
-                f"s{i} | COALESCE(m{i}, CAST(0 AS BIGINT)) AS s{i}"
-                for i in range(K)
-            ]
-            sketch_changed = "(" + " OR ".join(
-                f"(s{i} | COALESCE(m{i}, CAST(0 AS BIGINT))) <> s{i}"
-                for i in range(K)
-            ) + ")"
-            new = (
-                state.join(msgs, "id", "left_outer")
-                .selectExpr(
-                    "id",
-                    *merged_cols,
-                    "eu",
-                    *accs,
-                    f"CAST({sketch_changed} AS BIGINT) AS _sk_changed",
-                )
-                .selectExpr(
-                    "id",
-                    *s_cols,
-                    f"{est_units} AS _eu_new",
-                    "eu",
-                    *accs,
-                    "_sk_changed",
-                )
+        def superstep(state: DataFrame, h: int) -> StepResult:
+            return StepResult(
+                _sketch_union(adj, state, K, "eu", *accs)
+                .selectExpr("id", *s_cols, f"{est_units} AS _eu_new", "eu", *accs, "_changed")
                 .selectExpr(
                     "id",
                     *s_cols,
@@ -388,37 +327,23 @@ def _ball_delta_loop(
                         f" * CAST({acc_weights[a][h - 1]} AS BIGINT) AS {a}"
                         for a in accs
                     ],
-                    "_sk_changed",
+                    "_changed",
                 )
             )
-            obs = Observation(f"ball-{h}")
-            nxt = local_checkpoint_fresh_stats(
-                new.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    F.expr("SUM(_sk_changed)").alias("changed"),
-                ).drop("_sk_changed")
-            )
-            row = obs.get
-            stats = SuperstepMetrics(superstep=h)
-            stats.rows = int(row["rows"])
-            stats.changed = int(row["changed"] or 0)
-            stats.wall_sec = time.monotonic() - t0
-            history.append(stats)
-            release_local_checkpoint(state)
-            state = nxt
-            supersteps = h
-            # exact early stop: convergence is tracked on the raw
-            # SKETCHES (not the rounded estimate) — once no bitmap
-            # changes, every future delta is zero and the truncated
-            # accumulation equals the full max_h unroll
-            if stats.changed == 0:
-                converged = True
-                break
-        else:
-            converged = True
 
-    return state, LoopResult(state, supersteps, history, converged)
+        # exact early stop: convergence is tracked on the raw SKETCHES
+        # (not the rounded estimate) — once no bitmap changes, every
+        # future delta is zero and the truncated accumulation equals the
+        # full max_h unroll
+        res = iterate(
+            init,
+            superstep,
+            converged=lambda s: s.changed == 0,
+            max_supersteps=max_h,
+            num_partitions=p,
+        )
+
+    return res.state, LoopResult(res.state, res.supersteps, res.history, True)
 
 
 def harmonic_centrality(

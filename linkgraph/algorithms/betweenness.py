@@ -23,6 +23,11 @@ Phases (Brandes 2001, "A Faster Algorithm for Betweenness Centrality"):
    (1 + delta(w)). Each level joins the current level's deltas to its
    predecessor level through the edge relation and sums per (s, v).
 
+Both passes run on :func:`~linkgraph.superstep.iterate` (one SQL
+execution per level) inside one loop scope, so the backward levels
+join the same cached adjacency as the forward ones. ``history``
+numbers the backward levels after the forward rounds.
+
 Integer-exact accumulation (the oracle contract): deltas are kept in
 micro-units (BIGINT, 1.0 == 1_000_000). Each backward TERM is rounded
 to integer units before summing, so every SUM in both phases is an
@@ -47,17 +52,14 @@ join + §3.4 combine shapes).
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..metrics import SuperstepMetrics
 from ..partitioning import symmetrize
 from ..superstep import (
     LoopResult,
-    local_checkpoint_fresh_stats,
-    iteration_conf,
+    StepResult,
+    iterate,
     loop_scope,
     release_local_checkpoint,
 )
@@ -91,7 +93,6 @@ def betweenness_centrality(
     """
     if not sources:
         raise ValueError("sources must be non-empty")
-    spark = edges.sparkSession
     scale = 2 if symmetrize_edges else 1
     e = (
         symmetrize(edges)
@@ -99,28 +100,12 @@ def betweenness_centrality(
         else edges.select("src", "dst").distinct()
     )
 
-    history: list[SuperstepMetrics] = []
-    with loop_scope(edges, num_partitions, scale) as scope, iteration_conf(spark, scope.p):
+    with loop_scope(edges, num_partitions, scale) as scope:
         p = scope.p
         adj = scope.cache(e.repartition(p, "src"))
 
-        src_df = spark.createDataFrame([(int(s),) for s in sources], "s long")
-        dag = (
-            src_df.selectExpr(
-                "s",
-                "s AS v",
-                "CAST(0 AS INT) AS dist",
-                "CAST(1 AS BIGINT) AS sigma",
-            )
-            .repartition(p, "v")
-            .localCheckpoint(eager=True)
-        )
-
         # ---- forward: grow the shortest-path DAG level by level ----
-        depth = 0
-        converged = False
-        for d in range(1, max_depth + 1):
-            t0 = time.monotonic()
+        def forward(dag: DataFrame, d: int) -> StepResult:
             frontier = dag.filter(F.col("dist") == d - 1)
             cand = (
                 frontier.alias("f")
@@ -133,43 +118,28 @@ def betweenness_centrality(
                 .join(dag.alias("g"), ["s", "v"], "left_anti")
                 .selectExpr("s", "v", f"CAST({d} AS INT) AS dist", "sigma")
             )
-            obs = Observation(f"bc-fwd-{d}")
-            nxt = local_checkpoint_fresh_stats(
-                dag.unionByName(lvl).observe(
-                    obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    F.sum((F.col("dist") == d).cast("long")).alias("new"),
-                )
-            )
-            row = obs.get
-            stats = SuperstepMetrics(superstep=d)
-            stats.rows = int(row["rows"])
-            stats.changed = int(row["new"] or 0)
-            stats.wall_sec = time.monotonic() - t0
-            history.append(stats)
-            release_local_checkpoint(dag)
-            dag = nxt
-            if stats.changed == 0:
-                converged = True
-                break
-            depth = d
-        else:
-            # ran all max_depth levels; complete only if the last
-            # level added nothing (checked above) — it did not
-            converged = False
+            return StepResult(dag.unionByName(lvl).withColumn("_changed", F.col("dist") == d))
 
-    # ---- backward: dependency accumulation, deepest level first ----
-    # delta rows: (s, v, du BIGINT micro-units); deepest level = 0.
-    # Each term ROUNDs to integer units before the SUM, keeping every
-    # aggregate integer-exact (order-independent).
-    with iteration_conf(spark, p):
-        deltas = (
-            dag.filter(F.col("dist") == depth)
-            .selectExpr("s", "v", "dist", "sigma", "CAST(0 AS BIGINT) AS du")
-            .localCheckpoint(eager=True)
+        src_df = edges.sparkSession.createDataFrame([(int(s),) for s in sources], "s long")
+        fwd = iterate(
+            src_df.selectExpr(
+                "s", "s AS v", "CAST(0 AS INT) AS dist", "CAST(1 AS BIGINT) AS sigma"
+            ).repartition(p, "v"),
+            forward,
+            converged=lambda s: s.changed == 0,
+            max_supersteps=max_depth,
+            num_partitions=p,
         )
-        for d in range(depth, 0, -1):
-            t0 = time.monotonic()
+        dag = fwd.state
+        # the level that added nothing is not a DAG level
+        depth = fwd.supersteps - int(fwd.converged)
+
+        # ---- backward: dependency accumulation, deepest level first ----
+        # delta rows: (s, v, du BIGINT micro-units); deepest level = 0.
+        # Each term ROUNDs to integer units before the SUM, keeping every
+        # aggregate integer-exact (order-independent).
+        def backward(deltas: DataFrame, k: int) -> StepResult:
+            d = depth - k + 1
             cur = deltas.filter(F.col("dist") == d).alias("w")
             prev = dag.filter(F.col("dist") == d - 1).alias("u")
             contrib = (
@@ -201,33 +171,41 @@ def betweenness_centrality(
                     "COALESCE(c, CAST(0 AS BIGINT)) AS du",
                 )
             )
-            obs = Observation(f"bc-bwd-{d}")
-            nxt = local_checkpoint_fresh_stats(
-                deltas.unionByName(lvl).observe(
-                    obs, F.count(F.lit(1)).alias("rows")
-                )
-            )
-            stats = SuperstepMetrics(superstep=depth + (depth - d) + 1)
-            stats.rows = int(obs.get["rows"])
-            stats.wall_sec = time.monotonic() - t0
-            history.append(stats)
-            release_local_checkpoint(deltas)
-            deltas = nxt
+            return StepResult(deltas.unionByName(lvl))
 
-        bc = deltas.filter(F.col("dist") >= 1).groupBy(
-            F.col("v").alias("id")
-        ).agg(F.sum("du").alias("bc"))
-        if vertices is not None:
-            bc = (
-                vertices.select("id")
-                .join(bc, "id", "left_outer")
-                .selectExpr("id", "COALESCE(bc, CAST(0 AS BIGINT)) AS bc")
+        bwd = None
+        try:
+            bwd = iterate(
+                dag.filter(F.col("dist") == depth).selectExpr(
+                    "s", "v", "dist", "sigma", "CAST(0 AS BIGINT) AS du"
+                ),
+                backward,
+                converged=lambda s: False,
+                max_supersteps=depth,
+                num_partitions=p,
             )
-        out = bc.selectExpr(
-            "id",
-            "bc AS betweenness_units",
-            f"CAST(bc AS DOUBLE) / {UNIT}.0 AS betweenness_est",
+        finally:
+            # the DAG is dead once a backward level has materialized (or
+            # the pass failed); with depth 0 the result still reads it
+            if bwd is None or bwd.history:
+                release_local_checkpoint(dag)
+
+    bc = bwd.state.filter(F.col("dist") >= 1).groupBy(
+        F.col("v").alias("id")
+    ).agg(F.sum("du").alias("bc"))
+    if vertices is not None:
+        bc = (
+            vertices.select("id")
+            .join(bc, "id", "left_outer")
+            .selectExpr("id", "COALESCE(bc, CAST(0 AS BIGINT)) AS bc")
         )
-
-    supersteps = len(history)
-    return out, LoopResult(out, supersteps, history, converged)
+    out = bc.selectExpr(
+        "id",
+        "bc AS betweenness_units",
+        f"CAST(bc AS DOUBLE) / {UNIT}.0 AS betweenness_est",
+    )
+    # backward levels are numbered after the forward ones
+    for stats in bwd.history:
+        stats.superstep += fwd.supersteps
+    history = fwd.history + bwd.history
+    return out, LoopResult(out, len(history), history, fwd.converged)

@@ -27,19 +27,17 @@ superstep scatter; monotone min makes this exact. Messages combine via
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
 from ..graph import choose_partitions, vertices_from_edges
-from ..metrics import SuperstepMetrics
 from ..partitioning import build_adjacency, symmetrize
 from ..superstep import (
     LoopResult,
     StepResult,
     iterate,
     iteration_conf,
-    local_checkpoint_fresh_stats,
     loop_scope,
     release_local_checkpoint,
 )
@@ -181,10 +179,11 @@ def connected_components_hashmin(
     component label is the minimum vertex id, so the two engines are
     mutually checking and share one oracle.
 
-    Each round runs as ONE SQL execution (both phases compose lazily
-    into the round's ``localCheckpoint``; the edge count and two
-    independent bit_xor(xxhash64) set-checksums ride it as observed
-    metrics).
+    Each round is one :func:`~linkgraph.superstep.iterate` superstep,
+    so ONE SQL execution (both phases compose lazily into the round's
+    checkpoint; the edge count and two independent bit_xor(xxhash64)
+    set-checksums ride it as global aggregates, kept in
+    ``history[j].extras``).
     Fixpoint detection = (count, checksum, checksum') stable across a
     round; the edge relation at fixpoint is exactly the star set, from
     which labels read off with one groupBy(min).
@@ -192,104 +191,104 @@ def connected_components_hashmin(
     Returns (DF(id, component), LoopResult) — LoopResult.history rows
     carry the per-round edge-relation size in ``rows``.
     """
-    spark = edges.sparkSession
     p = choose_partitions(edges, lambda: 2 * edges.count(), num_partitions)
     if vertices is None:
         vertices = vertices_from_edges(edges)
     verts = vertices.select("id").repartition(p, "id")
 
-    history: list[SuperstepMetrics] = []
-    converged = False
-    rounds = 0
-    import time as _time
+    init = (
+        edges.select(
+            F.col("src").cast("long").alias("a"),
+            F.col("dst").cast("long").alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .select(F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo"))
+        .distinct()
+    )
+    large_held: list[DataFrame] = []
 
-    with iteration_conf(spark, p):
-        e = (
-            edges.select(
-                F.col("src").cast("long").alias("a"),
-                F.col("dst").cast("long").alias("b"),
-            )
-            .filter(F.col("a") != F.col("b"))
-            .select(F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo"))
+    def superstep(e: DataFrame, k: int) -> StepResult:
+        # last round's large-star edges are dead once its state exists
+        while large_held:
+            large_held.pop().unpersist()
+        # ---- large-star: every neighbor above u links to u's min ----
+        nbrs = e.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionAll(
+            e.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
+        )
+        lmins = nbrs.groupBy("u").agg(F.min("v").alias("nmin"))
+        lmins = lmins.select("u", F.least("u", "nmin").alias("m"))
+        large = (
+            nbrs.join(lmins, "u")
+            .filter(F.col("v") > F.col("u"))
+            # v > u >= m, so (v, m) is already in canonical hi > lo form
+            .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
             .distinct()
-            .localCheckpoint(eager=True)
+            # the small-star phase references large TWICE (its own
+            # min aggregate + the join back); without a cache the
+            # whole large-star subtree (two exchanges) re-executes
+            # per reference — AQE is off in-loop, so there is no
+            # ReusedExchange to rescue it
+            .persist()
         )
-        prev_sig = None
-        for k in range(1, max_rounds + 1):
-            t0 = _time.monotonic()
-            # ---- large-star: every neighbor above u links to u's min ----
-            nbrs = e.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionAll(
-                e.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-            )
-            lmins = nbrs.groupBy("u").agg(F.min("v").alias("nmin"))
-            lmins = lmins.select("u", F.least("u", "nmin").alias("m"))
-            large = (
-                nbrs.join(lmins, "u")
-                .filter(F.col("v") > F.col("u"))
-                # v > u >= m, so (v, m) is already in canonical hi > lo form
-                .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-                .distinct()
-                # the small-star phase references large TWICE (its own
-                # min aggregate + the join back); without a cache the
-                # whole large-star subtree (two exchanges) re-executes
-                # per reference — AQE is off in-loop, so there is no
-                # ReusedExchange to rescue it
-                .persist()
-            )
-            # ---- small-star: smaller neighbors (and u) link to the min ----
-            smins = large.groupBy("hi").agg(F.min("lo").alias("m"))
-            joined = large.join(smins, "hi")
-            new_e = (
-                joined.filter(F.col("lo") != F.col("m"))
-                # m = min over hi's smaller neighbors, so m < lo here
-                .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
-                .unionAll(smins.select("hi", F.col("m").alias("lo")))
-                .distinct()
-            )
+        large_held.append(large)
+        # ---- small-star: smaller neighbors (and u) link to the min ----
+        smins = large.groupBy("hi").agg(F.min("lo").alias("m"))
+        joined = large.join(smins, "hi")
+        return StepResult(
+            joined.filter(F.col("lo") != F.col("m"))
+            # m = min over hi's smaller neighbors, so m < lo here
+            .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
+            .unionAll(smins.select("hi", F.col("m").alias("lo")))
+            .distinct()
+        )
 
-            obs = Observation(f"hashmin-{k}")
-            planned = new_e.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                # bit_xor: order-independent set checksum with no ANSI
-                # overflow (sum(xxhash64) throws under ansi.enabled)
-                F.expr("bit_xor(xxhash64(hi, lo))").alias("sig1"),
-                F.expr("bit_xor(xxhash64(lo, hi, 7L))").alias("sig2"),
-            )
-            nxt = local_checkpoint_fresh_stats(planned)
-            row = obs.get
-            sig = (int(row["rows"]), row["sig1"], row["sig2"])
+    prev_sig = None
 
-            stats = SuperstepMetrics(superstep=k)
-            stats.rows = sig[0]
-            stats.wall_sec = _time.monotonic() - t0
-            history.append(stats)
+    def stable(stats) -> bool:
+        nonlocal prev_sig
+        sig = (stats.rows, stats.extras["sig1"], stats.extras["sig2"])
+        done = sig == prev_sig or stats.rows == 0
+        prev_sig = sig
+        return done
 
+    try:
+        res = iterate(
+            init,
+            superstep,
+            stable,
+            max_supersteps=max_rounds,
+            num_partitions=p,
+            # bit_xor: order-independent set checksums with no ANSI
+            # overflow (sum(xxhash64) throws under ansi.enabled)
+            global_aggs={
+                "sig1": F.expr("bit_xor(xxhash64(hi, lo))"),
+                "sig2": F.expr("bit_xor(xxhash64(lo, hi, 7L))"),
+            },
+        )
+    finally:
+        for large in large_held:
             large.unpersist()
-            release_local_checkpoint(e)
-            e = nxt
-            rounds = k
-            if sig == prev_sig or sig[0] == 0:
-                converged = True
-                break
-            prev_sig = sig
 
-        # At fixpoint e is the star set (member, root): a vertex's label
-        # is its minimum neighbor if smaller than itself, else its own id
-        # (roots and isolated vertices).
-        nbr_min = (
-            e.select(F.col("hi").alias("id"), F.col("lo").alias("n"))
-            .unionAll(e.select(F.col("lo").alias("id"), F.col("hi").alias("n")))
-            .groupBy("id")
-            .agg(F.min("n").alias("nmin"))
-        )
-        labels = verts.join(nbr_min, "id", "left_outer").select(
-            "id",
-            F.least(F.col("id"), F.coalesce(F.col("nmin"), F.col("id"))).alias(
-                "component"
-            ),
-        )
+    # At fixpoint e is the star set (member, root): a vertex's label
+    # is its minimum neighbor if smaller than itself, else its own id
+    # (roots and isolated vertices).
+    e = res.state
+    nbr_min = (
+        e.select(F.col("hi").alias("id"), F.col("lo").alias("n"))
+        .unionAll(e.select(F.col("lo").alias("id"), F.col("hi").alias("n")))
+        .groupBy("id")
+        .agg(F.min("n").alias("nmin"))
+    )
+    labels = verts.join(nbr_min, "id", "left_outer").select(
+        "id",
+        F.least(F.col("id"), F.coalesce(F.col("nmin"), F.col("id"))).alias(
+            "component"
+        ),
+    )
+    with iteration_conf(edges.sparkSession, p):
         labels = labels.localCheckpoint(eager=True)
-        release_local_checkpoint(e)
+    # a round's checkpoint, or the persisted input if none ran
+    e.unpersist()
+    release_local_checkpoint(e)
 
-    return labels, LoopResult(labels, rounds, history, converged)
+    return labels, LoopResult(labels, res.supersteps, res.history, res.converged)

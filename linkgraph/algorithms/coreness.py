@@ -26,7 +26,9 @@ whole update a window + aggregate, all JVM-side integer ops. Two
 exchanges per superstep (message scatter, window repartition by
 vertex). The h-index is tie-order invariant, so the result is exact
 and engine-independent: the unrolled DuckDB oracle matches bit for
-bit.
+bit. Each round is one :func:`~linkgraph.superstep.iterate` superstep
+(one SQL execution); the state keeps its ``chg`` flag for the next
+round's frontier and exposes it as ``_changed`` for the stop rule.
 
 Convergence: typically O(sqrt(n)) worst case but ~10-20 supersteps on
 real web graphs; the loop stops at the first superstep where no value
@@ -40,21 +42,12 @@ are large but the sort is distributed per vertex id, not global.
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..graph import vertices_from_edges
-from ..metrics import SuperstepMetrics
 from ..partitioning import symmetrize
-from ..superstep import (
-    LoopResult,
-    local_checkpoint_fresh_stats,
-    iteration_conf,
-    loop_scope,
-    release_local_checkpoint,
-)
+from ..superstep import LoopResult, StepResult, iterate, loop_scope
 
 
 def core_decomposition(
@@ -67,7 +60,6 @@ def core_decomposition(
     """Per-vertex core numbers. Returns (DF(id, coreness BIGINT),
     LoopResult); isolated vertices get coreness 0. ``converged`` is
     True iff the fixpoint was reached within ``max_iters``."""
-    spark = edges.sparkSession
     scale = 2 if symmetrize_edges else 1
     if vertices is None:
         vertices = vertices_from_edges(edges)
@@ -79,10 +71,7 @@ def core_decomposition(
         else edges.select("src", "dst").distinct()
     ).filter(F.col("src") != F.col("dst"))
 
-    history: list[SuperstepMetrics] = []
-    converged = False
-    supersteps = 0
-    with loop_scope(edges, num_partitions, scale) as scope, iteration_conf(spark, scope.p):
+    with loop_scope(edges, num_partitions, scale) as scope:
         p = scope.p
         # DELTA PLAN: a vertex's h-index can only change if a
         # neighbor's value dropped, so each round recomputes H only for
@@ -98,7 +87,7 @@ def core_decomposition(
         radj = scope.cache(e.repartition(p, "dst"))
 
         deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
-        state = (
+        init = (
             vertices.select("id")
             .join(deg, F.col("id") == F.col("src"), "left_outer")
             # round 0 counts as changed everywhere: the first round
@@ -109,12 +98,11 @@ def core_decomposition(
                 "CAST(1 AS BIGINT) AS chg",
             )
             .repartition(p, "id")
-            .localCheckpoint(eager=True)
         )
 
         w = Window.partitionBy("dst").orderBy(F.desc("c"))
-        for it in range(1, max_iters + 1):
-            t0 = time.monotonic()
+
+        def superstep(state: DataFrame, it: int) -> StepResult:
             if it == 1:
                 # round 1 evaluates every vertex (init marks all
                 # changed): the full gather IS the affected set, so
@@ -141,34 +129,23 @@ def core_decomposition(
                 .groupBy("dst")
                 .agg(F.max(F.least("c", "rn")).alias("h"))
             )
-            new = (
+            return StepResult(
                 state.join(hidx, state.id == hidx.dst, "left_outer")
                 .selectExpr(
                     "id",
                     "LEAST(c, COALESCE(h, c)) AS c",
                     "CAST(c > LEAST(c, COALESCE(h, c)) AS BIGINT) AS chg",
                 )
+                .withColumn("_changed", F.col("chg") == 1)
             )
-            obs = Observation(f"coreness-{it}")
-            nxt = local_checkpoint_fresh_stats(
-                new.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    F.sum("chg").alias("changed"),
-                )
-            )
-            row = obs.get
-            stats = SuperstepMetrics(superstep=it)
-            stats.rows = int(row["rows"])
-            stats.changed = int(row["changed"] or 0)
-            stats.wall_sec = time.monotonic() - t0
-            history.append(stats)
-            release_local_checkpoint(state)
-            state = nxt
-            supersteps = it
-            if stats.changed == 0:
-                converged = True
-                break
 
-    out = state.selectExpr("id", "c AS coreness")
-    return out, LoopResult(out, supersteps, history, converged)
+        res = iterate(
+            init,
+            superstep,
+            converged=lambda s: s.changed == 0,
+            max_supersteps=max_iters,
+            num_partitions=p,
+        )
+
+    out = res.state.selectExpr("id", "c AS coreness")
+    return out, LoopResult(out, res.supersteps, res.history, res.converged)

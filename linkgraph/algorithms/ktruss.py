@@ -9,8 +9,9 @@ wedge join (algorithms/triangles.py) and fixpoint peeling
 (algorithms/.../kcore in examples.py) — but the ITERATION STATE is the
 edge relation, like `connected_components_hashmin`.
 
-Per round (one SQL execution: triangle enumeration + support count +
-filter compose lazily into the round's localCheckpoint):
+Per round (one :func:`~linkgraph.superstep.iterate` superstep, so one
+SQL execution: triangle enumeration + support count + filter compose
+lazily into the round's checkpoint):
 
     wedges  = E(x,y) JOIN E(y,z)           -- shuffle on the shared endpoint
     closed  = wedges SEMI-JOIN E ON (x,z)  -- triangles x<y<z, each found once
@@ -30,20 +31,12 @@ state, no driver-side data.
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import choose_partitions
-from ..metrics import SuperstepMetrics
 from ..partitioning import symmetrize
-from ..superstep import (
-    LoopResult,
-    local_checkpoint_fresh_stats,
-    iteration_conf,
-    release_local_checkpoint,
-)
+from ..superstep import LoopResult, StepResult, iterate
 
 
 def ktruss(
@@ -63,67 +56,49 @@ def ktruss(
     if k < 2:
         raise ValueError(f"k-truss needs k >= 2, got {k}")
     need = k - 2
-    spark = edges.sparkSession
     p = choose_partitions(edges, lambda: 2 * edges.count(), num_partitions)
+    init = (
+        symmetrize(edges)
+        .filter("src <> dst AND src < dst")
+        .selectExpr("src AS a", "dst AS b", "CAST(0 AS BIGINT) AS support")
+    )
 
-    history: list[SuperstepMetrics] = []
-    converged = False
-    rounds = 0
-    with iteration_conf(spark, p):
-        e = (
-            symmetrize(edges)
-            .filter("src <> dst AND src < dst")
-            .selectExpr("src AS a", "dst AS b")
-            .localCheckpoint(eager=True)
+    def superstep(kept: DataFrame, r: int) -> StepResult:
+        e = kept.select("a", "b")
+        tri = (
+            e.selectExpr("a AS x", "b AS y")
+            .join(e.selectExpr("a AS y", "b AS z"), "y")
+            .join(e.selectExpr("a AS x", "b AS z"), ["x", "z"], "left_semi")
         )
-        prev_n = None
-        kept = e.selectExpr("a", "b", "CAST(0 AS BIGINT) AS support")
-        for r in range(1, max_rounds + 1):
-            t0 = time.monotonic()
-            tri = (
-                e.selectExpr("a AS x", "b AS y")
-                .join(e.selectExpr("a AS y", "b AS z"), "y")
-                .join(e.selectExpr("a AS x", "b AS z"), ["x", "z"], "left_semi")
+        sup = (
+            tri.select(
+                F.explode(
+                    F.expr(
+                        "array(struct(x AS a, y AS b),"
+                        " struct(y AS a, z AS b),"
+                        " struct(x AS a, z AS b))"
+                    )
+                ).alias("ed")
             )
-            sup = (
-                tri.select(
-                    F.explode(
-                        F.expr(
-                            "array(struct(x AS a, y AS b),"
-                            " struct(y AS a, z AS b),"
-                            " struct(x AS a, z AS b))"
-                        )
-                    ).alias("ed")
-                )
-                .selectExpr("ed.a AS a", "ed.b AS b")
-                .groupBy("a", "b")
-                .agg(F.count(F.lit(1)).alias("support"))
-            )
-            obs = Observation(f"ktruss-{r}")
-            new_kept = local_checkpoint_fresh_stats(
-                e.join(sup, ["a", "b"], "left_outer")
-                .selectExpr("a", "b", "COALESCE(support, 0L) AS support")
-                .filter(F.col("support") >= need)
-                .observe(obs, F.count(F.lit(1)).alias("rows"))
-            )
-            n = int(obs.get["rows"])
+            .selectExpr("ed.a AS a", "ed.b AS b")
+            .groupBy("a", "b")
+            .agg(F.count(F.lit(1)).alias("support"))
+        )
+        return StepResult(
+            e.join(sup, ["a", "b"], "left_outer")
+            .selectExpr("a", "b", "COALESCE(support, 0L) AS support")
+            .filter(F.col("support") >= need)
+        )
 
-            stats = SuperstepMetrics(superstep=r)
-            stats.rows = n
-            stats.wall_sec = time.monotonic() - t0
-            history.append(stats)
+    prev_n = None
 
-            # whichever of (e, kept) roots the superseded LogicalRDD
-            # frees its blocks; the projection view is a no-op
-            release_local_checkpoint(e)
-            release_local_checkpoint(kept)
-            kept = new_kept
-            e = new_kept.select("a", "b")
-            rounds = r
-            if n == prev_n or n == 0:
-                converged = True
-                break
-            prev_n = n
+    def stable(stats) -> bool:
+        # monotone-decreasing edge set: count-stable is the fixpoint
+        nonlocal prev_n
+        done = stats.rows in (prev_n, 0)
+        prev_n = stats.rows
+        return done
 
-    out = kept.selectExpr("a AS src", "b AS dst", "support")
-    return out, LoopResult(out, rounds, history, converged)
+    res = iterate(init, superstep, stable, max_supersteps=max_rounds, num_partitions=p)
+    out = res.state.selectExpr("a AS src", "b AS dst", "support")
+    return out, LoopResult(out, res.supersteps, res.history, res.converged)

@@ -6,9 +6,10 @@ neighborhood trees are isomorphic. The per-vertex labels are the
 standard structural-role features (WL graph kernels, GNN
 expressiveness analysis), and the label histogram after k rounds is a
 graph fingerprint. The reference engine has no such operator but its
-compute() could express it; ours runs it as K rounds of the engine's
-gather shape (SURVEY.md §3.3/§3.4: per round ONE co-partitioned
-edge-join + ONE groupBy combine).
+compute() could express it; ours runs it as K
+:func:`~linkgraph.superstep.iterate` supersteps of the engine's gather
+shape (SURVEY.md §3.3/§3.4: per round ONE co-partitioned edge-join +
+ONE groupBy combine, one SQL execution).
 
 Round rule over the SYMMETRIZED graph (WL is defined on undirected
 neighborhoods):
@@ -49,7 +50,7 @@ from pyspark.sql import functions as F
 
 from ..partitioning import symmetrize
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
-from ..superstep import local_checkpoint_fresh_stats, loop_scope
+from ..superstep import StepResult, iterate, loop_scope
 
 WL_DIGITS = 14  # md5 hex digits per portable label (56 bits, BIGINT-exact)
 
@@ -86,13 +87,14 @@ def wl_refinement(
         deg = sym.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).cast("long").alias("_deg")
         )
-        state = (
+        init = (
             verts.join(deg, "id", "left")
             .select("id", F.coalesce("_deg", F.lit(0)).cast("long").alias("wl0"))
             .repartition(p, "id")
         )
-        cur = "wl0"
-        for k in range(1, rounds + 1):
+
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            cur = f"wl{k - 1}"
             nbr = (
                 sym.join(
                     state.select(F.col("id").alias("src"), F.col(cur).alias("_l")), "src"
@@ -104,18 +106,17 @@ def wl_refinement(
                     F.array_join(F.sort_array(F.collect_list("_l")), ",").alias("_nb")
                 )
             )
-            nxt = f"wl{k}"
             sig = f"concat(CAST({cur} AS STRING), ':', coalesce(_nb, ''))"
-            # state feeds both the gather and the label join, so without a
-            # cut the plan tree doubles per round — checkpoint each round
-            # (fresh stats, the house loop rule)
-            state = local_checkpoint_fresh_stats(
+            return StepResult(
                 state.join(nbr, "id", "left")
-                .withColumn(nxt, F.expr(_wl_hash_spark(sig, portable)))
+                .withColumn(f"wl{k}", F.expr(_wl_hash_spark(sig, portable)))
                 .drop("_nb")
             )
-            cur = nxt
-    return state
+
+        res = iterate(
+            init, superstep, lambda s: False, max_supersteps=rounds, num_partitions=p
+        )
+    return res.state
 
 
 def wl_class_sizes(labels: DataFrame, col: str) -> DataFrame:

@@ -138,3 +138,32 @@ class TestBetweenness:
         e = spark.createDataFrame(edges, "src long, dst long")
         out, res = betweenness_centrality(e, [0], max_depth=3)
         assert not res.converged
+
+    def test_backward_pass_reads_cached_adjacency(self, spark, webmap_edges, monkeypatch):
+        """History numbers run on from the forward pass into the backward
+        one, and each backward level joins the cached adjacency: 4
+        exchanges (rebuilding the symmetrized adjacency costs 6)."""
+        import importlib
+
+        import linkgraph.superstep as superstep
+        from tests.test_superstep_jobs import _loop_shape
+
+        real = superstep.local_checkpoint_fresh_stats
+        shapes = []
+
+        def recording(df, *args, **kwargs):
+            shapes.append(_loop_shape(df._jdf.queryExecution().executedPlan()))
+            return real(df, *args, **kwargs)
+
+        monkeypatch.setattr(superstep, "local_checkpoint_fresh_stats", recording)
+        monkeypatch.setattr(
+            importlib.import_module("linkgraph.algorithms.betweenness"),
+            "local_checkpoint_fresh_stats",
+            recording,
+            raising=False,
+        )
+        _, res = betweenness_centrality(webmap_edges, [0, 3], num_partitions=2)
+        assert [m.superstep for m in res.history] == list(range(1, 10))
+        # 4 DAG levels from [0, 3]: 5 forward rounds, then 4 backward
+        assert len(shapes) == 9
+        assert [ex for ex, _ in shapes[5:]] == [4] * 4

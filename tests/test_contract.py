@@ -72,3 +72,21 @@ def test_every_query_has_oracle_or_is_documented(spark):
     # (MinHash, SimHash, sign-LSH, IVF, sampling) uses portable
     # md5-derived constants so DuckDB reproduces it exactly
     assert set(qs) == set(os_)
+
+
+def test_maintained_stream_removes_its_state_tree(spark, duck):
+    """The query's ingest/state/checkpoint tree is removed before it
+    returns, and the labels it returns were read before the removal."""
+    import glob
+    import tempfile
+
+    import __spark_entry__ as entrymod
+
+    pattern = f"{tempfile.gettempdir()}/mstream_gate_*"
+    before = set(glob.glob(pattern))
+    name = "maintained_stream_state"
+    sdf = _normalize(entrymod.queries()[name](spark, SF).toPandas())
+    assert set(glob.glob(pattern)) <= before
+    odf = _normalize(duck.execute(entrymod.oracle_sql()[name]).df())
+    assert list(sdf.columns) == list(odf.columns)
+    pd.testing.assert_frame_equal(sdf, odf, check_dtype=False)

@@ -90,6 +90,81 @@ def test_failed_superstep_leaves_no_cached_frame(
     assert _persistent_rdds(spark) <= before
 
 
+def _run_round_loop(name, edges):
+    from linkgraph.algorithms.anf import harmonic_centrality, neighborhood_function
+    from linkgraph.algorithms.betweenness import betweenness_centrality
+    from linkgraph.algorithms.cc import connected_components_hashmin
+    from linkgraph.algorithms.coreness import core_decomposition
+    from linkgraph.algorithms.ktruss import ktruss
+    from linkgraph.algorithms.wl import wl_refinement
+
+    return {
+        "anf": lambda: neighborhood_function(edges, num_maps=4, max_h=4, num_partitions=2),
+        "ball": lambda: harmonic_centrality(edges, num_maps=4, max_h=4, num_partitions=2),
+        "coreness": lambda: core_decomposition(edges, num_partitions=2),
+        "betweenness": lambda: betweenness_centrality(edges, [0, 3], num_partitions=2),
+        "ktruss": lambda: ktruss(edges, 3, num_partitions=2),
+        "hashmin": lambda: connected_components_hashmin(edges, num_partitions=2),
+        "wl": lambda: wl_refinement(edges, rounds=3, num_partitions=2),
+    }[name]()
+
+
+@pytest.mark.parametrize(
+    "module_name, loop, fail_at",
+    [
+        ("linkgraph.algorithms.anf", "anf", 2),
+        ("linkgraph.algorithms.anf", "ball", 2),
+        ("linkgraph.algorithms.coreness", "coreness", 2),
+        ("linkgraph.algorithms.betweenness", "betweenness", 2),
+        # the forward pass from [0, 3] on webmap takes 5 rounds, so the
+        # 7th round is the backward pass's second level
+        ("linkgraph.algorithms.betweenness", "betweenness", 7),
+        ("linkgraph.algorithms.ktruss", "ktruss", 2),
+        ("linkgraph.algorithms.cc", "hashmin", 2),
+        ("linkgraph.algorithms.wl", "wl", 2),
+    ],
+    ids=[
+        "anf",
+        "ball",
+        "coreness",
+        "betweenness_forward",
+        "betweenness_backward",
+        "ktruss",
+        "hashmin",
+        "wl",
+    ],
+)
+def test_failed_round_leaves_no_loop_state(
+    spark, webmap_edges, monkeypatch, module_name, loop, fail_at
+):
+    """A round that raises must free the round state (and every other
+    frame the loop holds). The failure is injected into the round's
+    materialization, wherever the module resolves it from."""
+    import linkgraph.superstep as superstep
+
+    real = superstep.local_checkpoint_fresh_stats
+    calls = []
+
+    def failing(df, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == fail_at:
+            raise RuntimeError("injected round failure")
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(superstep, "local_checkpoint_fresh_stats", failing)
+    monkeypatch.setattr(
+        importlib.import_module(module_name),
+        "local_checkpoint_fresh_stats",
+        failing,
+        raising=False,
+    )
+    webmap_edges.count()  # cached before the persistent-RDD baseline
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="injected round failure"):
+        _run_round_loop(loop, webmap_edges)
+    assert _persistent_rdds(spark) <= before
+
+
 def test_messages_without_count_are_refused(spark, webmap_edges):
     from linkgraph.graph import vertices_from_edges
 

@@ -252,3 +252,34 @@ def test_vertex_program_ports_keep_superstep_plan(spark, webmap_edges, monkeypat
     shapes = _record_plan_shapes(monkeypatch, "linkgraph.vertex_program", _loop_shape)
     run()
     assert shapes == _PORTED_SHAPES[algo]
+
+
+# Per-round shapes of the loops that moved onto iterate, on the webmap
+# fixture (p=2), recorded from the hand-written loops before the move.
+# Three differ on purpose: hash-min round 1 reads its initial edge set
+# from a cached frame, not a checkpoint ((5, 3) before); the betweenness
+# backward levels read the cached adjacency again ((6, 1) before, when
+# they rebuilt it); WL now plans with AQE off (under AQE the counts sat
+# inside an adaptive plan, (0, 0)).
+_ROUND_LOOP_SHAPES = {
+    "anf": ("linkgraph.algorithms.anf", [(1, 2)] + [(1, 1)] * 3),
+    "ball": ("linkgraph.algorithms.anf", [(1, 2)] + [(1, 1)] * 3),
+    "coreness": ("linkgraph.algorithms.coreness", [(1, 2), (2, 2)]),
+    "betweenness": (
+        "linkgraph.algorithms.betweenness",
+        [(2, 1)] * 5 + [(4, 1)] * 4,
+    ),
+    "ktruss": ("linkgraph.algorithms.ktruss", [(1, 3), (4, 0)]),
+    "hashmin": ("linkgraph.algorithms.cc", [(2, 1), (8, 0), (8, 0)]),
+    "wl": ("linkgraph.algorithms.wl", [(1, 2), (1, 1), (1, 1)]),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(_ROUND_LOOP_SHAPES))
+def test_round_loop_ports_keep_superstep_plan(spark, webmap_edges, monkeypatch, loop):
+    from tests.test_loop_scope import _run_round_loop
+
+    module, want = _ROUND_LOOP_SHAPES[loop]
+    shapes = _record_plan_shapes(monkeypatch, module, _loop_shape)
+    _run_round_loop(loop, webmap_edges)
+    assert shapes == want

@@ -90,3 +90,15 @@ class TestWL:
         e = spark.createDataFrame([(0, 1)], "src long, dst long")
         with pytest.raises(ValueError):
             wl_refinement(e, rounds=0)
+
+    def test_frees_superseded_rounds(self, spark):
+        from linkgraph.superstep import release_local_checkpoint
+
+        jsc = spark.sparkContext._jsc
+        e = spark.createDataFrame(EDGES, "src long, dst long")
+        before = set(jsc.getPersistentRDDs().keys())
+        out = wl_refinement(e, rounds=4, num_partitions=2)
+        # only the result's snapshot stays held
+        assert len(set(jsc.getPersistentRDDs().keys()) - before) == 1
+        assert out.count() == len({v for ed in EDGES for v in ed})
+        release_local_checkpoint(out)
