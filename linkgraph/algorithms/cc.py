@@ -19,6 +19,16 @@ ConnectedComponentsReal output on the directed webmap where e.g. the
 chain 0->1 does NOT merge 0's label into 1 because vertex 0 never
 changes and therefore never sends.
 
+Prologue: the adjacency is built in one shuffle and cached
+(``partitioning.build_adjacency``). On symmetrized edges with the
+default vertex set, the vertex frame and the superstep-1 labels are
+read off that cache — ``min(id, min over dsts)`` per ``src``, with no
+exchange since the cache is hash-partitioned on ``src`` — instead of
+re-scanning the edges; this is exact because every vertex of a
+symmetrized edge set is a source. Directed edges, or a caller's
+``vertices``, take the vertex frame from ``vertices`` (default: every
+src/dst id) and the neighbor minimum from the edges.
+
 Execution: delta messaging (the reference's INNER_JOIN plan,
 JobGenInnerJoin.java:330-375) — only vertices whose label changed last
 superstep scatter; monotone min makes this exact. Messages combine via
@@ -77,8 +87,24 @@ def connected_components(
     e = symmetrize(edges) if symmetrize_edges else edges.select("src", "dst")
     with loop_scope(edges, num_partitions, scale) as scope:
         p = scope.p
-        verts = scope.vertices(vertices)
         adj = scope.cache(build_adjacency(e, num_partitions=p, chunk_size=chunk_size))
+        if symmetrize_edges and vertices is None:
+            # every vertex of a symmetrized edge set is a source, so the
+            # cached adjacency (hash-partitioned on src) holds all of
+            # them: the vertex frame and the neighbor minimum are one
+            # exchange-free aggregate over it
+            vert_min = (
+                adj.groupBy("src")
+                .agg(F.min(F.array_min("dsts")).alias("nmin"))
+                .withColumnRenamed("src", "id")
+            )
+            verts = vert_min.select("id")
+        else:
+            verts = scope.vertices(vertices)
+            nbr_min = e.groupBy("src").agg(F.min("dst").alias("nmin"))
+            vert_min = verts.join(
+                nbr_min.withColumnRenamed("src", "id"), "id", "left_outer"
+            )
 
         if init_labels is not None:
             prev = init_labels.select("id", F.col("component").alias("_prev"))
@@ -100,10 +126,8 @@ def connected_components(
             # Superstep 1 (reference): label = min(id, out-neighbors); a
             # vertex is "changed" (and will broadcast) only if that lowered
             # its label.
-            nbr_min = e.groupBy("src").agg(F.min("dst").alias("nmin")).withColumnRenamed("src", "id")
             init = (
-                verts.join(nbr_min, "id", "left_outer")
-                .select(
+                vert_min.select(
                     "id",
                     F.least(F.col("id"), F.coalesce(F.col("nmin"), F.col("id"))).alias("component"),
                 )

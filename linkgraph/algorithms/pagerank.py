@@ -15,7 +15,13 @@ Reference contract (PageRankVertex.java:124-145, SURVEY.md SS4.1):
   golden outputs bit-for-bit within 1e-6; the north_rule's default mode
   instead iterates to L1 convergence ``sum(abs(r_k - r_{k-1})) <= tol``.
 
-Execution shape per superstep (one Spark job): cached salted CSR
+Prologue: the vertex frame (``vertices``, default every src/dst id of
+the edges) is hash-partitioned on ``id``, cached and counted once — N
+and the initial state ``rank = 1/N`` (or the ``init_ranks`` seed) both
+read that cache — and the adjacency is built in one shuffle and cached
+(``partitioning.build_adjacency``).
+
+Execution shape per superstep (one Spark job): cached chunked CSR
 adjacency ``(src, salt, dsts, outdeg)`` joins the current ranks on the
 co-partitioned id, scatters via ``explode`` (array unpack, no per-edge
 pre-shuffle), and message combining is ``groupBy(dst).sum`` — Spark's
@@ -72,7 +78,10 @@ def pagerank(
     """
     with loop_scope(edges, num_partitions) as scope:
         p = scope.p
-        verts = scope.vertices(vertices)
+        # cached once: the count for N and superstep 1's initial state
+        # read the same materialization instead of each recomputing the
+        # vertex distinct
+        verts = scope.cache(scope.vertices(vertices))
         # num_vertices overrides the teleport/init denominator — the
         # reference takes N from job conf (PregelixJob.NUM_VERTICE), which
         # counts only input vertices even when message targets materialize

@@ -51,10 +51,10 @@ from ..partitioning import build_adjacency
 from ..superstep import (
     LoopResult,
     StepResult,
+    _release,
     iterate,
     iteration_conf,
     local_checkpoint_fresh_stats,
-    release_local_checkpoint,
 )
 
 
@@ -96,106 +96,120 @@ def strongly_connected_components(
         done = spark.createDataFrame([], "id LONG, scc LONG").localCheckpoint(
             eager=True
         )
+        # every frame a round holds, freed when the round ends — or when
+        # it raises, together with the loop's e/live/done
+        held: list[DataFrame] = []
 
-        for _round in range(1, max_rounds + 1):
-            adj_out = build_adjacency(e, num_partitions=p, chunk_size=chunk_size)
-            adj_in = build_adjacency(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-                num_partitions=p,
-                chunk_size=chunk_size,
-            )
-            adj_out.persist().count()
-            adj_in.persist().count()
+        try:
+            for _round in range(1, max_rounds + 1):
+                adj_out = build_adjacency(e, num_partitions=p, chunk_size=chunk_size)
+                adj_in = build_adjacency(
+                    e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                    num_partitions=p,
+                    chunk_size=chunk_size,
+                )
+                for adj in (adj_out, adj_in):
+                    held.append(adj.persist())
+                    adj.count()
 
-            init = live.selectExpr(
-                "id",
-                "id AS f",
-                "id AS b",
-                "TRUE AS fch",
-                "TRUE AS bch",
-                "TRUE AS _changed",
-            )
+                init = live.selectExpr(
+                    "id",
+                    "id AS f",
+                    "id AS b",
+                    "TRUE AS fch",
+                    "TRUE AS bch",
+                    "TRUE AS _changed",
+                )
 
-            step_exprs = [
-                "id",
-                "LEAST(f, COALESCE(mf, f)) AS f",
-                "LEAST(b, COALESCE(mb, b)) AS b",
-                "(COALESCE(mf, f) < f) AS fch",
-                "(COALESCE(mb, b) < b) AS bch",
-                "(COALESCE(mf, f) < f OR COALESCE(mb, b) < b) AS _changed",
-                "CAST(mf IS NOT NULL AS BIGINT) + CAST(mb IS NOT NULL AS BIGINT)"
-                " AS _msgs",
-            ]
+                step_exprs = [
+                    "id",
+                    "LEAST(f, COALESCE(mf, f)) AS f",
+                    "LEAST(b, COALESCE(mb, b)) AS b",
+                    "(COALESCE(mf, f) < f) AS fch",
+                    "(COALESCE(mb, b) < b) AS bch",
+                    "(COALESCE(mf, f) < f OR COALESCE(mb, b) < b) AS _changed",
+                    "CAST(mf IS NOT NULL AS BIGINT) + CAST(mb IS NOT NULL AS BIGINT)"
+                    " AS _msgs",
+                ]
 
-            def superstep(state: DataFrame, k: int) -> StepResult:
-                fm = (
-                    adj_out.join(state.filter("fch"), F.expr("src = id"))
-                    .selectExpr(
-                        "explode(dsts) AS rid", "f AS fv", "CAST(NULL AS LONG) AS bv"
+                def superstep(state: DataFrame, k: int) -> StepResult:
+                    fm = (
+                        adj_out.join(state.filter("fch"), F.expr("src = id"))
+                        .selectExpr(
+                            "explode(dsts) AS rid", "f AS fv", "CAST(NULL AS LONG) AS bv"
+                        )
                     )
-                )
-                bm = (
-                    adj_in.join(state.filter("bch"), F.expr("src = id"))
-                    .selectExpr(
-                        "explode(dsts) AS rid", "CAST(NULL AS LONG) AS fv", "b AS bv"
+                    bm = (
+                        adj_in.join(state.filter("bch"), F.expr("src = id"))
+                        .selectExpr(
+                            "explode(dsts) AS rid", "CAST(NULL AS LONG) AS fv", "b AS bv"
+                        )
                     )
+                    msgs = (
+                        fm.unionAll(bm)
+                        .groupBy("rid")
+                        .agg(F.expr("MIN(fv) AS mf"), F.expr("MIN(bv) AS mb"))
+                        .withColumnRenamed("rid", "id")
+                    )
+                    new = (
+                        state.select("id", "f", "b")
+                        .join(msgs, "id", "left_outer")
+                        .selectExpr(*step_exprs)
+                    )
+                    return StepResult(state=new, messages=msgs)
+
+                res = iterate(
+                    init,
+                    superstep,
+                    converged=lambda s: s.changed == 0,
+                    max_supersteps=max_supersteps,
+                    num_partitions=p,
                 )
-                msgs = (
-                    fm.unionAll(bm)
-                    .groupBy("rid")
-                    .agg(F.expr("MIN(fv) AS mf"), F.expr("MIN(bv) AS mb"))
-                    .withColumnRenamed("rid", "id")
+                history.extend(res.history)
+                total_steps += res.supersteps
+
+                st = res.state  # id, f, b, fch, bch (localCheckpoint'ed)
+                held.append(st)
+                new_done = local_checkpoint_fresh_stats(
+                    done.unionAll(st.filter("f = b").selectExpr("id", "f AS scc"))
                 )
-                new = (
-                    state.select("id", "f", "b")
-                    .join(msgs, "id", "left_outer")
-                    .selectExpr(*step_exprs)
+                held.append(new_done)
+                new_live = st.filter("f != b").select("id", "f", "b")
+                # restrict edges to survivors in the SAME (f, b) block — two
+                # co-partitioned joins (e, live both hash-partitioned by the
+                # join keys' side); cross-block edges can never sit inside an
+                # SCC, so dropping them is exact
+                s_lbl = new_live.selectExpr("id AS src", "f AS sf", "b AS sb")
+                d_lbl = new_live.selectExpr("id AS dst", "f AS df", "b AS db")
+                new_e = local_checkpoint_fresh_stats(
+                    e.join(s_lbl, "src")
+                    .join(d_lbl, "dst")
+                    .filter("sf = df AND sb = db")
+                    .select("src", "dst")
                 )
-                return StepResult(state=new, messages=msgs)
+                held.append(new_e)
+                next_live = local_checkpoint_fresh_stats(new_live.select("id"))
+                held.append(next_live)
+                n_live = next_live.count()
 
-            res = iterate(
-                init,
-                superstep,
-                converged=lambda s: s.changed == 0,
-                max_supersteps=max_supersteps,
-                num_partitions=p,
-            )
-            history.extend(res.history)
-            total_steps += res.supersteps
+                # the round's survivors become the loop's frames; the rest go
+                for df in (adj_out, adj_in, st, e, live, done):
+                    _release(df)
+                e, live, done = new_e, next_live, new_done
+                held.clear()
 
-            st = res.state  # id, f, b, fch, bch (localCheckpoint'ed)
-            new_done = local_checkpoint_fresh_stats(
-                done.unionAll(st.filter("f = b").selectExpr("id", "f AS scc"))
-            )
-            new_live = st.filter("f != b").select("id", "f", "b")
-            # restrict edges to survivors in the SAME (f, b) block — two
-            # co-partitioned joins (e, live both hash-partitioned by the
-            # join keys' side); cross-block edges can never sit inside an
-            # SCC, so dropping them is exact
-            s_lbl = new_live.selectExpr("id AS src", "f AS sf", "b AS sb")
-            d_lbl = new_live.selectExpr("id AS dst", "f AS df", "b AS db")
-            new_e = local_checkpoint_fresh_stats(
-                e.join(s_lbl, "src")
-                .join(d_lbl, "dst")
-                .filter("sf = df AND sb = db")
-                .select("src", "dst")
-            )
-            next_live = local_checkpoint_fresh_stats(new_live.select("id"))
-            n_live = next_live.count()
+                if n_live == 0:
+                    all_done = True
+                    break
+        except BaseException:
+            for df in held + [e, live, done]:
+                _release(df)
+            raise
 
-            adj_out.unpersist()
-            adj_in.unpersist()
-            release_local_checkpoint(e)
-            release_local_checkpoint(live)
-            release_local_checkpoint(done)
-            release_local_checkpoint(st)
-            e, live, done = new_e, next_live, new_done
-
-            if n_live == 0:
-                all_done = True
-                break
-
-        if not all_done and live.count() > 0:
+        _release(e)
+        if all_done:
+            _release(live)
+        elif live.count() > 0:
             # max_rounds exhausted: label survivors by their own id so the
             # output is total (documented partial result, converged=False)
             done = done.unionAll(live.selectExpr("id", "id AS scc"))

@@ -61,6 +61,7 @@ from ..superstep import (
     iteration_conf,
     local_checkpoint_fresh_stats,
     loop_scope,
+    release_local_checkpoint,
 )
 
 
@@ -132,6 +133,13 @@ def indexed_edges(
         ),
         num_partitions,
     )
+
+
+def _release_frames(first: DataFrame, frames: list[tuple[int, DataFrame]]) -> None:
+    """Free the corpus frames a walk loop retains, when the loop raises
+    (on success they ARE the result and stay held)."""
+    for df in [first] + [frame for _, frame in frames]:
+        release_local_checkpoint(df)
 
 
 def _maybe_repartition(df: DataFrame, num_partitions: int | None) -> DataFrame:
@@ -244,69 +252,73 @@ def random_walks(
         first = state if start_k == 1 else init
 
         k = start_k - 1
-        for k in range(start_k, walk_length + 1):
-            t0 = time.monotonic()
-            # frontier = the previous frame's survivors. Walkers that
-            # died at step j carry active=false in frame j and are
-            # dropped here — each retained frame holds only the walkers
-            # that were live going INTO its step, so the loop never
-            # re-reads or re-writes the accumulated dead set (the old
-            # state ∪ parked shape cost one extra full-frame disk scan
-            # per step at DISK_ONLY ladder sizes).
-            live = state.filter("active").selectExpr(
-                "id", "cur", f"{_spark_coin('id', k, seed, portable)} AS _pick"
-            )
-            stepped = (
-                live.hint("shuffle_hash")
-                .join(ie, live["cur"] == ie["src"], "left")
-                # keep the chosen edge or the dead-end null row — at
-                # most one row per walker either way
-                .where(F.expr(f"idx IS NULL OR ({hit_sql})"))
-                .select(
-                    live["id"].alias("id"),
-                    F.coalesce(ie["dst"], live["cur"]).alias("cur"),
-                    ie["dst"].isNotNull().alias("active"),
+        try:
+            for k in range(start_k, walk_length + 1):
+                t0 = time.monotonic()
+                # frontier = the previous frame's survivors. Walkers that
+                # died at step j carry active=false in frame j and are
+                # dropped here — each retained frame holds only the walkers
+                # that were live going INTO its step, so the loop never
+                # re-reads or re-writes the accumulated dead set (the old
+                # state ∪ parked shape cost one extra full-frame disk scan
+                # per step at DISK_ONLY ladder sizes).
+                live = state.filter("active").selectExpr(
+                    "id", "cur", f"{_spark_coin('id', k, seed, portable)} AS _pick"
                 )
-            )
-            obs = Observation(f"walk-{k}")
-            planned = stepped.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.col("active").cast("long")).alias("changed"),
-            )
-            # serialized storage: the retained frames are read twice
-            # (next step's filter + the final corpus union) but live for
-            # the whole loop — deserialized row objects would grow the
-            # GC live-set by walkers × steps and degrade later steps
-            # (measured: per-step time tripling across 8 steps at 4M
-            # walkers); serialized bytes keep the heap flat.
-            # frame_storage=DISK_ONLY when walkers × steps outgrows the
-            # block-manager memory: retained frames then stream to disk
-            # at a steady per-step cost instead of thrashing the LRU
-            # (measured 9-52s step swings at 40M x 16 under
-            # MEMORY_AND_DISK on a 48g heap; a production corpus never
-            # fits executor memory anyway)
-            new_state = local_checkpoint_fresh_stats(
-                planned,
-                storage_level=frame_storage or StorageLevel.MEMORY_AND_DISK,
-            )
-            row = obs.get
+                stepped = (
+                    live.hint("shuffle_hash")
+                    .join(ie, live["cur"] == ie["src"], "left")
+                    # keep the chosen edge or the dead-end null row — at
+                    # most one row per walker either way
+                    .where(F.expr(f"idx IS NULL OR ({hit_sql})"))
+                    .select(
+                        live["id"].alias("id"),
+                        F.coalesce(ie["dst"], live["cur"]).alias("cur"),
+                        ie["dst"].isNotNull().alias("active"),
+                    )
+                )
+                obs = Observation(f"walk-{k}")
+                planned = stepped.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("rows"),
+                    F.sum(F.col("active").cast("long")).alias("changed"),
+                )
+                # serialized storage: the retained frames are read twice
+                # (next step's filter + the final corpus union) but live for
+                # the whole loop — deserialized row objects would grow the
+                # GC live-set by walkers × steps and degrade later steps
+                # (measured: per-step time tripling across 8 steps at 4M
+                # walkers); serialized bytes keep the heap flat.
+                # frame_storage=DISK_ONLY when walkers × steps outgrows the
+                # block-manager memory: retained frames then stream to disk
+                # at a steady per-step cost instead of thrashing the LRU
+                # (measured 9-52s step swings at 40M x 16 under
+                # MEMORY_AND_DISK on a 48g heap; a production corpus never
+                # fits executor memory anyway)
+                new_state = local_checkpoint_fresh_stats(
+                    planned,
+                    storage_level=frame_storage or StorageLevel.MEMORY_AND_DISK,
+                )
+                # the superseded state is a RETAINED corpus frame — do NOT
+                # release it; the final union reads it back
+                frames.append((k, new_state))
+                row = obs.get
 
-            stats = SuperstepMetrics(superstep=k)
-            stats.rows = int(row["rows"])
-            stats.changed = int(row["changed"] or 0)
-            stats.wall_sec = time.monotonic() - t0
-            if ckpt is not None and ckpt.should_checkpoint(k):
-                # write-only: the frame stays the corpus frame
-                ckpt.save(k, new_state, stats)
-            # the superseded state is a RETAINED corpus frame — do NOT
-            # release it; the final union reads it back
-            frames.append((k, new_state))
-            state = new_state
-            history.append(stats)
-            if stats.changed == 0:
-                converged = True
-                break
+                stats = SuperstepMetrics(superstep=k)
+                stats.rows = int(row["rows"])
+                stats.changed = int(row["changed"] or 0)
+                stats.wall_sec = time.monotonic() - t0
+                if ckpt is not None and ckpt.should_checkpoint(k):
+                    # write-only: the frame stays the corpus frame
+                    ckpt.save(k, new_state, stats)
+                state = new_state
+                history.append(stats)
+                if stats.changed == 0:
+                    converged = True
+                    break
+        except BaseException:
+            _release_frames(first, frames)
+            raise
 
     corpus = first.select(
         F.col("id").alias("walk_id"),
@@ -425,85 +437,89 @@ def node2vec_walks(
         first = state if start_k == 1 else init
 
         k = start_k - 1
-        for k in range(start_k, walk_length + 1):
-            t0 = time.monotonic()
-            # frontier = previous frame's survivors; dead walkers leave
-            # the frontier at the step they die, so frames stay
-            # frontier-sized (see random_walks)
-            live = state.filter("active").select("id", "prev", "cur")
-            mark = ie.select(F.col("src").alias("mx"), F.col("dst").alias("mp"))
-            bias = (
-                F.when(F.col("e.dst") == F.col("w.prev"), F.lit(mult_return))
-                .when(F.col("mx").isNotNull(), F.lit(mult_common))
-                .otherwise(F.lit(mult_far))
-                .cast("long")
-            )
-            cand = (
-                live.alias("w")
-                .join(ie.alias("e"), F.col("w.cur") == F.col("e.src"))
-                # wedge membership: is the candidate x also prev's OUT-
-                # neighbor? (null prev on step 1 never matches -> plain w)
-                .join(
-                    mark,
-                    (F.col("e.dst") == F.col("mx"))
-                    & (F.col("w.prev") == F.col("mp")),
-                    "left",
+        try:
+            for k in range(start_k, walk_length + 1):
+                t0 = time.monotonic()
+                # frontier = previous frame's survivors; dead walkers leave
+                # the frontier at the step they die, so frames stay
+                # frontier-sized (see random_walks)
+                live = state.filter("active").select("id", "prev", "cur")
+                mark = ie.select(F.col("src").alias("mx"), F.col("dst").alias("mp"))
+                bias = (
+                    F.when(F.col("e.dst") == F.col("w.prev"), F.lit(mult_return))
+                    .when(F.col("mx").isNotNull(), F.lit(mult_common))
+                    .otherwise(F.lit(mult_far))
+                    .cast("long")
                 )
-                .select(
-                    F.col("w.id").alias("id"),
-                    F.col("w.cur").alias("cur"),
-                    F.col("e.dst").alias("nxt"),
-                    (base_w * bias).alias("bw"),
+                cand = (
+                    live.alias("w")
+                    .join(ie.alias("e"), F.col("w.cur") == F.col("e.src"))
+                    # wedge membership: is the candidate x also prev's OUT-
+                    # neighbor? (null prev on step 1 never matches -> plain w)
+                    .join(
+                        mark,
+                        (F.col("e.dst") == F.col("mx"))
+                        & (F.col("w.prev") == F.col("mp")),
+                        "left",
+                    )
+                    .select(
+                        F.col("w.id").alias("id"),
+                        F.col("w.cur").alias("cur"),
+                        F.col("e.dst").alias("nxt"),
+                        (base_w * bias).alias("bw"),
+                    )
+                    .filter(F.col("bw") > 0)
                 )
-                .filter(F.col("bw") > 0)
-            )
-            cum = Window.partitionBy("id").orderBy("nxt").rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-            tot = Window.partitionBy("id")
-            picked = cand.select(
-                "id",
-                "cur",
-                "nxt",
-                "bw",
-                F.coalesce(F.sum("bw").over(cum), F.lit(0)).alias("lo"),
-                F.sum("bw").over(tot).alias("tot"),
-            )
-            draw = F.expr(_spark_coin("id", k, seed, portable)) % F.col("tot")
-            stepped = picked.filter(
-                (F.col("lo") <= draw) & (draw < F.col("lo") + F.col("bw"))
-            ).select(
-                "id",
-                F.col("cur").alias("prev"),
-                F.col("nxt").alias("cur"),
-                F.lit(True).alias("active"),
-            )
-            dead = live.join(
-                cand.select("id").distinct(), "id", "left_anti"
-            ).select("id", "prev", "cur", F.lit(False).alias("active"))
-            obs = Observation(f"n2v-{k}")
-            planned = stepped.unionByName(dead).observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.col("active").cast("long")).alias("changed"),
-            )
-            new_state = local_checkpoint_fresh_stats(
-                planned, storage_level=StorageLevel.MEMORY_AND_DISK
-            )
-            row = obs.get
+                cum = Window.partitionBy("id").orderBy("nxt").rowsBetween(
+                    Window.unboundedPreceding, -1
+                )
+                tot = Window.partitionBy("id")
+                picked = cand.select(
+                    "id",
+                    "cur",
+                    "nxt",
+                    "bw",
+                    F.coalesce(F.sum("bw").over(cum), F.lit(0)).alias("lo"),
+                    F.sum("bw").over(tot).alias("tot"),
+                )
+                draw = F.expr(_spark_coin("id", k, seed, portable)) % F.col("tot")
+                stepped = picked.filter(
+                    (F.col("lo") <= draw) & (draw < F.col("lo") + F.col("bw"))
+                ).select(
+                    "id",
+                    F.col("cur").alias("prev"),
+                    F.col("nxt").alias("cur"),
+                    F.lit(True).alias("active"),
+                )
+                dead = live.join(
+                    cand.select("id").distinct(), "id", "left_anti"
+                ).select("id", "prev", "cur", F.lit(False).alias("active"))
+                obs = Observation(f"n2v-{k}")
+                planned = stepped.unionByName(dead).observe(
+                    obs,
+                    F.count(F.lit(1)).alias("rows"),
+                    F.sum(F.col("active").cast("long")).alias("changed"),
+                )
+                new_state = local_checkpoint_fresh_stats(
+                    planned, storage_level=StorageLevel.MEMORY_AND_DISK
+                )
+                frames.append((k, new_state))
+                row = obs.get
 
-            stats = SuperstepMetrics(superstep=k)
-            stats.rows = int(row["rows"])
-            stats.changed = int(row["changed"] or 0)
-            stats.wall_sec = time.monotonic() - t0
-            if ckpt is not None and ckpt.should_checkpoint(k):
-                ckpt.save(k, new_state, stats)
-            frames.append((k, new_state))
-            state = new_state
-            history.append(stats)
-            if stats.changed == 0:
-                converged = True
-                break
+                stats = SuperstepMetrics(superstep=k)
+                stats.rows = int(row["rows"])
+                stats.changed = int(row["changed"] or 0)
+                stats.wall_sec = time.monotonic() - t0
+                if ckpt is not None and ckpt.should_checkpoint(k):
+                    ckpt.save(k, new_state, stats)
+                state = new_state
+                history.append(stats)
+                if stats.changed == 0:
+                    converged = True
+                    break
+        except BaseException:
+            _release_frames(first, frames)
+            raise
 
     corpus = first.select(
         F.col("id").alias("walk_id"),

@@ -200,6 +200,7 @@ def _load_edges(spark: SparkSession, args) -> DataFrame:
     if len(given) != 1:
         raise SystemExit(
             "exactly one of --edges / --code-table / --adjacency-text is required"
+            " (--embeddings is the semdedup input)"
         )
     if args.edges:
         df = spark.read.load(args.edges)
@@ -237,6 +238,22 @@ def _load_edges(spark: SparkSession, args) -> DataFrame:
 
 def main(argv: list[str] | None = None) -> None:
     args = _build_parser().parse_args(argv)
+    if args.embeddings:
+        others = [
+            flag
+            for flag, given in (
+                ("--documents", args.documents),
+                ("--edges", args.edges),
+                ("--code-table", args.code_table),
+                ("--adjacency-text", args.adjacency_text),
+            )
+            if given
+        ]
+        if others:
+            raise SystemExit(
+                f"--embeddings cannot be combined with {' / '.join(others)}:"
+                " give exactly one input"
+            )
 
     from linkgraph.session import get_spark
 

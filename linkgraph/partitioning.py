@@ -1,4 +1,4 @@
-"""Partitioning, CSR-style adjacency, and hub-skew salting.
+"""Partitioning, CSR-style adjacency, and hub chunking.
 
 Reference analogue: Pregelix stores the vertex relation in a B-tree
 hash-partitioned by vertex id (JobGen.java:150-151, 598) with a custom
@@ -12,16 +12,22 @@ adjacency lists by spilling oversized vertices to HDFS
   side (SURVEY.md SS2.3).
 - **CSR-style adjacency**: ``adj(src, salt, dsts array<long>, outdeg)``
   — one row per (vertex, chunk) with the out-neighbor list packed in an
-  array. Grouped arrays are the DataFrame rendition of CSR: the scatter
-  step is an ``explode`` instead of a row-per-edge shuffle, and partial
+  array, built in ONE shuffle: ``groupBy(src)`` collects the list and
+  counts ``outdeg`` in the same aggregate, the way Pregelix loads each
+  vertex with its edge list in one loading job (JobGen.java:531-604).
+  Grouped arrays are the DataFrame rendition of CSR: the scatter step
+  is an ``explode`` instead of a row-per-edge shuffle, and partial
   aggregation combines messages before the shuffle exactly like the
   reference's local-combine -> MToN -> final-combine pipeline
   (JobGen.java:1124-1215).
-- **salting**: a hub vertex's adjacency is split across ``salt`` chunks
-  of at most ``chunk_size`` neighbors, so one power-law hub cannot pin a
-  single task (the reference's skew fixture has a 4146-neighbor vertex,
-  data/skew/data.txt). Message-side (in-degree) skew is handled by
-  Spark's map-side partial aggregation plus AQE skew splitting.
+- **chunking**: a hub vertex's list is cut into ``salt`` chunks of at
+  most ``chunk_size`` neighbors by a narrow ``slice`` after the
+  groupBy, which bounds the array length of one row (the reference's
+  skew fixture has a 4146-neighbor vertex, data/skew/data.txt). It does
+  NOT spread a hub across tasks: every chunk keeps the hub's ``src``
+  and therefore its hash partition. Message-side (in-degree) skew is
+  handled by Spark's map-side partial aggregation before the message
+  shuffle.
 """
 
 from __future__ import annotations
@@ -52,27 +58,38 @@ def build_adjacency(
     num_partitions: int | None = None,
     chunk_size: int = DEFAULT_CHUNK_SIZE,
 ) -> DataFrame:
-    """edges(src,dst) -> salted CSR-style adjacency.
+    """edges(src,dst) -> chunked CSR-style adjacency.
 
-    Returns ``(src, salt, dsts array<long>, outdeg)`` hash-partitioned by
-    ``src`` and persisted by the caller. ``outdeg`` is the vertex's TOTAL
-    out-degree (not the chunk length) so rank contributions stay correct
-    when a hub is split across chunks — the salting must not change
-    PageRank mass (SURVEY.md SS9 "hard parts").
+    Returns ``(src, salt, dsts array<long>, outdeg)``: rows only for
+    vertices with out-edges, at most ``chunk_size`` neighbors per row,
+    chunks numbered ``salt = 0 .. ceil(outdeg / chunk_size) - 1``.
+    ``outdeg`` is the vertex's TOTAL out-degree (not the chunk length)
+    on every chunk, so rank contributions stay correct when a hub is
+    split — chunking must not change PageRank mass (SURVEY.md SS9 "hard
+    parts"). Hash-partitioned by ``src`` and persisted by the caller.
+
+    One shuffle: the ``groupBy(src)`` that collects the list also
+    counts the degree, and the chunks are cut from the collected list
+    without another exchange. Under ``iteration_conf(p)`` the groupBy
+    already yields ``hashpartitioning(src, p)``, so the trailing
+    ``repartition(p, "src")`` plans no exchange of its own.
     """
-    deg = out_degrees(edges)
-    salted = (
-        edges.join(deg, "src")
-        .withColumn(
-            "salt",
-            F.when(F.col("outdeg") <= chunk_size, F.lit(0)).otherwise(
-                F.pmod(F.xxhash64("dst"), F.ceil(F.col("outdeg") / chunk_size)).cast("int")
-            ),
-        )
-    )
+    n_chunks = F.ceil(F.col("outdeg") / chunk_size).cast("int")
     adj = (
-        salted.groupBy("src", "salt")
-        .agg(F.collect_list("dst").alias("dsts"), F.first("outdeg").alias("outdeg"))
+        edges.groupBy("src")
+        .agg(F.collect_list("dst").alias("_all"), F.count("*").alias("outdeg"))
+        .select(
+            "src",
+            "_all",
+            "outdeg",
+            F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("salt"),
+        )
+        .select(
+            "src",
+            "salt",
+            F.slice("_all", F.col("salt") * chunk_size + 1, chunk_size).alias("dsts"),
+            "outdeg",
+        )
     )
     if num_partitions:
         adj = adj.repartition(num_partitions, "src")

@@ -372,9 +372,25 @@ def _mp4_find(buf: bytes, start: int, end: int, tag: bytes):
     return None
 
 
-def _mp4_fullbox(buf: bytes, body: int) -> tuple[int, int]:
-    """(version, first-field offset) of a full box body."""
-    return buf[body], body + 4
+def _mp4_need(box: tuple[int, int], n: int, tag: str) -> None:
+    """Refuse a box whose body is shorter than the ``n`` bytes read from
+    it — a size-valid but truncated box must not reach ``struct``."""
+    if box[1] - box[0] < n:
+        raise ValueError(
+            f"ISO-BMFF: {tag} body is {box[1] - box[0]} bytes, needs {n}"
+        )
+
+
+def _mp4_fullbox(
+    buf: bytes, box: tuple[int, int], tag: str, need_v0: int, need_v1: int
+) -> tuple[int, int]:
+    """(version, first-field offset) of a full box body, after checking
+    the body holds ``need_v0`` (version 0) or ``need_v1`` (version 1)
+    bytes."""
+    _mp4_need(box, 4, tag)
+    version = buf[box[0]]
+    _mp4_need(box, need_v1 if version == 1 else need_v0, tag)
+    return version, box[0] + 4
 
 
 def mp4_metadata(payload: bytes) -> dict:
@@ -394,7 +410,8 @@ def mp4_metadata(payload: bytes) -> dict:
     mvhd = _mp4_find(payload, mb, me, b"mvhd")
     if mvhd is None:
         raise ValueError("ISO-BMFF: no mvhd box")
-    v, p = _mp4_fullbox(payload, mvhd[0])
+    # version/flags(4) + times(8|16) + timescale(4) + duration(4|8)
+    v, p = _mp4_fullbox(payload, mvhd, "mvhd", 20, 32)
     if v == 1:
         timescale, duration = struct.unpack(">IQ", payload[p + 16 : p + 28])
     else:
@@ -410,7 +427,8 @@ def mp4_metadata(payload: bytes) -> dict:
         md = _mp4_find(payload, b, e, b"mdia")
         if tk is None or md is None:
             raise ValueError("ISO-BMFF: trak missing tkhd or mdia")
-        v, p = _mp4_fullbox(payload, tk[0])
+        # ... + track_id, reserved, duration, 52 bytes to width/height(8)
+        v, p = _mp4_fullbox(payload, tk, "tkhd", 84, 96)
         if v == 1:
             track_id = struct.unpack(">I", payload[p + 16 : p + 20])[0]
             tdur = struct.unpack(">Q", payload[p + 24 : p + 32])[0]
@@ -425,6 +443,7 @@ def mp4_metadata(payload: bytes) -> dict:
         hdlr = _mp4_find(payload, md[0], md[1], b"hdlr")
         if mdhd is None or hdlr is None:
             raise ValueError("ISO-BMFF: mdia missing mdhd or hdlr")
+        _mp4_need(hdlr, 12, "hdlr")  # version/flags, pre_defined, type
         handler = payload[hdlr[0] + 8 : hdlr[0] + 12].decode("latin-1")
         codec = None
         minf = _mp4_find(payload, md[0], md[1], b"minf")
@@ -433,9 +452,11 @@ def mp4_metadata(payload: bytes) -> dict:
             if stbl is not None:
                 stsd = _mp4_find(payload, stbl[0], stbl[1], b"stsd")
                 if stsd is not None:
-                    _, sp = _mp4_fullbox(payload, stsd[0])
+                    _, sp = _mp4_fullbox(payload, stsd, "stsd", 8, 8)
                     (n_entries,) = struct.unpack(">I", payload[sp : sp + 4])
                     if n_entries >= 1:
+                        # first entry: size(4) + format(4)
+                        _mp4_need(stsd, 16, "stsd")
                         codec = payload[sp + 8 : sp + 12].decode("latin-1")
         tracks.append(
             {

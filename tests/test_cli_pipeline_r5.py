@@ -74,3 +74,25 @@ class TestCliSemDedup:
 
         with pytest.raises(SystemExit, match="embeddings"):
             cli.main(["semdedup", "--output", str(tmp_path / "x")])
+
+    @pytest.mark.parametrize(
+        "other", ["--documents", "--edges", "--code-table", "--adjacency-text"]
+    )
+    def test_embeddings_exclusive_with_other_inputs(self, monkeypatch, tmp_path, other):
+        """Refused before any Spark work: the session is never asked for."""
+        import linkgraph.session
+        from linkgraph import cli
+
+        def no_spark(*args, **kwargs):
+            raise AssertionError("Spark started before the inputs were checked")
+
+        monkeypatch.setattr(linkgraph.session, "get_spark", no_spark)
+        with pytest.raises(SystemExit, match=f"--embeddings cannot be combined with {other}"):
+            cli.main(["semdedup", "--embeddings", "e", other, "x",
+                      "--output", str(tmp_path / "x")])
+
+    def test_graph_input_error_names_embeddings(self, spark, tmp_path):
+        from linkgraph import cli
+
+        with pytest.raises(SystemExit, match="--embeddings"):
+            cli.main(["pagerank", "--output", str(tmp_path / "x")])

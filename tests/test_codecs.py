@@ -188,6 +188,22 @@ class TestMP4:
         with pytest.raises(ValueError, match="size"):
             mp4_metadata(p[: len(p) - 20])
 
+    @pytest.mark.parametrize("body_len", [0, 3, 12, 19])
+    def test_short_mvhd_raises_value_error(self, body_len):
+        """A size-valid mvhd whose body stops before the timescale and
+        duration fields is a ValueError, not a struct.error."""
+        import struct
+
+        from linkgraph.pipeline.codecs import mp4_metadata
+
+        def box(tag, body):
+            return struct.pack(">I", 8 + len(body)) + tag + body
+
+        ftyp = box(b"ftyp", b"isom" + b"\x00" * 4 + b"isom")
+        moov = box(b"moov", box(b"mvhd", b"\x00" * body_len))
+        with pytest.raises(ValueError, match="mvhd body"):
+            mp4_metadata(ftyp + moov)
+
     def test_spark_mp4_summary_closed_forms(self, spark):
         """synth_mp4_media's closed forms survive the Arrow round trip
         through mp4_summary."""

@@ -96,6 +96,8 @@ def _run_round_loop(name, edges):
     from linkgraph.algorithms.cc import connected_components_hashmin
     from linkgraph.algorithms.coreness import core_decomposition
     from linkgraph.algorithms.ktruss import ktruss
+    from linkgraph.algorithms.scc import strongly_connected_components
+    from linkgraph.algorithms.walks import node2vec_walks, random_walks
     from linkgraph.algorithms.wl import wl_refinement
 
     return {
@@ -106,6 +108,9 @@ def _run_round_loop(name, edges):
         "ktruss": lambda: ktruss(edges, 3, num_partitions=2),
         "hashmin": lambda: connected_components_hashmin(edges, num_partitions=2),
         "wl": lambda: wl_refinement(edges, rounds=3, num_partitions=2),
+        "scc": lambda: strongly_connected_components(edges, num_partitions=2),
+        "walks": lambda: random_walks(edges, walk_length=4, num_partitions=2),
+        "node2vec": lambda: node2vec_walks(edges, walk_length=4, num_partitions=2),
     }[name]()
 
 
@@ -122,6 +127,11 @@ def _run_round_loop(name, edges):
         ("linkgraph.algorithms.ktruss", "ktruss", 2),
         ("linkgraph.algorithms.cc", "hashmin", 2),
         ("linkgraph.algorithms.wl", "wl", 2),
+        # loops that hold frames outside iterate: scc's round frames, the
+        # walks' retained corpus frames
+        ("linkgraph.algorithms.scc", "scc", 2),
+        ("linkgraph.algorithms.walks", "walks", 2),
+        ("linkgraph.algorithms.walks", "node2vec", 2),
     ],
     ids=[
         "anf",
@@ -132,6 +142,9 @@ def _run_round_loop(name, edges):
         "ktruss",
         "hashmin",
         "wl",
+        "scc",
+        "walks",
+        "node2vec",
     ],
 )
 def test_failed_round_leaves_no_loop_state(

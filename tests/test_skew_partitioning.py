@@ -61,6 +61,21 @@ class TestPartitioning:
         plan = adj._jdf.queryExecution().optimizedPlan().toString()
         assert "RepartitionByExpression [src" in plan
 
+    def test_adjacency_build_is_one_shuffle(self, spark, hub_edges):
+        """The groupBy(src) that collects each list also counts outdeg
+        and leaves the frame hash-partitioned on src, so under the loop
+        conf neither the degree nor the trailing repartition adds an
+        exchange (the separate degree aggregate, its broadcast join and the
+        (src, salt) regroup planned 2 exchanges here)."""
+        import re
+
+        from linkgraph.superstep import iteration_conf
+
+        with iteration_conf(spark, 2):
+            adj = build_adjacency(hub_edges, num_partitions=2, chunk_size=64)
+            plan = adj._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"\bExchange\b", plan)) == 1
+
     def test_derived_graph_runs_all_algorithms(self, spark):
         from linkgraph import connected_components, label_propagation, triangle_total
 

@@ -283,3 +283,26 @@ def test_round_loop_ports_keep_superstep_plan(spark, webmap_edges, monkeypatch, 
     shapes = _record_plan_shapes(monkeypatch, module, _loop_shape)
     _run_round_loop(loop, webmap_edges)
     assert shapes == want
+
+
+def test_cc_initial_state_reads_the_cached_adjacency(spark, webmap_edges, monkeypatch):
+    """On symmetrized edges CC's vertex frame and superstep-1 labels are
+    one aggregate over the cached adjacency, which is hash-partitioned
+    on ``src``: the initial state plans no exchange (it re-symmetrized
+    and re-grouped the edges before: 2 exchanges on webmap at p=2)."""
+    from linkgraph import connected_components
+    from linkgraph.superstep import iteration_conf
+
+    module = importlib.import_module("linkgraph.algorithms.cc")
+    iterate = module.iterate
+    init_shapes = []
+
+    def recording_iterate(init, superstep_fn, *args, **kwargs):
+        with iteration_conf(spark, 2):
+            init_shapes.append(_loop_shape(init._jdf.queryExecution().executedPlan()))
+        return iterate(init, superstep_fn, *args, **kwargs)
+
+    monkeypatch.setattr(module, "iterate", recording_iterate)
+    labels, _ = connected_components(webmap_edges, num_partitions=2)
+    assert init_shapes[0][0] == 0
+    assert labels.count() == 20
