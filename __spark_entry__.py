@@ -416,7 +416,6 @@ def _q_sssp_weighted(spark, sf):
         weight_col="w",
         vertices=document_vertices(spark, sf),
         max_supersteps=4 * WSSSP_STEPS,
-        track_messages=False,
     )
     if not res.converged or res.supersteps > WSSSP_STEPS:
         raise RuntimeError(
@@ -442,7 +441,6 @@ def _q_temporal_reachability(spark, sf):
         source=0,
         vertices=document_vertices(spark, sf),
         max_supersteps=4 * TEMPORAL_STEPS,
-        track_messages=False,
     )
     if not res.converged or res.supersteps > TEMPORAL_STEPS:
         raise RuntimeError(
@@ -468,7 +466,6 @@ def _q_temporal_departure(spark, sf):
         deadline=96,
         vertices=document_vertices(spark, sf),
         max_supersteps=4 * TEMPORAL_STEPS,
-        track_messages=False,
     )
     if not res.converged or res.supersteps > TEMPORAL_STEPS:
         raise RuntimeError(
@@ -588,7 +585,6 @@ def _q_hits(spark, sf):
         edges,
         iterations=HITS_ITERS,
         vertices=document_vertices(spark, sf),
-        track_messages=False,
     )
     return scores.select(
         "id",
@@ -608,7 +604,6 @@ def _q_kcore(spark, sf):
         edges,
         KCORE_K,
         vertices=document_vertices(spark, sf),
-        track_messages=False,
     )
     # the unrolled oracle peels KCORE_PASSES times; a deeper cascade
     # would make it silently under-peel — fail LOUDLY instead (one
@@ -2748,12 +2743,8 @@ def _q_incremental_cc(spark, sf):
     )
     new = kept.unionByName(flipped)
     verts = document_vertices(spark, sf)
-    old_labels, _ = connected_components(
-        old, vertices=verts, track_messages=False
-    )
-    labels, _ = incremental_cc(
-        new, old, old_labels, vertices=verts, track_messages=False
-    )
+    old_labels, _ = connected_components(old, vertices=verts)
+    labels, _ = incremental_cc(new, old, old_labels, vertices=verts)
     return labels
 
 
@@ -2858,7 +2849,6 @@ def _q_component_renumber(spark, sf):
     labels, _ = connected_components(
         document_edges(spark, sf),
         vertices=document_vertices(spark, sf),
-        track_messages=False,
     )
     return renumber_by_label(labels)
 
@@ -2960,68 +2950,65 @@ def _q_video_frame_plan(spark, sf):
     return frame_sample_plan(synth_mp4_media(spark, n=30), every_ms=700)
 
 
-# Gate rotation (round 5): the driver's per-round CORRECTNESS gate
-# checks the FIRST ~50 entries of queries() in dict order.  Rounds 1-4
-# accumulated committed hash-match rows for 123 of 132 queries
-# (CORRECTNESS_r01..r04); the 9 never-driver-gated queries lead the
-# round-5 window, followed by the queries newly added this round, then
-# already-gated backfill so the window stays ~50 wide.
-# tools/gate_rotation.py derives / audits this list from the committed
-# CORRECTNESS_r*.json files.
+# Gate rotation: the per-round CORRECTNESS gate checks the
+# FIRST ~50 entries of queries() in dict order.  The window is filled
+# oldest-gate-first: never-gated queries, then those whose latest green
+# gate (CORRECTNESS_r*.json) is oldest, so the longest-ungated
+# queries are always gated next.  tools/gate_rotation.py derives /
+# audits this list (regenerate it with `--emit`).
 _GATE_FRONT = [
-    # never driver-gated as of CORRECTNESS_r04 (9)
-    "random_walks_weighted",
-    "distinct_tokens_by_lang",
-    "louvain_hierarchy",
-    "multimodal_codec_decode",
-    "knn_label_accuracy_ann",
-    "ann_recall",
-    "incremental_cc_update",
-    "component_renumber",
-    "duplicate_spans",
-    # new round-5 queries slot in here as they are added
-    "cut_duplicate_spans",
-    "knn_label_accuracy_ivf",
-    "knn_label_accuracy_pq",
-    "ann_recall_ivf",
-    "ann_recall_pq",
-    "maintained_stream_state",
-    "mp4_metadata_walk",
-    "video_frame_plan",
-    "dedup_cut_pipeline",
-    "semantic_dedup",
-    # already-gated backfill (window stays ~50 wide; re-verification)
-    "unigram_lm_score",
-    "seeded_label_propagation",
-    "pii_redaction",
-    "repetition_stats",
-    "ngram_decontamination",
-    "pack_sequences",
-    "proportional_sample",
-    "weighted_sample",
-    "stratified_sample",
-    "event_sessions",
-    "minhash_verified_pairs",
-    "canonical_docs",
-    "training_batch_pipeline",
-    "skipgram_pairs",
-    "sgns_embeddings",
-    "sgns_linkpred_auc",
-    "khop_features",
-    "wl_roles",
-    "wl_fingerprint",
-    "bpe_merges",
-    "bpe_encode_counts",
-    "collocations",
-    "cms_token_counts",
-    "embedding_pq_topk",
-    "motif_open_triads",
-    "chunk_documents",
-    "graph_delta",
-    "triangle_delta",
-    "motif_time_chains",
-    "partition_report",
-    "random_walks",
+    # latest green gate: r02
+    "normalize_text",
+    "contamination_check",
+    "embedding_cosine_topk",
+    "customer_orders_by_nation",
+    "pricing_summary",
+    "big_spenders_semi",
+    "customers_without_orders",
+    "events_per_type",
+    "events_hourly",
+    "minhash_lsh_pairs",
+    "dedup_clusters",
+    "distinct_token_sketch",
+    "simhash64",
+    "simhash_pairs",
+    "embedding_lsh_topk",
+    "embedding_neardup_pairs",
+    "embedding_ivf_topk",
+    "multimodal_features",
+    "multimodal_raw_decode",
+    "graph_sample",
+    "kmeans_centers",
+    "maximum_cliques",
+    "bgd_weights",
+    # latest green gate: r03
+    "edge_derivation",
+    "degree_distribution",
+    "pagerank",
+    "connected_components",
+    "connected_components_hashmin",
+    "strongly_connected_components",
+    "label_propagation",
+    "lpa_modularity",
+    "community_conductance",
+    "triangles_per_vertex",
+    "triangle_total",
+    "clustering_coefficient",
+    "transitivity",
+    "sssp_hops",
+    "sssp_vertex_program",
+    "sssp_weighted",
+    "temporal_reachability",
+    "temporal_departure",
+    "degree_weighted_pagerank",
+    "repo_rollup",
+    "weighted_repo_pagerank",
+    "link_prediction",
+    "personalized_pagerank",
+    "ppr_sweep_cut",
+    "hits_scores",
+    "kcore_membership",
+    "ktruss_edges",
 ]
 
 

@@ -84,7 +84,7 @@ def main() -> None:
     # compilation, not the dataflow — the same warmup-exclusion rule the
     # scaling ladder documents in BENCH/BASELINE.md. The warmup superstep
     # count is reported alongside for auditability.
-    pagerank(edges, fixed_updates=2, track_messages=False)
+    pagerank(edges, fixed_updates=2)
     # Best of 3 for the HEADLINE (disclosed via headline_runs; r4 was
     # best-of-2): hypervisor steal bursts have produced 2x swings on
     # single runs of this box, and an isolated probe this round showed
@@ -98,7 +98,6 @@ def main() -> None:
             tol=PAGERANK_TOL,
             max_supersteps=PAGERANK_MAX_SUPERSTEPS,
             vertices=document_vertices(spark, sf_dir),
-            track_messages=False,
         )
         force(ranks)
         headline_runs.append(round(time.monotonic() - t0, 3))

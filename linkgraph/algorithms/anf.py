@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..partitioning import build_adjacency, symmetrize
 from ..phash import md5_digits_spark_sql
-from ..superstep import LoopResult, StepResult, iterate, loop_scope
+from ..superstep import LoopResult, iterate, loop_scope
 
 FM_PHI = 0.77351
 
@@ -164,7 +164,7 @@ def neighborhood_function(
 
         res = iterate(
             init,
-            lambda state, h: StepResult(_sketch_union(adj, state, K)),
+            lambda state, h: _sketch_union(adj, state, K),
             converged=lambda s: early_stop and s.changed == 0,
             max_supersteps=max_h,
             num_partitions=p,
@@ -314,8 +314,8 @@ def _ball_delta_loop(
             *[f"CAST(0 AS BIGINT) AS {a}" for a in accs],
         )
 
-        def superstep(state: DataFrame, h: int) -> StepResult:
-            return StepResult(
+        def superstep(state: DataFrame, h: int) -> DataFrame:
+            return (
                 _sketch_union(adj, state, K, "eu", *accs)
                 .selectExpr("id", *s_cols, f"{est_units} AS _eu_new", "eu", *accs, "_changed")
                 .selectExpr(

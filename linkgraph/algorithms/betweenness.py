@@ -58,7 +58,6 @@ from pyspark.sql import functions as F
 from ..partitioning import symmetrize
 from ..superstep import (
     LoopResult,
-    StepResult,
     iterate,
     loop_scope,
     release_local_checkpoint,
@@ -105,7 +104,7 @@ def betweenness_centrality(
         adj = scope.cache(e.repartition(p, "src"))
 
         # ---- forward: grow the shortest-path DAG level by level ----
-        def forward(dag: DataFrame, d: int) -> StepResult:
+        def forward(dag: DataFrame, d: int) -> DataFrame:
             frontier = dag.filter(F.col("dist") == d - 1)
             cand = (
                 frontier.alias("f")
@@ -118,7 +117,7 @@ def betweenness_centrality(
                 .join(dag.alias("g"), ["s", "v"], "left_anti")
                 .selectExpr("s", "v", f"CAST({d} AS INT) AS dist", "sigma")
             )
-            return StepResult(dag.unionByName(lvl).withColumn("_changed", F.col("dist") == d))
+            return dag.unionByName(lvl).withColumn("_changed", F.col("dist") == d)
 
         src_df = edges.sparkSession.createDataFrame([(int(s),) for s in sources], "s long")
         fwd = iterate(
@@ -138,7 +137,7 @@ def betweenness_centrality(
         # delta rows: (s, v, du BIGINT micro-units); deepest level = 0.
         # Each term ROUNDs to integer units before the SUM, keeping every
         # aggregate integer-exact (order-independent).
-        def backward(deltas: DataFrame, k: int) -> StepResult:
+        def backward(deltas: DataFrame, k: int) -> DataFrame:
             d = depth - k + 1
             cur = deltas.filter(F.col("dist") == d).alias("w")
             prev = dag.filter(F.col("dist") == d - 1).alias("u")
@@ -171,7 +170,7 @@ def betweenness_centrality(
                     "COALESCE(c, CAST(0 AS BIGINT)) AS du",
                 )
             )
-            return StepResult(deltas.unionByName(lvl))
+            return deltas.unionByName(lvl)
 
         bwd = None
         try:

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..partitioning import build_adjacency, symmetrize
-from ..superstep import LoopResult, StepResult, iterate, loop_scope
+from ..superstep import LoopResult, iterate, loop_scope
 from .cc import connected_components
 
 
@@ -91,7 +91,7 @@ def bipartite_check(
             "CAST(cand IS NOT NULL AS BIGINT) AS _msgs",
         ]
 
-        def superstep(state: DataFrame, k: int) -> StepResult:
+        def superstep(state: DataFrame, k: int) -> DataFrame:
             msgs = (
                 adj.join(state.filter("changed"), F.expr("src = id"))
                 .selectExpr(
@@ -101,12 +101,11 @@ def bipartite_check(
                 .groupBy("id")
                 .agg(F.expr("bit_or(m) AS cand"))
             )
-            new = (
+            return (
                 state.select("id", "component", "mask")
                 .join(msgs, "id", "left_outer")
                 .selectExpr(*step_exprs)
             )
-            return StepResult(state=new, messages=msgs)
 
         res = iterate(
             init.withColumn("_changed", F.col("changed")).withColumn(

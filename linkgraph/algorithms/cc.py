@@ -45,7 +45,6 @@ from ..graph import choose_partitions, vertices_from_edges
 from ..partitioning import build_adjacency, symmetrize
 from ..superstep import (
     LoopResult,
-    StepResult,
     iterate,
     iteration_conf,
     loop_scope,
@@ -62,7 +61,6 @@ def connected_components(
     max_supersteps: int = 200,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
     init_labels: DataFrame | None = None,
     initial_active: DataFrame | None = None,
 ) -> tuple[DataFrame, LoopResult]:
@@ -157,14 +155,13 @@ def connected_components(
                 .agg(F.expr("MIN(cand) AS cand"))
             )
 
-        def superstep(state: DataFrame, k: int) -> StepResult:
+        def superstep(state: DataFrame, k: int) -> DataFrame:
             msgs = _messages(state)
-            new = (
+            return (
                 state.drop("changed")
                 .join(msgs, "id", "left_outer")
                 .selectExpr(*step_exprs)
             )
-            return StepResult(state=new, messages=msgs)
 
         result = iterate(
             init.withColumn("_changed", F.col("changed")),
@@ -173,7 +170,6 @@ def connected_components(
             max_supersteps=max_supersteps,
             ckpt=ckpt,
             resume=resume,
-            track_messages=track_messages,
             num_partitions=p,
         )
     return result.state.select("id", "component"), result
@@ -231,7 +227,7 @@ def connected_components_hashmin(
     )
     large_held: list[DataFrame] = []
 
-    def superstep(e: DataFrame, k: int) -> StepResult:
+    def superstep(e: DataFrame, k: int) -> DataFrame:
         # last round's large-star edges are dead once its state exists
         while large_held:
             large_held.pop().unpersist()
@@ -258,7 +254,7 @@ def connected_components_hashmin(
         # ---- small-star: smaller neighbors (and u) link to the min ----
         smins = large.groupBy("hi").agg(F.min("lo").alias("m"))
         joined = large.join(smins, "hi")
-        return StepResult(
+        return (
             joined.filter(F.col("lo") != F.col("m"))
             # m = min over hi's smaller neighbors, so m < lo here
             .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))

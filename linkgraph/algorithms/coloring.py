@@ -53,7 +53,7 @@ from ..checkpoint import CheckpointManager
 from ..partitioning import symmetrize
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
 from ..phash import md5_int_sql as _md5_int_sql
-from ..superstep import LoopResult, StepResult, iterate, loop_scope
+from ..superstep import LoopResult, iterate, loop_scope
 
 UNCOLORED = -1
 
@@ -120,7 +120,7 @@ def greedy_coloring(
 
         init = scope.vertices(vertices).withColumn("color", F.lit(UNCOLORED).cast("int"))
 
-        def superstep(state: DataFrame, k: int) -> StepResult:
+        def superstep(state: DataFrame, k: int) -> DataFrame:
             # ONE gather join + ONE combine per superstep (the engine's
             # audited PageRank/CC shape): every neighbor contributes EITHER its
             # coin (still uncolored) or its color (already colored), and a
@@ -143,7 +143,7 @@ def greedy_coloring(
             win = (F.col("color") == UNCOLORED) & (
                 F.col("mn").isNull() | (F.col("ck") < F.col("mn"))
             )
-            new = (
+            return (
                 snd.join(msgs, "id", "left_outer")
                 .withColumn("used", F.coalesce(F.col("used"), F.expr("array()")))
                 .select(
@@ -161,7 +161,6 @@ def greedy_coloring(
                 # _delta carries the still-uncolored count for the stop check
                 .withColumn("_delta", (F.col("color") == UNCOLORED).cast("double"))
             )
-            return StepResult(state=new)
 
         result = iterate(
             init.withColumn("_changed", F.lit(False)).withColumn("_delta", F.lit(1.0)),
@@ -170,7 +169,6 @@ def greedy_coloring(
             max_supersteps=max_supersteps,
             ckpt=ckpt,
             resume=resume,
-            track_messages=True,
             num_partitions=p,
         )
     out = result.state.select("id", F.col("color").cast("int").alias("color"))

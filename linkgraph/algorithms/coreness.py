@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ..graph import vertices_from_edges
 from ..partitioning import symmetrize
-from ..superstep import LoopResult, StepResult, iterate, loop_scope
+from ..superstep import LoopResult, iterate, loop_scope
 
 
 def core_decomposition(
@@ -102,7 +102,7 @@ def core_decomposition(
 
         w = Window.partitionBy("dst").orderBy(F.desc("c"))
 
-        def superstep(state: DataFrame, it: int) -> StepResult:
+        def superstep(state: DataFrame, it: int) -> DataFrame:
             if it == 1:
                 # round 1 evaluates every vertex (init marks all
                 # changed): the full gather IS the affected set, so
@@ -129,7 +129,7 @@ def core_decomposition(
                 .groupBy("dst")
                 .agg(F.max(F.least("c", "rn")).alias("h"))
             )
-            return StepResult(
+            return (
                 state.join(hidx, state.id == hidx.dst, "left_outer")
                 .selectExpr(
                     "id",

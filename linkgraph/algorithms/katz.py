@@ -83,7 +83,6 @@ def eigenvector_centrality(
         chunk_size=chunk_size,
         ckpt=ckpt,
         resume=resume,
-        track_messages=False,
     )
     walks = walks.select("id", F.col("value").alias("walks"))
     mx = walks.agg(F.max("walks").alias("_mx"))
@@ -111,7 +110,6 @@ def katz_centrality(
     chunk_size: int = 4096,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
 ) -> tuple[DataFrame, LoopResult]:
     """Returns (DF(id, katz), LoopResult).
 
@@ -151,6 +149,5 @@ def katz_centrality(
         chunk_size=chunk_size,
         ckpt=ckpt,
         resume=resume,
-        track_messages=track_messages,
     )
     return katz.select("id", F.col("value").alias("katz")), result

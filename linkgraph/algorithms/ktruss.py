@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..graph import choose_partitions
 from ..partitioning import symmetrize
-from ..superstep import LoopResult, StepResult, iterate
+from ..superstep import LoopResult, iterate
 
 
 def ktruss(
@@ -63,7 +63,7 @@ def ktruss(
         .selectExpr("src AS a", "dst AS b", "CAST(0 AS BIGINT) AS support")
     )
 
-    def superstep(kept: DataFrame, r: int) -> StepResult:
+    def superstep(kept: DataFrame, r: int) -> DataFrame:
         e = kept.select("a", "b")
         tri = (
             e.selectExpr("a AS x", "b AS y")
@@ -84,7 +84,7 @@ def ktruss(
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("support"))
         )
-        return StepResult(
+        return (
             e.join(sup, ["a", "b"], "left_outer")
             .selectExpr("a", "b", "COALESCE(support, 0L) AS support")
             .filter(F.col("support") >= need)

@@ -35,7 +35,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..partitioning import symmetrize
-from ..superstep import iteration_conf, local_checkpoint_fresh_stats, loop_scope
+from ..superstep import (
+    iteration_conf,
+    local_checkpoint_fresh_stats,
+    loop_scope,
+    release_local_checkpoint,
+)
 
 
 def select_landmarks(
@@ -95,22 +100,29 @@ def landmark_distances(
             .repartition(p, "id")
         )
         level_frames = [frontier]
-        for d in range(1, max_depth + 1):
-            visited = level_frames[0].select("landmark", "id")
-            for fr in level_frames[1:]:
-                visited = visited.unionAll(fr.select("landmark", "id"))
-            nxt = (
-                frontier.alias("f")
-                .join(adj.alias("e"), F.col("f.id") == F.col("e.src"))
-                .select("f.landmark", F.col("e.dst").alias("id"))
-                .distinct()
-                .join(visited, ["landmark", "id"], "left_anti")
-                .select("landmark", "id", F.lit(d).cast("int").alias("dist"))
-            )
-            frontier = local_checkpoint_fresh_stats(nxt)
-            if frontier.isEmpty():
-                break
-            level_frames.append(frontier)
+        try:
+            for d in range(1, max_depth + 1):
+                visited = level_frames[0].select("landmark", "id")
+                for fr in level_frames[1:]:
+                    visited = visited.unionAll(fr.select("landmark", "id"))
+                nxt = (
+                    frontier.alias("f")
+                    .join(adj.alias("e"), F.col("f.id") == F.col("e.src"))
+                    .select("f.landmark", F.col("e.dst").alias("id"))
+                    .distinct()
+                    .join(visited, ["landmark", "id"], "left_anti")
+                    .select("landmark", "id", F.lit(d).cast("int").alias("dist"))
+                )
+                frontier = local_checkpoint_fresh_stats(nxt)
+                level_frames.append(frontier)
+                if frontier.isEmpty():
+                    release_local_checkpoint(level_frames.pop())
+                    break
+        except BaseException:
+            # on success the level frames are the result
+            for fr in level_frames:
+                release_local_checkpoint(fr)
+            raise
 
         lab = level_frames[0]
         for fr in level_frames[1:]:

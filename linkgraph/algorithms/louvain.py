@@ -71,7 +71,12 @@ from pyspark.sql import functions as F
 
 from ..graph import choose_partitions, vertices_from_edges
 from ..partitioning import symmetrize
-from ..superstep import iteration_conf, local_checkpoint_fresh_stats, loop_scope
+from ..superstep import (
+    iteration_conf,
+    local_checkpoint_fresh_stats,
+    loop_scope,
+    release_local_checkpoint,
+)
 
 DEC = "decimal(38,0)"
 
@@ -123,95 +128,105 @@ def _move_rounds(
 ) -> DataFrame:
     """``rounds`` synchronous greedy moves over the weighted symmetric
     relation ``wsym(src, dst, w)`` (self rows allowed), starting from
-    ``lab(id, community)``. Returns the updated labels."""
-    # weighted degree k_v: self rows count fully (they carry 2x the
-    # undirected intra weight by construction)
-    deg = wsym.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("deg"))
-    nonself = wsym.filter(F.col("src") != F.col("dst"))
+    ``lab(id, community)``. Returns the updated labels.
 
-    for _r in range(rounds):
-        vol = (
-            lab.join(deg, "id")
-            .groupBy("community")
-            .agg(F.sum("deg").alias("vol"))
-        )
-        # v's edge weight into each adjacent community (self rows out)
-        evc = (
-            nonself.join(
-                lab.select(
-                    F.col("id").alias("dst"), F.col("community").alias("c2")
-                ),
-                "dst",
+    Takes ownership of the checkpointed ``lab``: each round's labels are
+    freed once the next round's exist, and the current ones when a
+    round raises."""
+    try:
+        # weighted degree k_v: self rows count fully (they carry 2x the
+        # undirected intra weight by construction)
+        deg = wsym.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("deg"))
+        nonself = wsym.filter(F.col("src") != F.col("dst"))
+
+        for _r in range(rounds):
+            vol = (
+                lab.join(deg, "id")
+                .groupBy("community")
+                .agg(F.sum("deg").alias("vol"))
             )
-            .groupBy(F.col("src").alias("id"), "c2")
-            .agg(F.sum("w").alias("e"))
-        )
-        cur = (
-            lab.join(deg, "id", "left_outer")
-            .join(
-                vol.select(F.col("community"), F.col("vol").alias("vol_a")),
-                "community",
-                "left_outer",
+            # v's edge weight into each adjacent community (self rows out)
+            evc = (
+                nonself.join(
+                    lab.select(
+                        F.col("id").alias("dst"), F.col("community").alias("c2")
+                    ),
+                    "dst",
+                )
+                .groupBy(F.col("src").alias("id"), "c2")
+                .agg(F.sum("w").alias("e"))
             )
-            .join(
-                evc.select(
-                    "id", F.col("c2").alias("community"), F.col("e").alias("e_a")
-                ),
-                ["id", "community"],
-                "left_outer",
+            cur = (
+                lab.join(deg, "id", "left_outer")
+                .join(
+                    vol.select(F.col("community"), F.col("vol").alias("vol_a")),
+                    "community",
+                    "left_outer",
+                )
+                .join(
+                    evc.select(
+                        "id", F.col("c2").alias("community"), F.col("e").alias("e_a")
+                    ),
+                    ["id", "community"],
+                    "left_outer",
+                )
+                .select(
+                    "id",
+                    F.col("community").alias("a"),
+                    F.coalesce("deg", F.lit(0)).alias("deg_v"),
+                    (
+                        F.coalesce("vol_a", F.lit(0)) - F.coalesce("deg", F.lit(0))
+                    ).alias("vol_rest"),
+                    F.coalesce("e_a", F.lit(0)).alias("e_a"),
+                )
             )
-            .select(
-                "id",
-                F.col("community").alias("a"),
-                F.coalesce("deg", F.lit(0)).alias("deg_v"),
-                (
-                    F.coalesce("vol_a", F.lit(0)) - F.coalesce("deg", F.lit(0))
-                ).alias("vol_rest"),
-                F.coalesce("e_a", F.lit(0)).alias("e_a"),
+            direction = (
+                (F.col("c2") < F.col("a"))
+                if _r % 2 == 0
+                else (F.col("c2") > F.col("a"))
             )
-        )
-        direction = (
-            (F.col("c2") < F.col("a"))
-            if _r % 2 == 0
-            else (F.col("c2") > F.col("a"))
-        )
-        cand = (
-            evc.join(cur, "id")
-            .filter(direction)
-            .join(vol.select(F.col("community").alias("c2"), "vol"), "c2")
-            .select(
-                "id",
-                "a",
-                "c2",
-                (
-                    F.lit(two_m).cast(DEC)
-                    * (F.col("e") - F.col("e_a")).cast(DEC)
-                    - F.col("deg_v").cast(DEC)
-                    * (F.col("vol") - F.col("vol_rest")).cast(DEC)
-                ).alias("score"),
+            cand = (
+                evc.join(cur, "id")
+                .filter(direction)
+                .join(vol.select(F.col("community").alias("c2"), "vol"), "c2")
+                .select(
+                    "id",
+                    "a",
+                    "c2",
+                    (
+                        F.lit(two_m).cast(DEC)
+                        * (F.col("e") - F.col("e_a")).cast(DEC)
+                        - F.col("deg_v").cast(DEC)
+                        * (F.col("vol") - F.col("vol_rest")).cast(DEC)
+                    ).alias("score"),
+                )
             )
-        )
-        tiekey = (-F.col("c2")) if _r % 2 == 0 else F.col("c2")
-        sign = -1 if _r % 2 == 0 else 1
-        best = (
-            cand.groupBy("id")
-            .agg(F.max(F.struct(F.col("score"), tiekey.alias("tk"))).alias("b"))
-            .select(
-                "id",
-                F.col("b.score").alias("score"),
-                (F.lit(sign) * F.col("b.tk")).alias("c_new"),
+            tiekey = (-F.col("c2")) if _r % 2 == 0 else F.col("c2")
+            sign = -1 if _r % 2 == 0 else 1
+            best = (
+                cand.groupBy("id")
+                .agg(F.max(F.struct(F.col("score"), tiekey.alias("tk"))).alias("b"))
+                .select(
+                    "id",
+                    F.col("b.score").alias("score"),
+                    (F.lit(sign) * F.col("b.tk")).alias("c_new"),
+                )
             )
-        )
-        lab = local_checkpoint_fresh_stats(
-            lab.join(best, "id", "left_outer")
-            .select(
-                "id",
-                F.when(F.col("score") > 0, F.col("c_new"))
-                .otherwise(F.col("community"))
-                .alias("community"),
+            nxt = local_checkpoint_fresh_stats(
+                lab.join(best, "id", "left_outer")
+                .select(
+                    "id",
+                    F.when(F.col("score") > 0, F.col("c_new"))
+                    .otherwise(F.col("community"))
+                    .alias("community"),
+                )
+                .repartition(p, "id")
             )
-            .repartition(p, "id")
-        )
+            release_local_checkpoint(lab)
+            lab = nxt
+    except BaseException:
+        release_local_checkpoint(lab)
+        raise
     return lab
 
 
@@ -279,73 +294,85 @@ def louvain_multilevel(
     if vertices is None:
         vertices = vertices_from_edges(edges)
 
-    with iteration_conf(spark, p):
-        wsym = (
-            symmetrize(edges.filter(F.col("src") != F.col("dst")))
-            .withColumn("w", F.lit(1).cast("long"))
-            .repartition(p, "src")
-            .persist()
-        )
-        two_m = wsym.count()
-        # vertex -> current flat community (mapped to original ids)
-        flat = local_checkpoint_fresh_stats(
-            vertices.select("id", F.col("id").alias("community")).repartition(
-                p, "id"
+    # wsym and every frame the levels make (the output joins all the
+    # flat labels) are freed on the way out, also when a level raises
+    wsym = None
+    held: list[DataFrame] = []
+    try:
+        with iteration_conf(spark, p):
+            wsym = (
+                symmetrize(edges.filter(F.col("src") != F.col("dst")))
+                .withColumn("w", F.lit(1).cast("long"))
+                .repartition(p, "src")
+                .persist()
             )
-        )
-        out = vertices.select("id").repartition(p, "id")
-        for lvl in range(1, levels + 1):
-            supers = flat.select(
-                F.col("community").alias("id")
-            ).distinct()
-            lab = local_checkpoint_fresh_stats(
-                supers.select("id", F.col("id").alias("community")).repartition(
+            two_m = wsym.count()
+            # vertex -> current flat community (mapped to original ids)
+            flat = local_checkpoint_fresh_stats(
+                vertices.select("id", F.col("id").alias("community")).repartition(
                     p, "id"
                 )
             )
-            lab = _move_rounds(wsym, lab, two_m, rounds, p)
-            # map the level's result down to original vertices
-            flat = local_checkpoint_fresh_stats(
-                flat.select("id", F.col("community").alias("_s"))
-                .join(
-                    lab.select(
-                        F.col("id").alias("_s"), F.col("community").alias("community")
-                    ),
-                    "_s",
-                )
-                .select("id", "community")
-                .repartition(p, "id")
-            )
-            out = out.join(
-                flat.select("id", F.col("community").alias(f"c{lvl}")), "id"
-            )
-            if lvl < levels:
-                # contract: super-vertices = communities, weights sum;
-                # intra weight lands on (c, c) self rows
-                nxt = (
-                    wsym.join(
-                        lab.select(
-                            F.col("id").alias("src"), F.col("community").alias("_ca")
-                        ),
-                        "src",
+            held.append(flat)
+            out = vertices.select("id").repartition(p, "id")
+            for lvl in range(1, levels + 1):
+                supers = flat.select(
+                    F.col("community").alias("id")
+                ).distinct()
+                lab = local_checkpoint_fresh_stats(
+                    supers.select("id", F.col("id").alias("community")).repartition(
+                        p, "id"
                     )
+                )
+                lab = _move_rounds(wsym, lab, two_m, rounds, p)
+                held.append(lab)
+                # map the level's result down to original vertices
+                flat = local_checkpoint_fresh_stats(
+                    flat.select("id", F.col("community").alias("_s"))
                     .join(
                         lab.select(
-                            F.col("id").alias("dst"), F.col("community").alias("_cb")
+                            F.col("id").alias("_s"), F.col("community").alias("community")
                         ),
-                        "dst",
+                        "_s",
                     )
-                    .groupBy(
-                        F.col("_ca").alias("src"), F.col("_cb").alias("dst")
-                    )
-                    .agg(F.sum("w").alias("w"))
-                    .repartition(p, "src")
-                    .persist()
+                    .select("id", "community")
+                    .repartition(p, "id")
                 )
-                nxt.count()
-                wsym.unpersist()
-                wsym = nxt
-        wsym.unpersist()
-    return local_checkpoint_fresh_stats(
-        out.withColumn("community", F.col(f"c{levels}"))
-    )
+                held.append(flat)
+                out = out.join(
+                    flat.select("id", F.col("community").alias(f"c{lvl}")), "id"
+                )
+                if lvl < levels:
+                    # contract: super-vertices = communities, weights sum;
+                    # intra weight lands on (c, c) self rows
+                    nxt = (
+                        wsym.join(
+                            lab.select(
+                                F.col("id").alias("src"), F.col("community").alias("_ca")
+                            ),
+                            "src",
+                        )
+                        .join(
+                            lab.select(
+                                F.col("id").alias("dst"), F.col("community").alias("_cb")
+                            ),
+                            "dst",
+                        )
+                        .groupBy(
+                            F.col("_ca").alias("src"), F.col("_cb").alias("dst")
+                        )
+                        .agg(F.sum("w").alias("w"))
+                        .repartition(p, "src")
+                        .persist()
+                    )
+                    nxt.count()
+                    wsym.unpersist()
+                    wsym = nxt
+        return local_checkpoint_fresh_stats(
+            out.withColumn("community", F.col(f"c{levels}"))
+        )
+    finally:
+        if wsym is not None:
+            wsym.unpersist()
+        for df in held:
+            release_local_checkpoint(df)

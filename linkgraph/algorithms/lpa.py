@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
 from ..partitioning import build_adjacency, symmetrize
-from ..superstep import LoopResult, StepResult, iterate, loop_scope
+from ..superstep import LoopResult, iterate, loop_scope
 
 
 def label_propagation(
@@ -37,7 +37,6 @@ def label_propagation(
     chunk_size: int = 4096,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
 ) -> tuple[DataFrame, LoopResult]:
     """Returns (DF(id, label), LoopResult)."""
     scale = 2 if symmetrize_edges else 1
@@ -49,7 +48,7 @@ def label_propagation(
 
         init = verts.withColumn("label", F.col("id"))
 
-        def superstep(state: DataFrame, k: int) -> StepResult:
+        def superstep(state: DataFrame, k: int) -> DataFrame:
             labels = state.select("id", "label")
             # scatter current labels to all neighbors (synchronous LPA)
             msgs = (
@@ -64,7 +63,7 @@ def label_propagation(
                 .agg(F.max(F.struct(F.col("cnt"), (-F.col("nlbl")).alias("neg"))).alias("m"))
                 .select("id", (-F.col("m.neg")).alias("mode_lbl"))
             )
-            new = (
+            return (
                 labels.withColumnRenamed("label", "_old")
                 .join(mode, "id", "left_outer")
                 .select(
@@ -76,7 +75,6 @@ def label_propagation(
                 .withColumn("_changed", F.col("label") != F.col("_old"))
                 .drop("_old")
             )
-            return StepResult(state=new, messages=msgs)
 
         result = iterate(
             init,
@@ -85,7 +83,6 @@ def label_propagation(
             max_supersteps=max_supersteps,
             ckpt=ckpt,
             resume=resume,
-            track_messages=track_messages,
             num_partitions=p,
         )
     return result.state.select("id", "label"), result

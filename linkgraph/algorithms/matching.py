@@ -107,7 +107,6 @@ def maximal_matching(
     """
     from ..superstep import (
         LoopResult,
-        StepResult,
         iterate,
         local_checkpoint_fresh_stats,
         release_local_checkpoint,
@@ -135,7 +134,7 @@ def maximal_matching(
     # "cur" was built from it, then freed.
     carried: dict[str, DataFrame | None] = {"cur": None, "prev": None}
 
-    def superstep(state: DataFrame, k: int) -> StepResult:
+    def superstep(state: DataFrame, k: int) -> DataFrame:
         if carried["prev"] is not None:
             release_local_checkpoint(carried["prev"])
         carried["prev"] = carried["cur"]
@@ -184,7 +183,7 @@ def maximal_matching(
         # with no live edges, i.e. the matching was already maximal.
         # Costs one (empty) trailing round instead of a per-round
         # survivors pass (two anti-joins + distinct in the old shape).
-        new = (
+        return (
             state.join(mates, "id", "left_outer")
             .join(vm.select(F.col("vid").alias("id"), "nle"), "id", "left_outer")
             .select(
@@ -195,18 +194,19 @@ def maximal_matching(
                 F.coalesce(F.col("nle"), F.lit(0)).cast("double").alias("_delta"),
             )
         )
-        return StepResult(state=new)
 
-    result = iterate(
-        init.withColumn("_changed", F.lit(False)).withColumn("_delta", F.lit(1.0)),
-        superstep,
-        converged=lambda s: (s.delta or 0.0) == 0.0,
-        max_supersteps=max_supersteps,
-        ckpt=ckpt,
-        resume=resume,
-        num_partitions=p,
-    )
-    for key in ("prev", "cur"):
-        if carried[key] is not None:
-            release_local_checkpoint(carried[key])
+    try:
+        result = iterate(
+            init.withColumn("_changed", F.lit(False)).withColumn("_delta", F.lit(1.0)),
+            superstep,
+            converged=lambda s: (s.delta or 0.0) == 0.0,
+            max_supersteps=max_supersteps,
+            ckpt=ckpt,
+            resume=resume,
+            num_partitions=p,
+        )
+    finally:
+        for key in ("prev", "cur"):
+            if carried[key] is not None:
+                release_local_checkpoint(carried[key])
     return result.state.select("id", "mate"), result

@@ -40,7 +40,7 @@ from ..checkpoint import CheckpointManager
 from ..partitioning import symmetrize
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
 from ..phash import md5_int_sql as _md5_int_sql
-from ..superstep import LoopResult, StepResult, iterate, loop_scope
+from ..superstep import LoopResult, iterate, loop_scope
 
 # status codes carried in the vertex state
 LIVE, IN_MIS, REMOVED = 0, 1, 2
@@ -89,7 +89,7 @@ def maximal_independent_set(
 
         init = scope.vertices(vertices).withColumn("status", F.lit(LIVE).cast("int"))
 
-        def superstep(state: DataFrame, k: int) -> StepResult:
+        def superstep(state: DataFrame, k: int) -> DataFrame:
             live = state.filter(F.col("status") == LIVE).select("id")
             coins = live.select(
                 "id", F.expr(_spark_coin("id", k, seed, portable)).alias("ck")
@@ -119,7 +119,7 @@ def maximal_independent_set(
                 .distinct()
                 .withColumn("_rm", F.lit(True))
             )
-            new = (
+            return (
                 state.join(verdict.select("id", "won", "_msgs"), "id", "left_outer")
                 .join(rem, "id", "left_outer")
                 .select(
@@ -143,7 +143,6 @@ def maximal_independent_set(
                     "_delta", (F.col("status") == LIVE).cast("double")
                 )
             )
-            return StepResult(state=new)
 
         result = iterate(
             init.withColumn("_changed", F.lit(False)).withColumn("_delta", F.lit(1.0)),
@@ -152,7 +151,6 @@ def maximal_independent_set(
             max_supersteps=max_supersteps,
             ckpt=ckpt,
             resume=resume,
-            track_messages=True,
             num_partitions=p,
         )
     out = result.state.select(

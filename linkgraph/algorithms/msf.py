@@ -55,7 +55,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import choose_partitions
-from ..superstep import iteration_conf, local_checkpoint_fresh_stats
+from ..superstep import (
+    iteration_conf,
+    local_checkpoint_fresh_stats,
+    release_local_checkpoint,
+)
 
 
 def minimum_spanning_forest(
@@ -84,105 +88,123 @@ def minimum_spanning_forest(
         if weight_col is not None
         else F.lit(1).cast("long")
     )
-    with iteration_conf(spark, p):
-        canon = (
-            edges.select(
-                F.least("src", "dst").alias("u"),
-                F.greatest("src", "dst").alias("v"),
-                w.alias("weight"),
+    # each round's picked edges: the result. Every other frame is freed
+    # once its successor exists, and in the finally
+    forest: list[DataFrame] = []
+    canon = lab = bridge = par = None
+    try:
+        with iteration_conf(spark, p):
+            canon = (
+                edges.select(
+                    F.least("src", "dst").alias("u"),
+                    F.greatest("src", "dst").alias("v"),
+                    w.alias("weight"),
+                )
+                .filter(F.col("u") != F.col("v"))
+                .groupBy("u", "v")
+                .agg(F.min("weight").alias("weight"))
+                .repartition(p, "u")
+                .localCheckpoint(eager=True)
             )
-            .filter(F.col("u") != F.col("v"))
-            .groupBy("u", "v")
-            .agg(F.min("weight").alias("weight"))
-            .repartition(p, "u")
-            .localCheckpoint(eager=True)
-        )
 
-        # labels: vertex -> current component (starts as itself)
-        lab = (
-            canon.select(F.col("u").alias("id"))
-            .unionAll(canon.select(F.col("v").alias("id")))
-            .distinct()
-            .select("id", F.col("id").alias("comp"))
-            .repartition(p, "id")
-            .localCheckpoint(eager=True)
-        )
+            # labels: vertex -> current component (starts as itself)
+            lab = (
+                canon.select(F.col("u").alias("id"))
+                .unionAll(canon.select(F.col("v").alias("id")))
+                .distinct()
+                .select("id", F.col("id").alias("comp"))
+                .repartition(p, "id")
+                .localCheckpoint(eager=True)
+            )
 
-        forest_frames: list[DataFrame] = []
-        rounds = 0
-        for _ in range(max_rounds):
-            # edges bridging two current components, labeled both sides
-            lu = lab.select(F.col("id").alias("u"), F.col("comp").alias("cu"))
-            lv = lab.select(F.col("id").alias("v"), F.col("comp").alias("cv"))
-            bridge = local_checkpoint_fresh_stats(
-                canon.join(lu, "u")
-                .join(lv, "v")
-                .filter(F.col("cu") != F.col("cv"))
-            )
-            if bridge.isEmpty():
-                break
-            rounds += 1
+            rounds = 0
+            for _ in range(max_rounds):
+                # edges bridging two current components, labeled both sides
+                lu = lab.select(F.col("id").alias("u"), F.col("comp").alias("cu"))
+                lv = lab.select(F.col("id").alias("v"), F.col("comp").alias("cv"))
+                bridge = local_checkpoint_fresh_stats(
+                    canon.join(lu, "u")
+                    .join(lv, "v")
+                    .filter(F.col("cu") != F.col("cv"))
+                )
+                if bridge.isEmpty():
+                    break
+                rounds += 1
 
-            # every component picks its minimum outgoing edge under the
-            # total order (weight, u, v): struct-min IS that order, one
-            # partial/final aggregate per side riding a single exchange
-            cand = F.struct("weight", "u", "v", "cu", "cv")
-            offers = bridge.select(F.col("cu").alias("c"), cand.alias("m")).unionAll(
-                bridge.select(F.col("cv").alias("c"), cand.alias("m"))
-            )
-            mins = offers.groupBy("c").agg(F.min("m").alias("m"))
-            picked = local_checkpoint_fresh_stats(
-                mins.select("m.weight", "m.u", "m.v", "m.cu", "m.cv")
-                .distinct()  # mutual-minimum pairs pick the same edge twice
-            )
-            forest_frames.append(picked.select("u", "v", "weight"))
-
-            # contract by pointer doubling (see module docstring):
-            # parent(c) = other endpoint of c's pick; anchor each
-            # mutual-minimum 2-cycle at its smaller label...
-            par = mins.select(
-                "c",
-                F.when(F.col("m.cu") == F.col("c"), F.col("m.cv"))
-                .otherwise(F.col("m.cu"))
-                .alias("p"),
-            )
-            g = par.select(F.col("c").alias("c2"), F.col("p").alias("gp"))
-            par = local_checkpoint_fresh_stats(
-                par.join(g, par["p"] == g["c2"]).select(
-                    "c",
-                    F.when(
-                        (F.col("gp") == F.col("c")) & (F.col("c") < F.col("p")),
-                        F.col("c"),
+                # every component picks its minimum outgoing edge under the
+                # total order (weight, u, v): struct-min IS that order, one
+                # partial/final aggregate per side riding a single exchange
+                cand = F.struct("weight", "u", "v", "cu", "cv")
+                offers = bridge.select(F.col("cu").alias("c"), cand.alias("m")).unionAll(
+                    bridge.select(F.col("cv").alias("c"), cand.alias("m"))
+                )
+                mins = offers.groupBy("c").agg(F.min("m").alias("m"))
+                forest.append(
+                    local_checkpoint_fresh_stats(
+                        mins.select("m.weight", "m.u", "m.v", "m.cu", "m.cv")
+                        .distinct()  # mutual-minimum pairs pick the same edge twice
                     )
-                    .otherwise(F.col("p"))
+                )
+
+                # contract by pointer doubling (see module docstring):
+                # parent(c) = other endpoint of c's pick; anchor each
+                # mutual-minimum 2-cycle at its smaller label...
+                picks = mins.select(
+                    "c",
+                    F.when(F.col("m.cu") == F.col("c"), F.col("m.cv"))
+                    .otherwise(F.col("m.cu"))
                     .alias("p"),
                 )
-            )
-            # ...then square the parent function to fixpoint
-            for _jump in range(64):
-                g = par.select(F.col("c").alias("c2"), F.col("p").alias("gp"))
-                nxt = local_checkpoint_fresh_stats(
-                    par.join(g, par["p"] == g["c2"]).select(
+                g = picks.select(F.col("c").alias("c2"), F.col("p").alias("gp"))
+                par = local_checkpoint_fresh_stats(
+                    picks.join(g, picks["p"] == g["c2"]).select(
                         "c",
-                        F.col("gp").alias("p"),
-                        (F.col("gp") != F.col("p")).alias("_moved"),
+                        F.when(
+                            (F.col("gp") == F.col("c")) & (F.col("c") < F.col("p")),
+                            F.col("c"),
+                        )
+                        .otherwise(F.col("p"))
+                        .alias("p"),
                     )
                 )
-                done = nxt.filter("_moved").isEmpty()
-                par = nxt.drop("_moved")
-                if done:
-                    break
-            new_comp = par.select(F.col("c").alias("comp"), F.col("p").alias("nc"))
-            lab = local_checkpoint_fresh_stats(
-                lab.join(new_comp, "comp", "left_outer")
-                .select("id", F.coalesce("nc", "comp").alias("comp"))
-                .repartition(p, "id")
-            )
+                release_local_checkpoint(bridge)  # its last reader is done
+                bridge = None
+                # ...then square the parent function to fixpoint
+                for _jump in range(64):
+                    g = par.select(F.col("c").alias("c2"), F.col("p").alias("gp"))
+                    nxt = local_checkpoint_fresh_stats(
+                        par.join(g, par["p"] == g["c2"]).select(
+                            "c",
+                            F.col("gp").alias("p"),
+                            (F.col("gp") != F.col("p")).alias("_moved"),
+                        )
+                    )
+                    release_local_checkpoint(par)
+                    par = nxt
+                    if nxt.filter("_moved").isEmpty():
+                        break
+                new_comp = par.select(F.col("c").alias("comp"), F.col("p").alias("nc"))
+                new_lab = local_checkpoint_fresh_stats(
+                    lab.join(new_comp, "comp", "left_outer")
+                    .select("id", F.coalesce("nc", "comp").alias("comp"))
+                    .repartition(p, "id")
+                )
+                for df in (lab, par):
+                    release_local_checkpoint(df)
+                lab, par = new_lab, None
 
-        if forest_frames:
-            out = forest_frames[0]
-            for fdf in forest_frames[1:]:
-                out = out.unionAll(fdf)
-        else:
-            out = spark.createDataFrame([], "u LONG, v LONG, weight LONG")
+            if forest:
+                out = forest[0]
+                for fdf in forest[1:]:
+                    out = out.unionAll(fdf)
+            else:
+                out = spark.createDataFrame([], "u LONG, v LONG, weight LONG")
+    except BaseException:
+        for df in forest:
+            release_local_checkpoint(df)
+        raise
+    finally:
+        for df in (canon, lab, bridge, par):
+            if df is not None:
+                release_local_checkpoint(df)
     return out.select("u", "v", "weight"), rounds

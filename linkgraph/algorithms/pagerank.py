@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
 from ..partitioning import build_adjacency
-from ..superstep import LoopResult, StepResult, iterate, loop_scope
+from ..superstep import LoopResult, iterate, loop_scope
 
 
 def pagerank(
@@ -51,15 +51,11 @@ def pagerank(
     chunk_size: int = 4096,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
     num_vertices: int | None = None,
     global_aggs: dict | None = None,
     init_ranks: DataFrame | None = None,
 ) -> tuple[DataFrame, LoopResult]:
     """Returns (ranks DF(id, rank), LoopResult with per-superstep metrics).
-
-    ``track_messages=False`` skips the per-superstep message count /
-    skew histogram jobs (pure-throughput benchmark mode).
 
     ``fixed_updates=k``: run exactly k rank updates (reference parity
     mode; reference maxIter=m == fixed_updates=m-1). Otherwise iterate
@@ -132,10 +128,9 @@ def pagerank(
                 .agg(F.expr("SUM(w) AS msum"))
             )
 
-        def superstep(state: DataFrame, k: int) -> StepResult:
+        def superstep(state: DataFrame, k: int) -> DataFrame:
             msgs = _messages(state)
-            new = state.join(msgs, "id", "left_outer").selectExpr(*step_exprs)
-            return StepResult(state=new, messages=msgs)
+            return state.join(msgs, "id", "left_outer").selectExpr(*step_exprs)
 
         if fixed_updates is not None:
             max_iter = fixed_updates
@@ -153,7 +148,6 @@ def pagerank(
             max_supersteps=max_iter,
             ckpt=ckpt,
             resume=resume,
-            track_messages=track_messages,
             num_partitions=p,
             global_aggs=global_aggs,
         )

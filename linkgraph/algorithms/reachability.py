@@ -47,7 +47,6 @@ def reachability(
     max_supersteps: int = 200,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
 ) -> tuple[DataFrame, bool, LoopResult]:
     """Returns (DF(id, state), reachable, LoopResult).
 
@@ -92,7 +91,6 @@ def reachability(
         stop_when=done,
         ckpt=ckpt,
         resume=resume,
-        track_messages=track_messages,
     )
     states = state.select("id", F.col("value").alias("state"))
     met = bool(result.history and (result.history[-1].delta or 0.0) > 0)

@@ -39,7 +39,7 @@ from ..checkpoint import CheckpointManager
 from ..partitioning import build_adjacency
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
 from ..phash import md5_int_sql as _md5_int_sql
-from ..superstep import LoopResult, StepResult, iterate, loop_scope
+from ..superstep import LoopResult, iterate, loop_scope
 
 
 def _seed_arg(id_sql: str, seed: int, k: int) -> str:
@@ -91,7 +91,6 @@ def graph_sample(
     max_supersteps: int = 50,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
     portable: bool = False,
 ) -> tuple[DataFrame, LoopResult]:
     """Returns (DF(id, selected BOOLEAN), LoopResult); the selected set
@@ -108,7 +107,7 @@ def graph_sample(
             "newly", F.lit(False)
         )
 
-        def superstep(state: DataFrame, k: int) -> StepResult:
+        def superstep(state: DataFrame, k: int) -> DataFrame:
             cur = state.select("id", "selected", "newly")
             # expansion: vertices selected last superstep mark a subset of
             # their out-neighbors (deterministic per-edge coin)
@@ -127,7 +126,7 @@ def graph_sample(
                 .distinct()
             )
             # seeding: unselected vertices self-select with the seed coin
-            new = (
+            return (
                 cur.drop("newly")
                 .join(marked.withColumn("_m", F.lit(True)), "id", "left_outer")
                 .select(
@@ -152,7 +151,6 @@ def graph_sample(
                 # _delta carries the global fill count for the stop check
                 .withColumn("_delta", F.col("selected").cast("double"))
             )
-            return StepResult(state=new, messages=marked)
 
         def done(s) -> bool:
             filled = (s.delta or 0.0) / max(s.rows, 1)
@@ -165,7 +163,6 @@ def graph_sample(
             max_supersteps=max_supersteps,
             ckpt=ckpt,
             resume=resume,
-            track_messages=track_messages,
             num_partitions=p,
         )
     return result.state.select("id", "selected"), result

@@ -50,7 +50,6 @@ from ..graph import choose_partitions, vertices_from_edges
 from ..partitioning import build_adjacency
 from ..superstep import (
     LoopResult,
-    StepResult,
     _release,
     iterate,
     iteration_conf,
@@ -132,7 +131,7 @@ def strongly_connected_components(
                     " AS _msgs",
                 ]
 
-                def superstep(state: DataFrame, k: int) -> StepResult:
+                def superstep(state: DataFrame, k: int) -> DataFrame:
                     fm = (
                         adj_out.join(state.filter("fch"), F.expr("src = id"))
                         .selectExpr(
@@ -151,12 +150,11 @@ def strongly_connected_components(
                         .agg(F.expr("MIN(fv) AS mf"), F.expr("MIN(bv) AS mb"))
                         .withColumnRenamed("rid", "id")
                     )
-                    new = (
+                    return (
                         state.select("id", "f", "b")
                         .join(msgs, "id", "left_outer")
                         .selectExpr(*step_exprs)
                     )
-                    return StepResult(state=new, messages=msgs)
 
                 res = iterate(
                     init,

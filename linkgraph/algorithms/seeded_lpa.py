@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
 from ..partitioning import build_adjacency, symmetrize
-from ..superstep import LoopResult, StepResult, iterate, loop_scope
+from ..superstep import LoopResult, iterate, loop_scope
 
 
 def seeded_label_propagation(
@@ -48,7 +48,6 @@ def seeded_label_propagation(
     chunk_size: int = 4096,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
 ) -> tuple[DataFrame, LoopResult]:
     """Returns (DF(id, label), LoopResult) — ``seeds`` is DF(id, label
     BIGINT); label is -1 for vertices unreachable from every seed."""
@@ -65,7 +64,7 @@ def seeded_label_propagation(
             "left_outer",
         ).withColumn("changed", F.col("label").isNotNull())
 
-        def superstep(state: DataFrame, k: int) -> StepResult:
+        def superstep(state: DataFrame, k: int) -> DataFrame:
             cur = state.select("id", "label", "changed")
             senders = cur.filter(F.col("changed"))
             msgs = (
@@ -80,7 +79,7 @@ def seeded_label_propagation(
                 .agg(F.max(F.struct(F.col("cnt"), (-F.col("nlbl")).alias("neg"))).alias("m"))
                 .select("id", (-F.col("m.neg")).alias("mode_lbl"))
             )
-            new = (
+            return (
                 cur.drop("changed")
                 .join(mode, "id", "left_outer")
                 .select(
@@ -94,7 +93,6 @@ def seeded_label_propagation(
                 .select("id", F.col("nlabel").alias("label"), "changed", "_msgs")
                 .withColumn("_changed", F.col("changed").cast("long"))
             )
-            return StepResult(state=new, messages=msgs)
 
         result = iterate(
             init,
@@ -103,7 +101,6 @@ def seeded_label_propagation(
             max_supersteps=max_supersteps,
             ckpt=ckpt,
             resume=resume,
-            track_messages=track_messages,
             num_partitions=p,
         )
     out = result.state.select(

@@ -53,7 +53,6 @@ def shortest_paths(
     max_supersteps: int = 200,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
 ) -> tuple[DataFrame, LoopResult]:
     """Returns (DF(id, distance), LoopResult); distance NULL if unreachable."""
     e = edges if weight_col else edges.withColumn("_w1", F.lit(1.0))
@@ -65,7 +64,6 @@ def shortest_paths(
         max_supersteps=max_supersteps,
         ckpt=ckpt,
         resume=resume,
-        track_messages=track_messages,
     )
     out = state.select(
         "id",

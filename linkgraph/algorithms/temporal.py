@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..superstep import LoopResult, StepResult, iterate, loop_scope
+from ..superstep import LoopResult, iterate, loop_scope
 
 _INF = (1 << 62) - 1  # integer +inf sentinel; timestamps must be < this
 _NEG_INF = -(1 << 62)  # integer -inf sentinel; timestamps must be > this
@@ -60,7 +60,6 @@ def temporal_earliest_arrival(
     max_supersteps: int = 200,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
 ) -> tuple[DataFrame, LoopResult]:
     """Earliest time-respecting arrival from ``source``.
 
@@ -90,7 +89,7 @@ def temporal_earliest_arrival(
             .alias("arr"),
         ).withColumn("changed", F.col("id") == source)
 
-        def superstep(state: DataFrame, k: int) -> StepResult:
+        def superstep(state: DataFrame, k: int) -> DataFrame:
             cur = state.select("id", "arr", "changed")
             senders = cur.filter(F.col("changed"))
             msgs = (
@@ -101,7 +100,7 @@ def temporal_earliest_arrival(
                 .groupBy("id")
                 .agg(F.min("cand").alias("cand"))
             )
-            new = (
+            return (
                 cur.drop("changed")
                 .join(msgs, "id", "left_outer")
                 .select(
@@ -118,7 +117,6 @@ def temporal_earliest_arrival(
                 )
                 .withColumn("_changed", F.col("changed"))
             )
-            return StepResult(state=new, messages=msgs)
 
         result = iterate(
             init,
@@ -127,7 +125,6 @@ def temporal_earliest_arrival(
             max_supersteps=max_supersteps,
             ckpt=ckpt,
             resume=resume,
-            track_messages=track_messages,
             num_partitions=p,
         )
     out = result.state.select(
@@ -147,7 +144,6 @@ def temporal_latest_departure(
     max_supersteps: int = 200,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
 ) -> tuple[DataFrame, LoopResult]:
     """Latest departure time reaching ``target`` — the reverse twin of
     :func:`temporal_earliest_arrival`: dep(v) = the latest t at which v
@@ -191,7 +187,7 @@ def temporal_latest_departure(
             .alias("dep"),
         ).withColumn("changed", F.col("id") == target)
 
-        def superstep(state: DataFrame, k: int) -> StepResult:
+        def superstep(state: DataFrame, k: int) -> DataFrame:
             cur = state.select("id", "dep", "changed")
             senders = cur.filter(F.col("changed"))
             msgs = (
@@ -201,7 +197,7 @@ def temporal_latest_departure(
                 .groupBy("id")
                 .agg(F.max("cand").alias("cand"))
             )
-            new = (
+            return (
                 cur.drop("changed")
                 .join(msgs, "id", "left_outer")
                 .select(
@@ -218,7 +214,6 @@ def temporal_latest_departure(
                 )
                 .withColumn("_changed", F.col("changed"))
             )
-            return StepResult(state=new, messages=msgs)
 
         result = iterate(
             init,
@@ -227,7 +222,6 @@ def temporal_latest_departure(
             max_supersteps=max_supersteps,
             ckpt=ckpt,
             resume=resume,
-            track_messages=track_messages,
             num_partitions=p,
         )
     out = result.state.select(

@@ -49,7 +49,7 @@ def dependency_levels(
     the Kahn peel round (0-based), or -1 for vertices on or downstream
     of a directed cycle (never peelable). Self-loops make their vertex
     permanently cyclic, matching the dependency reading."""
-    from ..superstep import LoopResult, StepResult, iterate, loop_scope
+    from ..superstep import LoopResult, iterate, loop_scope
 
     with loop_scope(edges, num_partitions) as scope:
         p = scope.p
@@ -57,7 +57,7 @@ def dependency_levels(
 
         init = scope.vertices(vertices).withColumn("level", F.lit(UNPEELED).cast("long"))
 
-        def superstep(state: DataFrame, k: int) -> StepResult:
+        def superstep(state: DataFrame, k: int) -> DataFrame:
             live = state.filter(F.col("level") == UNPEELED).select("id")
             # vertices that still have an incoming edge from a live vertex
             hasin = (
@@ -69,7 +69,7 @@ def dependency_levels(
             newly = live.join(hasin, "id", "left_anti").withColumn(
                 "_new", F.lit(True)
             )
-            new = (
+            return (
                 state.join(newly, "id", "left_outer")
                 .select(
                     "id",
@@ -80,7 +80,6 @@ def dependency_levels(
                 )
                 .withColumn("_msgs", F.lit(0))
             )
-            return StepResult(state=new)
 
         result = iterate(
             init.withColumn("_changed", F.lit(False)),

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from ..partitioning import symmetrize
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
-from ..superstep import StepResult, iterate, loop_scope
+from ..superstep import iterate, loop_scope
 
 WL_DIGITS = 14  # md5 hex digits per portable label (56 bits, BIGINT-exact)
 
@@ -93,7 +93,7 @@ def wl_refinement(
             .repartition(p, "id")
         )
 
-        def superstep(state: DataFrame, k: int) -> StepResult:
+        def superstep(state: DataFrame, k: int) -> DataFrame:
             cur = f"wl{k - 1}"
             nbr = (
                 sym.join(
@@ -107,7 +107,7 @@ def wl_refinement(
                 )
             )
             sig = f"concat(CAST({cur} AS STRING), ':', coalesce(_nb, ''))"
-            return StepResult(
+            return (
                 state.join(nbr, "id", "left")
                 .withColumn(f"wl{k}", F.expr(_wl_hash_spark(sig, portable)))
                 .drop("_nb")

@@ -113,17 +113,13 @@ class CheckpointManager:
         frame, which stays the loop state (nothing is read back), and
         ``rows_per_partition`` is that in-memory frame's histogram —
         one write job plus one histogram job. Fills
-        ``metrics.rows_per_partition`` (and a missing skew ratio) before
-        serializing it. The superstep is committed, and resumable, once
+        ``metrics.rows_per_partition`` and ``metrics.skew_ratio`` from it
+        before serializing them. The superstep is committed, and resumable, once
         this returns; see the module docstring for what a crash loses.
         """
         self._write_snapshot(superstep, state)
         metrics.rows_per_partition = partition_histogram(state)
-        # backfill skew from the snapshot's own histogram when the loop
-        # didn't sample it this superstep — checkpoint lineage always
-        # carries a skew ratio even though the in-loop metric is sampled
-        if metrics.skew_ratio is None or metrics.skew_ratio == 1.0:
-            metrics.skew_ratio = skew_from_histogram(metrics.rows_per_partition)
+        metrics.skew_ratio = skew_from_histogram(metrics.rows_per_partition)
         tmp = self._meta_path(superstep) + ".tmp"
         with open(tmp, "w") as f:
             f.write(metrics.to_json())

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from .graph import vertices_from_edges
 from .partitioning import out_degrees
-from .superstep import LoopResult, StepResult, iterate
+from .superstep import LoopResult, iterate
 from .vertex_program import VertexProgram, run_vertex_program
 
 
@@ -163,7 +163,7 @@ def message_overflow_demo(
         vertices = vertices_from_edges(edges)
     init = vertices.select("id", F.lit(0).alias("value"))
 
-    def superstep(state: DataFrame, k: int) -> StepResult:
+    def superstep(state: DataFrame, k: int) -> DataFrame:
         senders = state
         msgs = (
             edges.join(senders, edges["src"] == senders["id"])
@@ -175,7 +175,7 @@ def message_overflow_demo(
             # the Default (collect) combiner: the full message multiset
             .agg(F.collect_list("msg").alias("msgs"))
         )
-        new = (
+        return (
             state.drop("value")
             .join(msgs, "id", "left_outer")
             .select(
@@ -184,7 +184,6 @@ def message_overflow_demo(
                 F.col("msgs").isNotNull().cast("long").alias("_msgs"),
             )
         )
-        return StepResult(state=new, messages=msgs)
 
     res = iterate(
         init,

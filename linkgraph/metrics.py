@@ -21,9 +21,9 @@ class SuperstepMetrics:
     delta: float | None = None
     changed: int | None = None
     rows: int = 0
-    # None = not sampled this superstep (the skew histogram is a grouped
-    # pass over the message frame, computed every skew_sample_every-th
-    # superstep only — see superstep.iterate)
+    # max/mean rows per partition of the committed snapshot; filled by
+    # CheckpointManager.save with rows_per_partition (None in
+    # LoopResult.history: the loop runs no histogram pass)
     skew_ratio: float | None = None
     rows_per_partition: dict[int, int] = field(default_factory=dict)
     wall_sec: float = 0.0

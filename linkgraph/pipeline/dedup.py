@@ -773,7 +773,6 @@ def dedup_clusters(
         edges,
         symmetrize_edges=True,
         vertices=docs.select(F.col("doc_id").alias("id")),
-        track_messages=False,
     )
     return comp.select(
         F.col("id").alias("doc_id"),

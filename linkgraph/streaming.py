@@ -346,16 +346,14 @@ def maintained_graph_stream(
             snap = old.unionByName(new_edges).distinct().localCheckpoint(
                 eager=True
             )
-            labels, _ = incremental_cc(
-                snap, old, old_labels, track_messages=False
-            )
+            labels, _ = incremental_cc(snap, old, old_labels)
             tri = meta["triangles"] + int(
                 triangle_delta(old, snap).first()["delta"]
             )
             next_epoch = epoch + 1
         else:
             snap = new_edges.distinct().localCheckpoint(eager=True)
-            labels, _ = connected_components(snap, track_messages=False)
+            labels, _ = connected_components(snap)
             from .algorithms.triangles import triangle_counts
 
             row = triangle_counts(snap).agg(

@@ -9,14 +9,17 @@ partially-then-finally across the shuffle (JobGen.java:1124-1215), and
 the loop terminates on a driver-side convergence check (the reference's
 TerminationStateWriter + readTerminationState, Driver.java:342-344).
 
-Algorithms plug in a ``superstep_fn(state, k) -> StepResult`` built from
-DataFrame ops only; the loop owns persistence, metrics, checkpointing,
-resume, and convergence. Transient stat columns on the new state:
+Algorithms plug in a ``superstep_fn(state, k) -> DataFrame`` built from
+DataFrame ops only: it returns the new vertex state and nothing else.
+The loop owns persistence, metrics, checkpointing, resume, and
+convergence. Transient stat columns on the new state:
 
 - ``_delta``  (double) — per-vertex change magnitude; the loop sums it.
 - ``_changed`` (boolean) — per-vertex change flag; the loop counts it.
+- ``_msgs``   (integer) — per-vertex received-message count; the loop
+  sums it into ``SuperstepMetrics.messages``.
 
-Both are stripped before the state is checkpointed.
+All three are stripped before the state is checkpointed.
 """
 
 from __future__ import annotations
@@ -33,7 +36,7 @@ from pyspark.storagelevel import StorageLevel
 
 from .checkpoint import CheckpointManager, SnapshotWriter
 from .graph import choose_partitions, vertices_from_edges
-from .metrics import SuperstepMetrics, partition_histogram, skew_from_histogram
+from .metrics import SuperstepMetrics
 
 
 @contextmanager
@@ -122,12 +125,6 @@ def loop_scope(edges: DataFrame, num_partitions: int | None = None, scale: int =
     finally:
         for df in scope._cached:
             df.unpersist()
-
-
-@dataclass
-class StepResult:
-    state: DataFrame                   # new vertex state (may carry _delta/_changed/_msgs)
-    messages: DataFrame | None = None  # combined message relation (for sampled skew)
 
 
 # Message counts ride the state observation via the transient ``_msgs``
@@ -245,16 +242,14 @@ def local_checkpoint_fresh_stats(
 
 def iterate(
     init_state: DataFrame,
-    superstep_fn: Callable[[DataFrame, int], StepResult],
+    superstep_fn: Callable[[DataFrame, int], DataFrame],
     converged: Callable[[SuperstepMetrics], bool],
     max_supersteps: int = 100,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
     storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     num_partitions: int | None = None,
     global_aggs: dict[str, "F.Column"] | None = None,
-    skew_sample_every: int = 8,
 ) -> LoopResult:
     """Run supersteps until ``converged(stats)`` or ``max_supersteps``.
 
@@ -269,22 +264,21 @@ def iterate(
     (a failed save raises here). A crash loses at most that one
     uncommitted snapshot beyond the usual supersteps since the last
     commit. The committed ``_meta`` records (``ckpt.history()``) carry
-    the per-partition histogram; ``LoopResult.history`` does not.
+    the snapshot's per-partition histogram and skew ratio;
+    ``LoopResult.history`` does not.
 
     If the checkpoint directory already holds committed supersteps (and
     ``resume``), iteration restarts from the latest snapshot instead of
     superstep 1: the snapshot is read once and hash-partitioned on
     ``id`` once, so resumed supersteps run the same plan as well.
 
-    Message metrics: when the new state carries a transient ``_msgs``
-    column (per-vertex received-message count), its sum rides the same
-    materialization job as delta/changed — the default-config superstep
-    runs exactly ONE SQL execution (one pass over the data; asserted in
-    tests/test_superstep_jobs.py). The partition-skew histogram needs a
-    grouped pass over the message frame, so it is *sampled*: computed
-    only every ``skew_sample_every``-th superstep (0 disables). With
-    ``track_messages``, a superstep that returns ``messages`` without
-    ``_msgs`` raises ``ValueError``.
+    ``superstep_fn(state, k)`` returns the new state. Message metrics:
+    when it carries a transient ``_msgs`` column (per-vertex
+    received-message count), ``stats.messages`` is its sum, which rides
+    the same materialization job as delta/changed — a superstep runs
+    exactly ONE SQL execution (one pass over the data; asserted in
+    tests/test_superstep_jobs.py). Without ``_msgs``, ``stats.messages``
+    stays 0.
     """
     history: list[SuperstepMetrics] = []
     start_k = 1
@@ -318,18 +312,13 @@ def iterate(
             with SnapshotWriter(ckpt, spark) as writer:
                 for k in range(start_k, max_supersteps + 1):
                     t0 = time.monotonic()
-                    res = superstep_fn(state, k)
+                    new = superstep_fn(state, k)
                     # Convergence stats ride the materialization job as observed
                     # metrics (no separate pass over the state) — the Spark
                     # rendition of the reference's always-on global aggregators
                     # computed inside the superstep dataflow
                     # (FinalAggregateOperatorDescriptor, SURVEY.md §3.4).
-                    cols = set(res.state.columns)
-                    if track_messages and res.messages is not None and "_msgs" not in cols:
-                        raise ValueError(
-                            "superstep returned messages but its state has no "
-                            "_msgs column; add one or pass track_messages=False"
-                        )
+                    cols = set(new.columns)
                     obs = Observation(f"superstep-{k}")
                     agg_exprs = [F.count(F.lit(1)).alias("rows")]
                     if "_delta" in cols:
@@ -369,7 +358,7 @@ def iterate(
                     # "bytes" measured at superstep 40), so nothing downstream
                     # loses a broadcast it would actually have gotten.
                     new_state = local_checkpoint_fresh_stats(
-                        res.state.observe(obs, *agg_exprs).drop(
+                        new.observe(obs, *agg_exprs).drop(
                             "_delta", "_changed", "_msgs"
                         )
                     )
@@ -381,21 +370,12 @@ def iterate(
                         stats.delta = float(row["delta"] or 0.0)
                     if "_changed" in cols:
                         stats.changed = int(row["changed"] or 0)
+                    if "_msgs" in cols:
+                        stats.messages = int(row["messages"] or 0)
                     if global_aggs:
                         stats.extras = {
                             name: row[f"_ga_{name}"] for name in global_aggs
                         }
-
-                    if track_messages and "_msgs" in cols:
-                        # free: the count rode the materialization job above
-                        stats.messages = int(row["messages"] or 0)
-                        if (
-                            skew_sample_every > 0
-                            and res.messages is not None
-                            and k % skew_sample_every == 0
-                        ):
-                            hist = partition_histogram(res.messages)
-                            stats.skew_ratio = skew_from_histogram(hist)
 
                     # the snapshot in flight reads `state`: finish it first
                     writer.join()

@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from .checkpoint import CheckpointManager
 from .metrics import SuperstepMetrics
 from .partitioning import build_adjacency, symmetrize
-from .superstep import LoopResult, StepResult, iterate, loop_scope
+from .superstep import LoopResult, iterate, loop_scope
 
 
 @dataclass
@@ -186,7 +186,6 @@ def run_vertex_program(
     chunk_size: int = 4096,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
 ) -> tuple[DataFrame, LoopResult]:
     """Execute a :class:`VertexProgram`. Returns (DF(id, value, *attrs),
     LoopResult with per-superstep metrics).
@@ -205,13 +204,7 @@ def run_vertex_program(
         # still in flight (it will wake its target next superstep) — the
         # reference's termination check is exactly "no live vertices and
         # no messages" (Driver.java:342-344 via the terminationState bit)
-        if not track_messages:
-            raise ValueError(
-                "wake_on_message needs track_messages=True for the "
-                "default stop condition (messages in flight keep the "
-                "run live); pass an explicit stop_when to override"
-            )
-        stop = lambda s: s.changed == 0 and (s.messages or 0) == 0  # noqa: E731
+        stop = lambda s: s.changed == 0 and s.messages == 0  # noqa: E731
     else:
         stop = lambda s: s.changed == 0  # noqa: E731
 
@@ -265,7 +258,6 @@ def run_vertex_program(
             max_supersteps=max_supersteps,
             ckpt=ckpt,
             resume=resume,
-            track_messages=track_messages,
             num_partitions=p,
         )
     # surfaced for inspection/tests: the superstep at which plan="auto"
@@ -281,7 +273,7 @@ def _superstep_fn(
     p: int,
     attr_cols: list[str],
     plan_state: dict,
-) -> Callable[[DataFrame, int], StepResult]:
+) -> Callable[[DataFrame, int], DataFrame]:
     """The superstep of ``program`` over the cached adjacency; every
     Column that does not depend on the superstep number is built here,
     once."""
@@ -365,7 +357,7 @@ def _superstep_fn(
     if program.mutate_add_expr is not None:
         spawned = F.explode(program.mutate_add_expr).alias("_nv")
 
-    def superstep(state: DataFrame, k: int) -> StepResult:
+    def superstep(state: DataFrame, k: int) -> DataFrame:
         if program.plan == "delta":
             senders = state.filter(is_active)
         elif program.plan == "auto":
@@ -439,7 +431,7 @@ def _superstep_fn(
                 .join(new.select("id"), "id", "left_anti")
             )
             new = new.unionByName(adds)
-        return StepResult(state=new, messages=msgs)
+        return new
 
     return superstep
 

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from linkgraph import CheckpointManager, derive_files, derive_graph, pagerank
 from linkgraph.graph import vertices_from_edges
-from linkgraph.superstep import StepResult, iterate
+from linkgraph.superstep import iterate
 from linkgraph.synth import synth_code_files, synth_code_files_rows
 
 
@@ -130,10 +130,9 @@ def _in_degree_loop(edges, ck, max_supersteps):
             .groupBy(F.col("dst").alias("id"))
             .agg(F.count(F.lit(1)).alias("m"))
         )
-        new = state.join(msgs, "id", "left_outer").select(
+        return state.join(msgs, "id", "left_outer").select(
             "id", F.col("m").isNotNull().cast("long").alias("_msgs")
         )
-        return StepResult(state=new, messages=msgs)
 
     return iterate(
         vertices_from_edges(edges).select("id"),

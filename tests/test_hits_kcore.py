@@ -53,7 +53,7 @@ class TestHits:
         E = _edge_list(webmap_edges)
         V = sorted({x for e in E for x in e})
         ref = _brute_hits(E, V, iterations=8)
-        out, res = hits(webmap_edges, iterations=8, track_messages=False)
+        out, res = hits(webmap_edges, iterations=8)
         got = {r.id: (r.authority, r.hub) for r in out.collect()}
         assert set(got) == set(V)
         assert res.supersteps == 8
@@ -62,7 +62,7 @@ class TestHits:
             assert got[v][1] == pytest.approx(ref[v][1], abs=1e-9)
 
     def test_scores_sum_to_one(self, spark, webmap_edges):
-        out, _ = hits(webmap_edges, iterations=4, track_messages=False)
+        out, _ = hits(webmap_edges, iterations=4)
         rows = out.collect()
         assert sum(r.authority for r in rows) == pytest.approx(1.0, abs=1e-9)
         assert sum(r.hub for r in rows) == pytest.approx(1.0, abs=1e-9)
@@ -72,7 +72,7 @@ class TestHits:
         edges = spark.createDataFrame(
             [(i, 4) for i in range(4)], "src long, dst long"
         )
-        out, _ = hits(edges, iterations=3, track_messages=False)
+        out, _ = hits(edges, iterations=3)
         got = {r.id: (r.authority, r.hub) for r in out.collect()}
         assert got[4][0] == pytest.approx(1.0)
         assert got[4][1] == pytest.approx(0.0)
@@ -87,7 +87,7 @@ class TestKcore:
         E = _edge_list(webmap_edges)
         V = sorted({x for e in E for x in e})
         ref = _brute_kcore(E, V, k)
-        out, _ = kcore(webmap_edges, k, track_messages=False)
+        out, _ = kcore(webmap_edges, k)
         got = {r.id: (r.in_core, r.core_deg) for r in out.collect()}
         assert got == ref
 
@@ -97,7 +97,7 @@ class TestKcore:
         # delta-plan frontier is exercised across multiple supersteps)
         E = [(0, 1), (1, 2), (2, 3), (3, 4), (5, 6), (6, 7), (5, 7)]
         edges = spark.createDataFrame(E, "src long, dst long")
-        out, res = kcore(edges, 2, track_messages=False)
+        out, res = kcore(edges, 2)
         got = {r.id: (r.in_core, r.core_deg) for r in out.collect()}
         assert got == {
             0: (0, 0), 1: (0, 0), 2: (0, 0), 3: (0, 0), 4: (0, 0),
@@ -110,7 +110,7 @@ class TestKcore:
         tri = spark.createDataFrame(
             [(0, 1), (1, 2), (0, 2)], "src long, dst long"
         )
-        dead, _ = kcore(tri, 5, track_messages=False)
+        dead, _ = kcore(tri, 5)
         assert all(r.in_core == 0 for r in dead.collect())
-        alive, _ = kcore(tri, 2, track_messages=False)
+        alive, _ = kcore(tri, 2)
         assert all(r.in_core == 1 and r.core_deg == 2 for r in alive.collect())

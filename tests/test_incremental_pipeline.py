@@ -47,7 +47,7 @@ class TestIncrementalPipeline:
         run_available_now(stream_edges(spark, str(ingest) + "/*"), out, ck)
         snap0 = spark.read.parquet(out).localCheckpoint(eager=True)
 
-        labels0, _ = connected_components(snap0, track_messages=False)
+        labels0, _ = connected_components(snap0)
         labels0 = labels0.localCheckpoint(eager=True)
         tri0 = _tri_total(spark, snap0)
         assert tri0 == 1
@@ -61,10 +61,8 @@ class TestIncrementalPipeline:
         snap1 = spark.read.parquet(out).localCheckpoint(eager=True)
         assert snap1.count() == len(batch1) + len(batch2)
 
-        cold1, res_cold = connected_components(snap1, track_messages=False)
-        warm1, res_warm = incremental_cc(
-            snap1, snap0, labels0, track_messages=False
-        )
+        cold1, res_cold = connected_components(snap1)
+        warm1, res_warm = incremental_cc(snap1, snap0, labels0)
         assert _cc_map(warm1) == _cc_map(cold1)
         # O(churn) evidence: the warm frontier is the 6 changed
         # endpoints, not the whole graph
@@ -89,13 +87,13 @@ class TestIncrementalPipeline:
             (100 + i, 101 + i) for i in range(9)
         ]
         old = spark.createDataFrame(old_edges, "src LONG, dst LONG")
-        labels_old, _ = connected_components(old, track_messages=False)
+        labels_old, _ = connected_components(old)
         labels_old = labels_old.localCheckpoint(eager=True)
 
         # delete (4,5): splits A into {0..4} and {5..9}; B untouched
         new = old.filter(~((F.col("src") == 4) & (F.col("dst") == 5)))
-        cold, _ = connected_components(new, track_messages=False)
-        warm, res = incremental_cc(new, old, labels_old, track_messages=False)
+        cold, _ = connected_components(new)
+        warm, res = incremental_cc(new, old, labels_old)
         assert _cc_map(warm) == _cc_map(cold)
         m = _cc_map(warm)
         assert m[9] == 5 and m[0] == 0 and m[109] == 100
@@ -109,12 +107,12 @@ class TestIncrementalPipeline:
 
         old_e = [(0, 1), (1, 2), (10, 11), (20, 21), (21, 22), (20, 22)]
         old = spark.createDataFrame(old_e, "src LONG, dst LONG")
-        labels_old, _ = connected_components(old, track_messages=False)
+        labels_old, _ = connected_components(old)
         # delete (1,2), add (2,10) and (11,20)
         new_e = [(0, 1), (10, 11), (20, 21), (21, 22), (20, 22), (2, 10), (11, 20)]
         new = spark.createDataFrame(new_e, "src LONG, dst LONG")
-        cold, _ = connected_components(new, track_messages=False)
-        warm, _ = incremental_cc(new, old, labels_old, track_messages=False)
+        cold, _ = connected_components(new)
+        warm, _ = incremental_cc(new, old, labels_old)
         assert _cc_map(warm) == _cc_map(cold)
 
     def test_cli_inc_cc(self, spark, tmp_path):
@@ -185,7 +183,7 @@ class TestMaintainedStream:
         assert epoch2 == 1 and edges2.count() == 7
         assert tri2 == 2  # {10,11,12} and {0,1,2}
 
-        cold, _ = connected_components(edges2, track_messages=False)
+        cold, _ = connected_components(edges2)
         assert _cc_map(labels2) == _cc_map(cold)
 
         # re-running with nothing new is a no-op (exactly-once)
@@ -254,7 +252,7 @@ class TestMaintainedStream:
         maintained_graph_stream(spark, str(ingest) + "/*", state, ck)
         edges2, labels2, tri2, epoch2 = read_maintained_state(spark, state)
         assert epoch2 == 1 and tri2 == 2
-        cold, _ = connected_components(edges2, track_messages=False)
+        cold, _ = connected_components(edges2)
         assert _cc_map(labels2) == _cc_map(cold)
 
 
@@ -269,14 +267,14 @@ class TestNewVertices:
         old = spark.createDataFrame(
             [(0, 1), (1, 2)], "src LONG, dst LONG"
         )
-        labels_old, _ = connected_components(old, track_messages=False)
+        labels_old, _ = connected_components(old)
         # 100 and 101 are brand-new; 100 attaches to the old component,
         # 101-102 form a new isolated one
         new = spark.createDataFrame(
             [(0, 1), (1, 2), (2, 100), (101, 102)], "src LONG, dst LONG"
         )
-        cold, _ = connected_components(new, track_messages=False)
-        warm, _ = incremental_cc(new, old, labels_old, track_messages=False)
+        cold, _ = connected_components(new)
+        warm, _ = incremental_cc(new, old, labels_old)
         assert _cc_map(warm) == _cc_map(cold)
         m = _cc_map(warm)
         assert m[100] == 0 and m[101] == m[102] == 101

@@ -1,17 +1,14 @@
 """The shared loop prologue (``superstep.loop_scope``) and the loop's
-loud failure modes: cached loop-invariant frames are freed when a
-superstep raises, a superstep that drops its message count is refused,
-and the py4j fast paths warn instead of falling back silently."""
+loud failure modes: cached loop-invariant frames and round state are
+freed when a superstep or round raises, and the py4j fast paths warn
+instead of falling back silently."""
 
 import importlib
 import warnings
 
 import pytest
-from pyspark.sql import functions as F
 
 from linkgraph.superstep import (
-    StepResult,
-    iterate,
     local_checkpoint_fresh_stats,
     loop_scope,
     release_local_checkpoint,
@@ -96,6 +93,13 @@ def _run_round_loop(name, edges):
     from linkgraph.algorithms.cc import connected_components_hashmin
     from linkgraph.algorithms.coreness import core_decomposition
     from linkgraph.algorithms.ktruss import ktruss
+    from linkgraph.algorithms.landmarks import landmark_distances
+    from linkgraph.algorithms.louvain import (
+        greedy_modularity_communities,
+        louvain_multilevel,
+    )
+    from linkgraph.algorithms.matching import maximal_matching
+    from linkgraph.algorithms.msf import minimum_spanning_forest
     from linkgraph.algorithms.scc import strongly_connected_components
     from linkgraph.algorithms.walks import node2vec_walks, random_walks
     from linkgraph.algorithms.wl import wl_refinement
@@ -111,6 +115,11 @@ def _run_round_loop(name, edges):
         "scc": lambda: strongly_connected_components(edges, num_partitions=2),
         "walks": lambda: random_walks(edges, walk_length=4, num_partitions=2),
         "node2vec": lambda: node2vec_walks(edges, walk_length=4, num_partitions=2),
+        "landmarks": lambda: landmark_distances(edges, num_partitions=2),
+        "msf": lambda: minimum_spanning_forest(edges, num_partitions=2),
+        "louvain": lambda: greedy_modularity_communities(edges, num_partitions=2),
+        "louvain_multilevel": lambda: louvain_multilevel(edges, num_partitions=2),
+        "matching": lambda: maximal_matching(edges, num_partitions=2),
     }[name]()
 
 
@@ -132,6 +141,14 @@ def _run_round_loop(name, edges):
         ("linkgraph.algorithms.scc", "scc", 2),
         ("linkgraph.algorithms.walks", "walks", 2),
         ("linkgraph.algorithms.walks", "node2vec", 2),
+        # landmarks and msf hold several frames per level/round; the 3rd
+        # materialization fails msf after its first picked edges exist
+        ("linkgraph.algorithms.landmarks", "landmarks", 2),
+        ("linkgraph.algorithms.msf", "msf", 3),
+        # the 3rd fails greedy louvain inside its first move round
+        ("linkgraph.algorithms.louvain", "louvain", 3),
+        ("linkgraph.algorithms.louvain", "louvain_multilevel", 2),
+        ("linkgraph.algorithms.matching", "matching", 2),
     ],
     ids=[
         "anf",
@@ -145,6 +162,11 @@ def _run_round_loop(name, edges):
         "scc",
         "walks",
         "node2vec",
+        "landmarks",
+        "msf",
+        "louvain",
+        "louvain_multilevel",
+        "matching",
     ],
 )
 def test_failed_round_leaves_no_loop_state(
@@ -178,32 +200,19 @@ def test_failed_round_leaves_no_loop_state(
     assert _persistent_rdds(spark) <= before
 
 
-def test_messages_without_count_are_refused(spark, webmap_edges):
-    from linkgraph.graph import vertices_from_edges
-
-    verts = vertices_from_edges(webmap_edges)
-
-    def step(state, k):
-        msgs = (
-            webmap_edges.join(state, webmap_edges["src"] == state["id"])
-            .groupBy(F.col("dst").alias("id"))
-            .count()
-        )
-        return StepResult(state=state.select("id"), messages=msgs)
-
-    with pytest.raises(ValueError, match="_msgs"):
-        iterate(verts, step, converged=lambda s: False, max_supersteps=2, num_partitions=2)
-    # without message tracking the same superstep runs
-    res = iterate(
-        verts,
-        step,
-        converged=lambda s: False,
-        max_supersteps=2,
-        num_partitions=2,
-        track_messages=False,
-    )
-    assert res.supersteps == 2
-    assert all(m.messages == 0 for m in res.history)
+@pytest.mark.parametrize("loop", ["landmarks", "msf"])
+def test_finished_round_loop_holds_only_its_result(spark, webmap_edges, loop):
+    """A successful call keeps only the frames its result reads: one per
+    non-empty landmark level, one per Boruvka round."""
+    webmap_edges.count()  # cached before the persistent-RDD baseline
+    before = _persistent_rdds(spark)
+    out, meta = _run_round_loop(loop, webmap_edges)
+    held = _persistent_rdds(spark) - before
+    frames = out.select("dist").distinct().count() if loop == "landmarks" else meta
+    assert 0 < len(held) <= frames, (held, frames)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in held:
+        rdds.get(rid).unpersist(False)
 
 
 def _analyzed(df):

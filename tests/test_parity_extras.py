@@ -36,9 +36,7 @@ class TestGraphMutation:
         from linkgraph import graph_mutation_vp
 
         verts = spark.range(20).select(F.col("id"))
-        out, res = graph_mutation_vp(
-            webmap_edges, vertices=verts, track_messages=False
-        )
+        out, res = graph_mutation_vp(webmap_edges, vertices=verts)
         got = {r["id"]: r["value"] for r in out.collect()}
         assert set(got) == GOLDEN_MUTATION
         assert all(v == 0.0 for v in got.values())
@@ -78,7 +76,7 @@ class TestGraphMutation:
                 F.array(F.col("id")),
             ).otherwise(F.expr("CAST(array() AS ARRAY<BIGINT>)")),
         )
-        state, res = run_vertex_program(edges, prog, track_messages=False)
+        state, res = run_vertex_program(edges, prog)
         got = {r["id"]: r["value"] for r in state.collect()}
         assert set(got) == {1, 2, 99}          # 3 deleted, 99 inserted
         assert got[2] == 2.0                   # upsert kept the old row

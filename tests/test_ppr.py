@@ -34,9 +34,7 @@ class TestPersonalizedPagerank:
         V = sorted({x for e in E for x in e})
         sources = [0, 5]
         ref = _brute_ppr(E, V, set(sources), updates=6)
-        out, res = personalized_pagerank(
-            webmap_edges, sources, fixed_updates=6, track_messages=False
-        )
+        out, res = personalized_pagerank(webmap_edges, sources, fixed_updates=6)
         got = {r.id: r["rank"] for r in out.collect()}
         assert set(got) == set(V)
         assert res.supersteps == 6
@@ -44,9 +42,7 @@ class TestPersonalizedPagerank:
             assert got[v] == pytest.approx(ref[v], abs=1e-12)
 
     def test_mass_concentrates_on_seeds(self, spark, webmap_edges):
-        out, _ = personalized_pagerank(
-            webmap_edges, [0], fixed_updates=8, track_messages=False
-        )
+        out, _ = personalized_pagerank(webmap_edges, [0], fixed_updates=8)
         ranks = {r.id: r["rank"] for r in out.collect()}
         # the seed keeps the full teleport mass; a vertex with no path
         # from the seed and no seed membership decays toward 0

@@ -186,7 +186,7 @@ class TestWarmRestartOnStreamedEdges:
         g1 = spark.read.parquet(out)
         assert g1.count() == len(batch1)
 
-        labels1, res1 = connected_components(g1, track_messages=False)
+        labels1, res1 = connected_components(g1)
         comp1 = {r["id"]: r["component"] for r in labels1.collect()}
         assert comp1[30] == 25 and comp1[24] == 0  # two components
         prev = labels1.localCheckpoint(eager=True)  # "last snapshot"
@@ -200,7 +200,7 @@ class TestWarmRestartOnStreamedEdges:
         g2 = spark.read.parquet(out)
         assert g2.count() == len(batch1) + len(batch2)
 
-        cold, res_cold = connected_components(g2, track_messages=False)
+        cold, res_cold = connected_components(g2)
         cold_map = {r["id"]: r["component"] for r in cold.collect()}
         assert set(cold_map.values()) == {0}  # fully merged
 
@@ -211,7 +211,6 @@ class TestWarmRestartOnStreamedEdges:
             g2,
             init_labels=prev,
             initial_active=new_endpoints,
-            track_messages=False,
         )
         warm_map = {r["id"]: r["component"] for r in warm.collect()}
         assert warm_map == cold_map
@@ -230,13 +229,11 @@ class TestWarmRestartOnStreamedEdges:
         g1 = spark.createDataFrame(
             [(0, 1), (1, 2), (5, 6)], "src LONG, dst LONG"
         )
-        labels1, _ = connected_components(g1, track_messages=False)
+        labels1, _ = connected_components(g1)
         g2 = spark.createDataFrame(
             [(0, 1), (1, 2), (5, 6), (2, 5)], "src LONG, dst LONG"
         )
-        warm, res = connected_components(
-            g2, init_labels=labels1, track_messages=False
-        )
+        warm, res = connected_components(g2, init_labels=labels1)
         got = {r["id"]: r["component"] for r in warm.collect()}
         assert got == {0: 0, 1: 0, 2: 0, 5: 0, 6: 0}
         assert res.converged

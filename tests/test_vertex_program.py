@@ -309,14 +309,6 @@ class TestWakeOnMessage:
         # the default (non-wake) stop fired almost immediately
         assert res.supersteps < self.N
 
-    def test_wake_needs_message_tracking(self, spark):
-        from linkgraph import token_circulation
-
-        with pytest.raises(ValueError, match="track_messages"):
-            token_circulation(
-                self._ring(spark), max_supersteps=2, track_messages=False
-            )
-
 
 class TestTerminatePartition:
     """The general terminate_partition_expr channel (the reference's

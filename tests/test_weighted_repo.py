@@ -110,9 +110,7 @@ class TestWeightedPagerank:
 
     def test_matches_numpy(self, spark):
         edges = self._edges_df(spark)
-        ranks, res = weighted_pagerank(
-            edges, fixed_updates=20, track_messages=False
-        )
+        ranks, res = weighted_pagerank(edges, fixed_updates=20)
         got = {r["id"]: r["rank"] for r in ranks.collect()}
         exp = _numpy_weighted_pagerank(6, self.WEDGES, updates=20)
         assert len(got) == 6
@@ -123,10 +121,8 @@ class TestWeightedPagerank:
         from linkgraph import pagerank
 
         uni = self._edges_df(spark).withColumn("weight", F.lit(1.0))
-        w_ranks, _ = weighted_pagerank(uni, fixed_updates=8, track_messages=False)
-        u_ranks, _ = pagerank(
-            uni.select("src", "dst"), fixed_updates=8, track_messages=False
-        )
+        w_ranks, _ = weighted_pagerank(uni, fixed_updates=8)
+        u_ranks, _ = pagerank(uni.select("src", "dst"), fixed_updates=8)
         got_w = {r["id"]: r["rank"] for r in w_ranks.collect()}
         got_u = {r["id"]: r["rank"] for r in u_ranks.collect()}
         assert got_w.keys() == got_u.keys()
@@ -135,7 +131,7 @@ class TestWeightedPagerank:
 
     def test_convergence_mode(self, spark):
         edges = self._edges_df(spark)
-        ranks, res = weighted_pagerank(edges, tol=1e-10, track_messages=False)
+        ranks, res = weighted_pagerank(edges, tol=1e-10)
         assert res.converged
         # total mass: 1 - leaked dangling mass stays < 1, but stable
         total = ranks.agg(F.sum("rank")).first()[0]
@@ -155,22 +151,19 @@ class TestWeightedResume:
             "src long, dst long, weight double",
         )
         ck = CheckpointManager(spark, str(tmp_path / "wpr"), every=1)
-        _, partial = weighted_pagerank(
-            edges, tol=1e-9, max_supersteps=3, ckpt=ck, track_messages=False
-        )
+        _, partial = weighted_pagerank(edges, tol=1e-9, max_supersteps=3, ckpt=ck)
         assert not partial.converged
         resumed, res = weighted_pagerank(
             edges,
             tol=1e-9,
             ckpt=CheckpointManager(spark, str(tmp_path / "wpr"), every=1),
-            track_messages=False,
         )
         # resume keeps the restored lineage (supersteps 1..3) and
         # continues at 4 — attrs (wsum) restored from the checkpoint
         assert res.converged
         assert [h.superstep for h in res.history[:4]] == [1, 2, 3, 4]
         assert res.supersteps > 3
-        fresh, _ = weighted_pagerank(edges, tol=1e-9, track_messages=False)
+        fresh, _ = weighted_pagerank(edges, tol=1e-9)
         got = {r["id"]: r["rank"] for r in resumed.collect()}
         exp = {r["id"]: r["rank"] for r in fresh.collect()}
         assert got.keys() == exp.keys()
@@ -212,7 +205,6 @@ class TestCliWpr:
                 "src", "dst", F.col("weight").cast("double").alias("weight")
             ),
             fixed_updates=6,
-            track_messages=False,
         )
         exp = {r["id"]: r["rank"] for r in exp_df.collect()}
         assert got.keys() == exp.keys()
@@ -228,7 +220,7 @@ class TestRepoPagerankEndToEnd:
         repo rollup -> weighted PageRank, all public API."""
         code = synth_code_files(spark, n_repos=20, files_per_repo=10)
         verts, edges = derive_repo_graph(code)
-        ranks, res = weighted_pagerank(edges, tol=1e-8, track_messages=False)
+        ranks, res = weighted_pagerank(edges, tol=1e-8)
         assert res.converged
         named = ranks.join(verts, "id")
         assert named.count() == verts.count()

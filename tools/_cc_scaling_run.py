@@ -65,7 +65,6 @@ def main() -> None:
         edges,
         vertices=spark.range(n).select(F.col("id")),
         num_partitions=shuffle,
-        track_messages=False,
     )
     comp.write.format("noop").mode("overwrite").save()
     total_sec = time.monotonic() - t0

@@ -82,7 +82,6 @@ def main() -> None:
         fixed_updates=updates,
         vertices=spark.range(n).select(F.col("id")),
         num_partitions=shuffle,
-        track_messages=False,
     )
     ranks.write.format("noop").mode("overwrite").save()
     total_sec = time.monotonic() - t0

@@ -1,40 +1,76 @@
-"""Gate-rotation tracker: which queries() entries still lack a committed
-driver CORRECTNESS row, and does the current dict order put them inside
-the driver's ~50-query front window?
+"""Gate-rotation tracker: when did each queries() entry last pass a
+committed correctness gate, and does the current dict order put the
+oldest ones inside the gate's ~50-query front window?
 
-The per-round driver gate (CORRECTNESS_r{N}.json) verifies the FIRST ~50
-entries of __spark_entry__.queries() in dict order.  To get every query a
-committed hash-match row we rotate never-gated queries to the front each
-round (``_GATE_FRONT`` in __spark_entry__.py).  This tool derives the
-ground truth from the committed CORRECTNESS_r*.json files:
+The per-round correctness gate (CORRECTNESS_r{N}.json) verifies the FIRST ~50
+entries of __spark_entry__.queries() in dict order.  So that no query
+goes more than ``STALE_AFTER`` rounds without a gate, the front window
+is filled oldest-gate-first (``_GATE_FRONT`` in __spark_entry__.py):
+never-gated queries, then those whose latest green round is oldest.
+This tool derives each query's latest green round from the committed
+CORRECTNESS_r*.json files:
 
     python tools/gate_rotation.py          # audit current ordering
     python tools/gate_rotation.py --emit   # print a fresh _GATE_FRONT body
 
-Exit status is non-zero if a never-gated query sits outside the front
-window while a gated one sits inside it (i.e. the rotation is stale).
+Exit status is non-zero if a query last gated ``STALE_AFTER`` or more
+rounds before the next round (or never gated) sits outside the front
+window while a more recently gated query sits inside it (i.e. the
+rotation is stale).
 """
 
 from __future__ import annotations
 
-import glob
 import json
+import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 WINDOW = 50
+STALE_AFTER = 3
 
 
-def gated_queries(repo: Path) -> set[str]:
-    """Names with a committed driver hash-match row in any round."""
-    out: set[str] = set()
-    for f in sorted(glob.glob(str(repo / "CORRECTNESS_r*.json"))):
-        for name, row in json.load(open(f)).items():
+def latest_green(repo: Path) -> tuple[dict[str, int], int]:
+    """(query -> latest round with a hash-match row, latest round
+    on file). Round numbers come from the ``CORRECTNESS_r{N}.json`` names."""
+    last: dict[str, int] = {}
+    latest = 0
+    for f in repo.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name)
+        if m is None:
+            continue
+        rnd = int(m.group(1))
+        latest = max(latest, rnd)
+        for name, row in json.loads(f.read_text()).items():
             if row.get("hash_match"):
-                out.add(name)
-    return out
+                last[name] = max(last.get(name, 0), rnd)
+    return last, latest
+
+
+def oldest_first(order: list[str], last: dict[str, int]) -> list[str]:
+    """``order`` re-sorted never-gated first, then by latest green round
+    ascending; ties keep their order."""
+    return sorted(order, key=lambda q: last.get(q, 0))
+
+
+def audit(
+    order: list[str], last: dict[str, int], next_round: int, window: int = WINDOW
+) -> tuple[list[str], list[str]]:
+    """(overdue queries outside the front window, queries inside it that
+    were gated more recently than one of those). Both non-empty means
+    the rotation is stale."""
+    front = order[:window]
+    overdue = [
+        q for q in order[window:] if next_round - last.get(q, 0) >= STALE_AFTER
+    ]
+    if not overdue:
+        return [], []
+    oldest_outside = min(last.get(q, 0) for q in overdue)
+    newer = [q for q in front if last.get(q, 0) > oldest_outside]
+    return overdue, newer
 
 
 def main() -> int:
@@ -42,34 +78,35 @@ def main() -> int:
     import __spark_entry__ as entry
 
     order = list(entry.queries().keys())
-    gated = gated_queries(repo)
-    never = [q for q in order if q not in gated]
-    front = order[:WINDOW]
-
-    print(f"queries: {len(order)}  driver-gated: {len(order) - len(never)}  "
-          f"never-gated: {len(never)}")
+    last, latest = latest_green(repo)
+    rounds = Counter(last.get(q, 0) for q in order)
+    print(f"queries: {len(order)}  latest gate file: r{latest:02d}  "
+          "queries by latest green round (0 = never): "
+          + ", ".join(f"r{r}: {n}" for r, n in sorted(rounds.items())))
 
     if "--emit" in sys.argv:
-        want = never[:WINDOW] + [q for q in never[WINDOW:]]
         print("_GATE_FRONT = [")
-        for q in want:
+        group = None
+        for q in oldest_first(order, last)[:WINDOW]:
+            if last.get(q, 0) != group:
+                group = last.get(q, 0)
+                print(f"    # latest green gate: r{group:02d}" if group else
+                      "    # never gated")
             print(f'    "{q}",')
         print("]")
         return 0
 
-    stale = False
-    missed = [q for q in never if q not in front]
-    wasted = [q for q in front if q in gated]
-    if missed and wasted:
-        stale = True
-        print(f"STALE rotation: never-gated outside window: {missed}")
-        print(f"               gated wasting window slots: {wasted}")
-    elif missed:
-        print(f"never-gated queued for the NEXT round's window "
-              f"(window full of never-gated this round): {missed}")
+    overdue, newer = audit(order, last, latest + 1)
+    if overdue and newer:
+        print(f"STALE rotation: overdue outside window: {overdue}")
+        print(f"               more recently gated inside it: {newer}")
+        return 1
+    if overdue:
+        print(f"overdue queued for a later round (window full of older "
+              f"ones this round): {overdue}")
     else:
-        print("every never-gated query is inside the front window")
-    return 1 if stale else 0
+        print("every overdue query is inside the front window")
+    return 0
 
 
 if __name__ == "__main__":

@@ -64,7 +64,7 @@ def main() -> None:
 
     t0 = time.monotonic()
     labels_d, res_d = connected_components(
-        edges, num_partitions=cores, max_supersteps=path_len + 8, track_messages=False
+        edges, num_partitions=cores, max_supersteps=path_len + 8
     )
     sig_d = checksum(labels_d)
     wall_d = time.monotonic() - t0
